@@ -13,13 +13,27 @@ import org.apache.spark.sql.SparkSession
   *
   *  - AQE on: runtime coalescing of shuffle partitions + skew-join splitting
   *    replaces Pinot's broker-side segment pruning heuristics at 100 TB.
-  *  - shuffle.partitions=32 for local[32]; on a real cluster this would be
-  *    ~2-3x total executor cores (AQE coalesces down, so erring high is safe).
+  *  - shuffle.partitions = the local core count; on a real cluster this
+  *    would be ~2-3x total executor cores (AQE coalesces down, so erring
+  *    high is safe).
   *  - UTC session timezone: determinism for the DuckDB oracle and for any
   *    cross-timezone cluster.
+  *  - Thrift single-session mode (static, read only by the Thrift server):
+  *    JDBC connections share this session's functions, views and confs
+  *    instead of each getting a fresh one (see `server.SqlEndpoint`).
+  *
+  * This is the only place a SparkSession is built: Bench, Verify, the dev
+  * tools and the test base trait all call it, so the oracle gates the same
+  * plans the bench times.
   */
 object Graft {
-  def session(cores: Int = 32, appName: String = "graft"): SparkSession = {
+
+  /** Local core count: `SPARK_GRAFT_CPUS` if set, else every available
+    * processor. The one place that env var is read. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def session(cores: Int = Graft.cores, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
@@ -31,6 +45,7 @@ object Graft {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
+      .config("spark.sql.hive.thriftServer.singleSession", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

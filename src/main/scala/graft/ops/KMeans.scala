@@ -46,23 +46,14 @@ object KMeans {
     * kernel call (coarse-quantizer-pruned exact argmin, sub-k-linear per
     * row at production cell counts) instead of evaluating all k centroid
     * distances into a per-row struct array and sorting it; (d, cell) is
-    * bit-identical (NearestCentroidParitySpec pits the two forms against
-    * each other; [[nearestBySort]] keeps the exhaustive reference). */
+    * bit-identical (NearestCentroidParitySpec pits it against the
+    * exhaustive sort-over-all-k reference). */
   def nearest(emb: Column, cents: Seq[(Int, Array[Float])]): Column = {
     val sorted = cents.sortBy(_._1)
     GraftBridge.column(graft.expressions.NearestCentroid(
       GraftBridge.expression(emb),
       sorted.map(_._1),
       sorted.flatMap(_._2.toIndexedSeq)))
-  }
-
-  /** The pre-round-12 exhaustive construction (ascending struct sort over
-    * all k (d, cell) pairs) — the parity-spec reference. */
-  private[graft] def nearestBySort(emb: Column, cents: Seq[(Int, Array[Float])]): Column = {
-    val scored = cents.map { case (cell, ce) =>
-      struct(dist(emb, ce).as("d"), lit(cell).as("cell"))
-    }
-    sort_array(array(scored.toIndexedSeq: _*))(0)
   }
 
   /** `iters` Lloyd iterations from `init` (cell id → centroid, distinct

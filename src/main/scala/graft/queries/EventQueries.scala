@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.sources.Tables
+import graft.tools.DuckDbSql
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -56,8 +57,10 @@ object EventQueries {
         .agg(count(lit(1)).as("n"), round(avg(col("value")), 4).as("avg_value"))
         .orderBy(col("hour"))
     },
-    Some("""SELECT date_trunc('hour', ts) AS hour, count(*) AS n,
-            round(avg(value), 4) AS avg_value
+    // Spark rounds HALF_UP over the shortest repr of the avg; DuckDB's
+    // round differs on an exact tie (405.59/8 = 50.69875 → 50.6987)
+    Some(s"""SELECT date_trunc('hour', ts) AS hour, count(*) AS n,
+            ${DuckDbSql.sparkRound("avg(value)", 4)} AS avg_value
             FROM events GROUP BY hour ORDER BY hour"""))
 
   /** S9: 7-day retention semantics (`kinesisTableConfigFile.json:7-9`) applied

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Graft
 import org.apache.spark.sql.functions._
 
 /** Measurement harness for the AnnIndex partition-pruning claim (round-8
@@ -19,14 +19,7 @@ object AnnCellTrend {
     val sfDir = args(0)
     val cellCounts =
       if (args.length > 1) args(1).split(',').map(_.toInt).toSeq else Seq(16, 64, 256)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
     val emb = graft.sources.Tables.t(spark, sfDir, "embeddings")
     val queries = emb.filter(col("vec_id") >= 20 && col("vec_id") < 40)
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Graft
 import org.apache.spark.sql.functions._
 
 /** Dictionary-growth trend for ops/FuzzyJoin (round 9): the declared
@@ -15,15 +15,7 @@ object FuzzyTrend {
   def main(args: Array[String]): Unit = {
     val sizes = args.headOption.map(_.split(',').toSeq.map(_.trim.toInt))
       .getOrElse(Seq(10000, 40000, 160000))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
     import spark.implicits._
     val syll = Vector("ka", "to", "mi", "ren", "lo", "ba", "zu", "pel", "dor", "si")
     sizes.foreach { n =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Graft
 import org.apache.spark.sql.functions._
 
 /** Scale trend for the graph family (round 9): times ops.PageRank and
@@ -38,19 +38,11 @@ object GraphTrend {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Graft.session()
     // partitions sized separately from cores: at 10×+ fixtures the wedge
     // exchange outgrows 32 partitions (spill) long before cores saturate —
     // exactly what a real cluster would fix by scaling partitions with data
-    val parts = sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_PARTS").foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     val peakShuffle = new PeakShuffle
     spark.sparkContext.addSparkListener(peakShuffle)
 

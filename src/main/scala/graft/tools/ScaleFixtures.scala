@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -81,14 +82,7 @@ object ScaleFixtures {
 
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
     replicate(spark, srcDir, outDir, factorS.toInt)
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Graft
 import org.apache.spark.sql.functions._
 
 /** SemDeDup k-knob demonstration (round 10): on a replicated-embedding dir,
@@ -17,14 +17,7 @@ object SemDedupTrend {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/fix100")
     val ks = args.lift(1).getOrElse("8,64").split(',').map(_.trim.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
     val e = graft.sources.Tables.t(spark, dir, "embeddings")
     System.err.println(s"[semdedup] corpus ${e.count()} vectors")
     ks.foreach { k =>

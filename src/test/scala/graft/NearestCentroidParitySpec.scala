@@ -2,18 +2,28 @@ package graft
 
 import graft.expressions.CentroidKernel
 import graft.ops.KMeans
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Round 12: the group-pruned [[graft.expressions.NearestCentroid]] kernel
   * must be (d, cell)-bit-identical to the exhaustive sort-over-all-k
   * construction it replaced — including ties (equal distances resolve to
   * the lowest cell id) and duplicate centroids. The exhaustive reference is
-  * the PRE-round-12 expression tree itself ([[KMeans.nearestBySort]]), not
+  * the PRE-round-12 expression tree itself ([[nearestBySort]]), not
   * a re-implementation, so any semantic drift in the kernel shows up as a
   * row mismatch here. */
 class NearestCentroidParitySpec extends GraftSuite {
 
   import spark.implicits._
+
+  /** The pre-round-12 exhaustive construction (ascending struct sort over
+    * all k (d, cell) pairs) — the parity reference. */
+  private def nearestBySort(emb: Column, cents: Seq[(Int, Array[Float])]): Column = {
+    val scored = cents.map { case (cell, ce) =>
+      struct(KMeans.dist(emb, ce).as("d"), lit(cell).as("cell"))
+    }
+    sort_array(array(scored.toIndexedSeq: _*))(0)
+  }
 
   private def df(pts: Seq[Array[Float]]) =
     pts.zipWithIndex.map { case (p, i) => (i.toLong, p.toSeq) }
@@ -23,7 +33,7 @@ class NearestCentroidParitySpec extends GraftSuite {
   private def checkParity(pts: Seq[Array[Float]], cents: Seq[(Int, Array[Float])]): Unit = {
     val base = df(pts)
     val newN = KMeans.nearest(col("emb"), cents)
-    val oldN = KMeans.nearestBySort(col("emb"), cents.sortBy(_._1))
+    val oldN = nearestBySort(col("emb"), cents.sortBy(_._1))
     val both = base.select(
       col("id"),
       newN.getField("cell").as("nc"), newN.getField("d").as("nd"),
@@ -95,7 +105,7 @@ class NearestCentroidParitySpec extends GraftSuite {
     val init = Seq(0 -> pts(0).clone(), 1 -> pts(1).clone(), 2 -> pts(2).clone())
     var cents = init.sortBy(_._1)
     (0 until 3).foreach { _ =>
-      val n = KMeans.nearestBySort(col("emb"), cents)
+      val n = nearestBySort(col("emb"), cents)
       val means = base.select(col("emb").as("__e"), n.getField("cell").as("__cell"))
         .groupBy(col("__cell"))
         .agg(array((0 until 4).map(i =>

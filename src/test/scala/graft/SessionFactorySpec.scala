@@ -1,0 +1,40 @@
+package graft
+
+import java.io.File
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Guard against session drift: `Graft.session` is the only code that
+  * builds a SparkSession and `Graft.cores` the only reader of the core-count
+  * env var, so Bench, Verify, the tools and the tests all share one config.
+  * Comment lines are ignored; the search strings are assembled so this file
+  * does not match itself. */
+class SessionFactorySpec extends AnyFunSuite {
+
+  private val builderCall = "SparkSession" + ".builder"
+  private val coresVar = "SPARK_GRAFT" + "_CPUS"
+
+  private def scalaFiles(dir: File): Seq[File] =
+    Option(dir.listFiles).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+
+  private lazy val sources = Seq("src/main", "src/test").flatMap(d => scalaFiles(new File(d)))
+
+  /** Names of the files whose code (comment lines dropped, whitespace
+    * removed so a call split across lines still matches) contains `needle`. */
+  private def filesWithCode(needle: String): Set[String] = sources.filter { f =>
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    val code = try src.getLines().map(_.trim).filterNot { l =>
+      l.startsWith("//") || l.startsWith("*") || l.startsWith("/*")
+    }.mkString finally src.close()
+    code.replaceAll("\\s+", "").contains(needle)
+  }.map(_.getName).toSet
+
+  test("only Graft.scala builds a SparkSession") {
+    assert(filesWithCode(builderCall) === Set("Graft.scala"))
+  }
+
+  test("only Graft.scala reads the core-count env var") {
+    assert(filesWithCode(coresVar) === Set("Graft.scala"))
+  }
+}

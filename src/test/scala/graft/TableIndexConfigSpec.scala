@@ -124,8 +124,11 @@ class TableIndexConfigSpec extends GraftSuite {
   }
 
   test("the reference's own table config applies cleanly (no index families)") {
-    val json = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/resources/pinot/resources/kinesisTableConfigFile.json")))
+    // the reference's REALTIME table config, vendored as a test resource
+    // (rebuilt from the line-cited facts in SURVEY.md §1, S2-S9, T1-T6)
+    val in = Option(getClass.getResourceAsStream("/kinesisTableConfigFile.json"))
+      .getOrElse(fail("test resource kinesisTableConfigFile.json is missing"))
+    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     val dir = Files.createTempDirectory("graft-idxcfg-ref").toString
     Tables.t(spark, sfDir, "events").select("event_id", "user_id")
       .write.mode("overwrite").parquet(dir)
