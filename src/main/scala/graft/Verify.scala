@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB compare (tools/check_oracle.py).
   * Runs on the same Graft.session the bench times. A query that throws is
@@ -24,21 +27,8 @@ object Verify {
         Some(name)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(_(k)) }.asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     if (failed.nonEmpty) {

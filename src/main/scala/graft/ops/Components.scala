@@ -18,6 +18,10 @@ import org.apache.spark.sql.functions._
   */
 object Components {
 
+  /** Symmetrized edge rows at or above which the loop-invariant edge frame
+    * is re-laid hash-partitioned and sorted by src (see connectedComponents). */
+  private val PartitionEdgesMinRows = 1000000L
+
   /** @param edges two-column DataFrame (id_a, id_b) of undirected edges
     * @return (node, cluster) where cluster = min node id reachable
     *
@@ -28,14 +32,7 @@ object Components {
     * in ~9 rounds, not ~400). Convergence check: labels only ever decrease,
     * so the label SUM is strictly monotone — one cheap aggregate per round,
     * no join against the previous state. */
-  /** Per-round progress to stderr when GRAFT_CC_DEBUG is set — an iterative
-    * distributed algorithm with a driver loop should be observable. */
-  private def ccLog(msg: => String): Unit =
-    if (sys.env.contains("GRAFT_CC_DEBUG")) System.err.println(s"[cc] $msg")
-
   def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    val t0 = System.nanoTime()
-    def elapsed = f"${(System.nanoTime() - t0) / 1e9}%.2fs"
     // eager localCheckpoint (not bare persist): iterative self-joins grow
     // the logical plan exponentially if lineage chains round-over-round, and
     // Catalyst re-analysis comes to dominate; checkpointing truncates the
@@ -65,12 +62,7 @@ object Components {
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint(true)
-    val minRows = edges.sparkSession.conf
-      .getOption("graft.cc.partitionEdgesMinRows").map(_.toLong)
-      .getOrElse(1000000L)
-    val nSym = symChk.count()
-    val bigGraph = nSym >= minRows
-    ccLog(s"sym rows=$nSym partitioned=$bigGraph")
+    val bigGraph = symChk.count() >= PartitionEdgesMinRows
     val sym =
       if (bigGraph)
         symChk.repartition(nPart, col("src"))
@@ -97,7 +89,6 @@ object Components {
     // of a full 3-join pass (measured: the old loop paid a full pure-
     // confirmation round every call). Round 1 runs full (Δ₀ = every node).
     var delta: DataFrame = null // null ⇒ full round
-    ccLog(s"init done at $elapsed")
     try {
     while (!converged && i < maxIter) {
       val viaEdges =
@@ -151,7 +142,6 @@ object Components {
       labels = next
       delta = nextDelta
       i += 1
-      ccLog(s"round $i done at $elapsed (converged=$converged)")
     }
     } finally if (bigGraph) sym.unpersist()
     labels.select("node", "cluster")

@@ -2,7 +2,7 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import graft.sources.SortedLayout
+import graft.sources.{Fingerprint, SortedLayout}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
@@ -76,15 +76,12 @@ object SegmentPruning {
 
   private[graft] val ConfFacts = "spark.graft.segprune.facts"
 
-  private[plans] def canon(p: String): String = StarTree.canon(p)
-
-  private def fingerprintOf(dir: String): String =
-    graft.sources.Fingerprint.of(canon(dir))
+  private def fingerprintOf(dir: String): String = Fingerprint.of(Fingerprint.canon(dir))
 
   /** Read the footer manifest for a SortedLayout-written `dir` and enable
     * transparent range+equality pruning on `sortCol` for this session. */
   def register(spark: SparkSession, dir: String, sortCol: String): Entry =
-    install(spark, Entry(canon(dir), sortCol,
+    install(spark, Entry(Fingerprint.canon(dir), sortCol,
       SortedLayout.fileRanges(spark, dir, sortCol), Nil, fingerprintOf(dir)))
 
   /** Driver-memory budget for a bloom registration. The manifest costs
@@ -107,7 +104,7 @@ object SegmentPruning {
     * accelerator, never a correctness dependency). */
   def registerBloom(spark: SparkSession, dir: String, col: String,
       maxManifestBytes: Long = DefaultMaxBloomManifestBytes): Entry = {
-    val root = new Path(canon(dir))
+    val root = new Path(Fingerprint.canon(dir))
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val nFiles = fs.listStatus(root)
       .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -116,7 +113,7 @@ object SegmentPruning {
       s"bloom manifest for $dir needs $need B ($nFiles files x " +
         s"${graft.sources.BloomLayout.DefaultNumBits / 8} B) > budget $maxManifestBytes B: " +
         "register per partition subdirectory (sharded manifests) or raise the budget")
-    install(spark, Entry(canon(dir), col, Nil,
+    install(spark, Entry(Fingerprint.canon(dir), col, Nil,
       graft.sources.BloomLayout.buildManifest(spark, dir, col), fingerprintOf(dir)))
   }
 
@@ -127,7 +124,7 @@ object SegmentPruning {
     * positives; ranges keep the full scan, as on any hash layout). */
   def registerPartitioned(spark: SparkSession, dir: String, col: String,
       nPartitions: Int): Entry =
-    install(spark, Entry(canon(dir), col, Nil, Nil, fingerprintOf(dir),
+    install(spark, Entry(Fingerprint.canon(dir), col, Nil, Nil, fingerprintOf(dir),
       graft.sources.PartitionedLayout.buildManifest(spark, dir, col, nPartitions),
       nPartitions))
 
@@ -184,7 +181,7 @@ object SegmentPruningRule extends Rule[LogicalPlan] {
   private def scanPath(l: LogicalRelation): Option[(HadoopFsRelation, String)] = l.relation match {
     case fs: HadoopFsRelation if fs.location.rootPaths.length == 1 &&
         fs.partitionSchema.isEmpty =>
-      Some((fs, SegmentPruning.canon(fs.location.rootPaths.head.toString)))
+      Some((fs, Fingerprint.canon(fs.location.rootPaths.head.toString)))
     case _ => None
   }
 

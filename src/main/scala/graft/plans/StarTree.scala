@@ -2,6 +2,8 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.sources.Fingerprint
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -76,29 +78,6 @@ object StarTree {
   private[graft] def hllOf(c: String): String = s"__st_hll_$c"
   private[graft] def thetaOf(c: String): String = s"__st_theta_$c"
 
-  /** Canonical spelling of a path as seen in HadoopFsRelation rootPaths
-    * (scheme-stripped, normalized) so registration and plan matching agree. */
-  private[graft] def canon(p: String): String = {
-    val noScheme = p.stripPrefix("file:")
-    try java.nio.file.Paths.get(noScheme).toAbsolutePath.normalize.toString
-    catch { case _: Throwable => noScheme }
-  }
-
-  /** Rollup identity: fact path + config + fact data version
-    * (graft.sources.Fingerprint — the engine's one staleness idiom), so a
-    * regenerated fixture can never silently serve a stale rollup. */
-  private def fingerprint(
-      factPath: String,
-      dims: Seq[String],
-      metrics: Seq[String],
-      sketchCols: Seq[String],
-      sketchLgK: Int): String = {
-    val key = s"${canon(factPath)}|${dims.mkString(",")}|${metrics.mkString(",")}|" +
-      s"${sketchCols.mkString(",")}|$sketchLgK|" +
-      graft.sources.Fingerprint.of(canon(factPath))
-    java.lang.Long.toHexString(scala.util.hashing.MurmurHash3.stringHash(key) & 0xffffffffL)
-  }
-
   /** Supported metric types: integral sums widen to LONG and fractional sums
     * to DOUBLE on both levels, so the rewritten aggregate's dataType is
     * bit-identical to the original's. DECIMAL is excluded — Sum grows
@@ -111,16 +90,16 @@ object StarTree {
   /** Build (or reuse) the materialized rollup for `factParquetPath` and
     * enable transparent routing for this session. Returns the spec.
     *
-    * `rollupDir` defaults to a fingerprinted directory under java.io.tmpdir;
-    * a production deployment passes a durable path (S3/HDFS) — the build is
-    * one scan of the fact table, amortized over every routed query, the
-    * same cost model as Pinot's segment-build-time star-tree generation. */
+    * The rollup is a [[Fingerprint.buildOnce]] artifact keyed on the fact
+    * path, the configuration and the fact data version, so a regenerated
+    * fixture never serves a stale rollup. The build is one scan of the fact
+    * table, amortized over every routed query — the same cost model as
+    * Pinot's segment-build-time star-tree generation. */
   def register(
       spark: SparkSession,
       factParquetPath: String,
       dims: Seq[String],
       metrics: Seq[String],
-      rollupDir: Option[String] = None,
       sketchCols: Seq[String] = Nil,
       sketchLgK: Int = 12): Spec = {
     import org.apache.spark.sql.functions._
@@ -132,11 +111,8 @@ object StarTree {
     require(sketchCols.forall(fieldType.contains),
       s"sketch columns must be fact columns: $sketchCols")
 
-    val fp = fingerprint(factParquetPath, dims, metrics, sketchCols, sketchLgK)
-    val out = rollupDir.getOrElse(
-      s"${System.getProperty("java.io.tmpdir")}/graft_startree_$fp")
-
-    if (!new java.io.File(out, "_SUCCESS").exists) {
+    val out = Fingerprint.buildOnce(
+        "startree", factParquetPath, dims, metrics, sketchCols, sketchLgK) { staging =>
       val sumType = (m: String) => fieldType(m) match {
         case FloatType | DoubleType => DoubleType
         case _ => LongType
@@ -154,13 +130,14 @@ object StarTree {
           graft.expressions.ThetaSketch.thetaSketchAgg(col(c), sketchLgK).as(thetaOf(c)))
       })
       fact.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
-        .write.mode("overwrite").parquet(out)
+        .write.mode("overwrite").parquet(staging)
     }
 
     val relation = spark.read.parquet(out).queryExecution.analyzed
       .collectFirst { case l: LogicalRelation => l }
       .getOrElse(sys.error(s"rollup scan did not analyze to a LogicalRelation: $out"))
-    val spec = Spec(canon(factParquetPath), dims, metrics, sketchCols, sketchLgK, out, relation)
+    val spec = Spec(
+      Fingerprint.canon(factParquetPath), dims, metrics, sketchCols, sketchLgK, out, relation)
     registry.put(spec.factPath, spec)
 
     // per-session opt-in: the rule only routes fact paths listed in THIS
@@ -212,7 +189,7 @@ object StarTreeRoutingRule extends Rule[LogicalPlan] {
 
   private def scanPath(l: LogicalRelation): Option[String] = l.relation match {
     case fs: HadoopFsRelation if fs.location.rootPaths.length == 1 =>
-      Some(StarTree.canon(fs.location.rootPaths.head.toString))
+      Some(Fingerprint.canon(fs.location.rootPaths.head.toString))
     case _ => None
   }
 

@@ -2,6 +2,8 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.sources.Fingerprint
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -66,12 +68,10 @@ object VectorSimilarity {
   private val probeMemo =
     new ConcurrentHashMap[(String, String, Seq[Float], Int, Int, Int), Array[Long]]()
 
-  private def canon(p: String): String = StarTree.canon(p)
-
   def register(spark: SparkSession, dataDir: String, vecCol: String,
       idCol: String, indexDir: String, probes: Int = 2, ef: Int = 0): Entry = {
-    val e = Entry(canon(dataDir), vecCol, idCol, indexDir, probes,
-      graft.sources.Fingerprint.of(canon(dataDir)), ef)
+    val path = Fingerprint.canon(dataDir)
+    val e = Entry(path, vecCol, idCol, indexDir, probes, Fingerprint.of(path), ef)
     registry.put((e.path, vecCol), e)
     if (!spark.experimental.extraOptimizations.contains(VectorSimilarityRule))
       spark.experimental.extraOptimizations =
@@ -84,7 +84,7 @@ object VectorSimilarity {
     * doctrine) and the query falls back to brute force. */
   private[plans] def entryFor(path: String, vecCol: String): Option[Entry] =
     Option(registry.get((path, vecCol)))
-      .filter(e => graft.sources.Fingerprint.of(e.path) == e.fingerprint)
+      .filter(e => Fingerprint.of(e.path) == e.fingerprint)
 
   private[plans] def probedIds(spark: SparkSession, e: Entry,
       qv: Array[Float], k: Int): Array[Long] = {
@@ -169,7 +169,7 @@ object VectorSimilarityRule extends Rule[LogicalPlan] {
   private def relationPath(p: LogicalPlan): Option[String] = p match {
     case l: LogicalRelation => l.relation match {
       case fs: HadoopFsRelation if fs.location.rootPaths.length == 1 =>
-        Some(StarTree.canon(fs.location.rootPaths.head.toString))
+        Some(Fingerprint.canon(fs.location.rootPaths.head.toString))
       case _ => None
     }
     case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>

@@ -356,8 +356,7 @@ object DedupQueries {
       // corpus data version — sources/DedupIndex, the production shape:
       // ingest stores signatures, each batch re-derives only its own);
       // results are bit-identical to recompute (DedupIndexSpec parity)
-      val idx = graft.sources.Fingerprint.buildOnce(
-        "dedup_idx", dir, "documents.parquet") { out =>
+      val idx = graft.sources.Fingerprint.buildOnce("dedup_idx", s"$dir/documents.parquet") { out =>
         graft.sources.DedupIndex.build(corpus, out, "doc_id", "text")
       }
       // threshold 0 keeps every band candidate so the summary can report
@@ -719,11 +718,11 @@ object DedupQueries {
       // bit-identical to recompute (SemDedupIndexSpec parity), so the
       // oracle's full Lloyd replay is unchanged. Round 12 — the r10/r11
       // verdicts' carried ask.
+      val (k, iters) = (EmbeddingQueries.kmK, EmbeddingQueries.kmIters)
       val idx = graft.sources.Fingerprint.buildOnce(
-        "semdedup_idx", dir, "embeddings.parquet") { out =>
+        "semdedup_idx", s"$dir/embeddings.parquet", k, iters) { out =>
         val corpus = e.filter(pmod(col("vec_id"), lit(10)) =!= 0)
-        graft.sources.SemDedupIndex.build(
-          corpus, out, EmbeddingQueries.kmK, EmbeddingQueries.kmIters)
+        graft.sources.SemDedupIndex.build(corpus, out, k, iters)
       }
       val cents = graft.sources.SemDedupIndex.readCodebook(spark, idx)
       val corpusA = graft.sources.SemDedupIndex.readAssignments(spark, idx)

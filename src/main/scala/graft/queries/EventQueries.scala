@@ -621,7 +621,7 @@ object EventQueries {
   val eventsHybrid = Q(
     "q_events_hybrid",
     (spark, dir) => {
-      val stores = graft.sources.Fingerprint.buildOnce("hybrid_events", dir, "events.parquet") { out =>
+      val stores = graft.sources.Fingerprint.buildOnce("hybrid_events", s"$dir/events.parquet") { out =>
         val ev = Tables.t(spark, dir, "events")
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"), col("ts"))
         val maxDay = ev.agg(date_trunc("day", max(col("ts"))).as("d"))

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.plans.SegmentPruning
-import graft.sources.{PartitionedLayout, SortedLayout, Tables}
+import graft.sources.{Fingerprint, PartitionedLayout, SortedLayout, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -15,24 +15,19 @@ import org.apache.spark.sql.functions._
   * (SegmentPruningRuleSpec separately proves, via scan metrics, that the
   * routed plan really does skip files).
   *
-  * The sorted copy is built once into a fingerprinted tmp dir (fact mtime
-  * in the key — a regenerated fixture rebuilds it), the same build-once
-  * cost model as the star-tree rollup and Pinot's segment-build-time
-  * sorted column.
+  * Each copy is built once through [[graft.sources.Fingerprint.buildOnce]]
+  * (the fact file's data version and the copy's file count are in the key,
+  * so a regenerated fixture rebuilds it), the same build-once cost model as
+  * the star-tree rollup and Pinot's segment-build-time sorted column.
   */
 object IndexQueries {
 
-  /** Build-once fingerprinted tmp-dir cache — the shared
-    * [[graft.sources.Fingerprint.buildOnce]] (star-tree rollup cost model). */
-  private def buildOnce(tag: String, dir: String, srcFile: String)(build: String => Unit): String =
-    graft.sources.Fingerprint.buildOnce(tag, dir, srcFile)(build)
-
-  private def sortedEventsCopy(spark: SparkSession, dir: String): String =
-    buildOnce("sorted_events", dir, "events.parquet") { out =>
+  private def sortedEventsCopy(spark: SparkSession, dir: String, nFiles: Int = 8): String =
+    Fingerprint.buildOnce("sorted_events", s"$dir/events.parquet", nFiles) { out =>
       SortedLayout.write(
         Tables.t(spark, dir, "events")
           .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
-        out, "user_id", nFiles = 8)
+        out, "user_id", nFiles)
     }
 
   /** A user-segment range lookup + aggregate through the routed session:
@@ -61,12 +56,12 @@ object IndexQueries {
             |GROUP BY event_type
             |ORDER BY event_type""".stripMargin))
 
-  private def partitionedEventsCopy(spark: SparkSession, dir: String): String =
-    buildOnce("part_events", dir, "events.parquet") { out =>
+  private def partitionedEventsCopy(spark: SparkSession, dir: String, nPartitions: Int): String =
+    Fingerprint.buildOnce("part_events", s"$dir/events.parquet", nPartitions) { out =>
       PartitionedLayout.write(
         Tables.t(spark, dir, "events")
           .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
-        out, "event_type", nPartitions = 8)
+        out, "event_type", nPartitions)
     }
 
   /** An IN-list lookup + aggregate through a partition-registered session —
@@ -77,9 +72,10 @@ object IndexQueries {
   private val segprunePartition = Q(
     "q_idx_prune_partition",
     (spark, dir) => {
-      val part = partitionedEventsCopy(spark, dir)
+      val nPartitions = 8
+      val part = partitionedEventsCopy(spark, dir, nPartitions)
       val s = spark.newSession()
-      SegmentPruning.registerPartitioned(s, part, "event_type", nPartitions = 8)
+      SegmentPruning.registerPartitioned(s, part, "event_type", nPartitions)
       s.read.parquet(part)
         .filter(col("event_type").isin("click", "purchase"))
         .groupBy(col("event_type"))
@@ -98,10 +94,10 @@ object IndexQueries {
             |GROUP BY event_type
             |ORDER BY event_type""".stripMargin))
 
-  private def textIndexCopy(spark: SparkSession, dir: String): String =
-    buildOnce("text_index", dir, "documents.parquet") { out =>
+  private def textIndexCopy(spark: SparkSession, dir: String, nFiles: Int = 8): String =
+    Fingerprint.buildOnce("text_index", s"$dir/documents.parquet", nFiles) { out =>
       graft.sources.TextIndex.build(
-        Tables.t(spark, dir, "documents"), out, "doc_id", "text", nFiles = 8)
+        Tables.t(spark, dir, "documents"), out, "doc_id", "text", nFiles)
     }
 
   /** TEXT_MATCH answered through the inverted text index — candidate term
@@ -138,10 +134,10 @@ object IndexQueries {
             |    WHERE length(tok) > 0 AND levenshtein(tok, 'sprk') <= 1)
             |GROUP BY lang ORDER BY lang""".stripMargin))
 
-  private def valueIndexCopy(spark: SparkSession, dir: String): String =
-    buildOnce("value_index", dir, "documents.parquet") { out =>
+  private def valueIndexCopy(spark: SparkSession, dir: String, nFiles: Int = 8): String =
+    Fingerprint.buildOnce("value_index", s"$dir/documents.parquet", nFiles) { out =>
       graft.sources.ValueIndex.build(
-        Tables.t(spark, dir, "documents"), out, "doc_id", "n_chars", nFiles = 8)
+        Tables.t(spark, dir, "documents"), out, "doc_id", "n_chars", nFiles)
     }
 
   /** A range predicate answered through the inverted/range-index analog
@@ -200,12 +196,12 @@ object IndexQueries {
             |GROUP BY user_id
             |ORDER BY user_id""".stripMargin))
 
-  private def zorderEventsCopy(spark: SparkSession, dir: String): String =
-    buildOnce("zorder_events", dir, "events.parquet") { out =>
+  private def zorderEventsCopy(spark: SparkSession, dir: String, nFiles: Int = 16): String =
+    Fingerprint.buildOnce("zorder_events", s"$dir/events.parquet", nFiles) { out =>
       graft.sources.ZOrderLayout.write(
         Tables.t(spark, dir, "events")
           .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
-        out, "user_id", "value", nFiles = 16)
+        out, "user_id", "value", nFiles)
     }
 
   /** A 2-D box lookup through a z-ordered layout (round 9): ONE write buys
@@ -258,9 +254,9 @@ object IndexQueries {
   // v2 tag (round 12): the builder's array-element extraction moved to the
   // JsonArraySlices one-parse path — the cached-layout-format gotcha says
   // bump the tag whenever the build algorithm changes, even value-preserving
-  private def jsonArrayIndexCopy(spark: SparkSession, dir: String): String =
-    buildOnce("json_array_index_v2", dir, "events.parquet") { out =>
-      graft.sources.JsonIndex.build(userDocs(spark, dir), out, "uid", "doc", nFiles = 8)
+  private def jsonArrayIndexCopy(spark: SparkSession, dir: String, nFiles: Int = 8): String =
+    Fingerprint.buildOnce("json_array_index_v2", s"$dir/events.parquet", nFiles) { out =>
+      graft.sources.JsonIndex.build(userDocs(spark, dir), out, "uid", "doc", nFiles)
     }
 
   /** JSON_MATCH over array-wildcard paths (round 10): ONE compound broker

@@ -2,8 +2,8 @@ package graft.queries
 
 import graft.Q
 import graft.functions._
-import graft.sources.Tables
-import org.apache.spark.sql.Column
+import graft.sources.{AnnIndex, Fingerprint, Tables}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -410,20 +410,21 @@ object SimilarityQueries {
     * cut is a static partition filter (the scan lists only the probed cell
     * directories; AnnIndexSpec proves pruning metrics, append-without-
     * retrain parity, and the k-means build path). The index builds once per
-    * fixture generation (Fingerprint.buildOnce staleness, the DedupIndex
-    * pattern); oracle = the shared annIvfSql (index and in-memory paths are
+    * fixture generation (Fingerprint.buildOnce, the DedupIndex pattern);
+    * oracle = the shared annIvfSql (index and in-memory paths are
     * bit-identical by construction). */
+  private def annIndex(spark: SparkSession, dir: String, nCells: Int = 16): String =
+    Fingerprint.buildOnce("annidx", s"$dir/embeddings.parquet", nCells) { out =>
+      AnnIndex.build(Tables.t(spark, dir, "embeddings"), out, "vec_id", "embedding", nCells)
+    }
+
   private val simAnnIndexed = Q(
     "q_sim_ann_indexed",
     (spark, dir) => {
-      val idxDir = graft.sources.Fingerprint.buildOnce(
-        "annidx", dir, "embeddings.parquet") { out =>
-        graft.sources.AnnIndex.build(
-          Tables.t(spark, dir, "embeddings"), out, "vec_id", "embedding", nCells = 16)
-      }
+      val idxDir = annIndex(spark, dir)
       val queries = Tables.t(spark, dir, "embeddings")
         .filter(col("vec_id") >= 20 && col("vec_id") < 40)
-      graft.sources.AnnIndex.topK(spark, idxDir, queries, "vec_id", "embedding",
+      AnnIndex.topK(spark, idxDir, queries, "vec_id", "embedding",
           k = 3, probes = 2)
         .orderBy(col("qid"), col("rn"))
     },
@@ -441,11 +442,7 @@ object SimilarityQueries {
   val simVectorSimilarity = Q(
     "q_sim_vector_similarity",
     (spark, dir) => {
-      val idxDir = graft.sources.Fingerprint.buildOnce(
-        "annidx", dir, "embeddings.parquet") { out =>
-        graft.sources.AnnIndex.build(
-          Tables.t(spark, dir, "embeddings"), out, "vec_id", "embedding", nCells = 16)
-      }
+      val idxDir = annIndex(spark, dir)
       val s = spark.newSession()
       graft.PinotFunctions.register(s)
       Tables.registerViews(s, dir)
@@ -480,21 +477,21 @@ object SimilarityQueries {
   private val simAnnHnsw = Q(
     "q_sim_ann_hnsw",
     (spark, dir) => {
-      val idxDir = graft.sources.Fingerprint.buildOnce(
+      val (nCells, m, efConstruction) = (16, 8, 64)
+      val idxDir = Fingerprint.buildOnce(
         // tag carries the BUILDER version: v1 added the _GRAPH_FP
         // staleness file, v2 the heuristic neighbor selection — cached
         // dirs from an older builder must not cache-hit (reproducibility:
         // a fresh build and a cache hit must be the same graph)
-        "annhnsw_v2", dir, "embeddings.parquet") { out =>
-        graft.sources.AnnIndex.build(
-          Tables.t(spark, dir, "embeddings"), out, "vec_id", "embedding", nCells = 16)
-        graft.sources.AnnIndex.buildHnsw(spark, out, m = 8, efConstruction = 64)
+        "annhnsw_v2", s"$dir/embeddings.parquet", nCells, m, efConstruction) { out =>
+        AnnIndex.build(Tables.t(spark, dir, "embeddings"), out, "vec_id", "embedding", nCells)
+        AnnIndex.buildHnsw(spark, out, m, efConstruction)
       }
       val queries = Tables.t(spark, dir, "embeddings")
         .filter(col("vec_id") >= 20 && col("vec_id") < 40)
-      val truth = graft.sources.AnnIndex.topK(
+      val truth = AnnIndex.topK(
         spark, idxDir, queries, "vec_id", "embedding", k = 10, probes = 2)
-      val got = graft.sources.AnnIndex.topKHnsw(
+      val got = AnnIndex.topKHnsw(
         spark, idxDir, queries, "vec_id", "embedding", k = 10, probes = 2, ef = 32)
       truth.select(col("qid"), col("nid"))
         .join(got.select(col("qid"), col("nid"), lit(1).as("hit")),

@@ -249,8 +249,7 @@ object AnnIndex {
       val rel = s.getPath.toUri.getPath.stripPrefix(root.toUri.getPath)
       if (!rel.endsWith("_SUCCESS")) parts += s"$rel:${s.getLen}"
     }
-    java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(parts.sorted.mkString("|")) & 0xffffffffL)
+    Fingerprint.hash64(parts.sorted.mkString("|"))
   }
 
   private def graphFpPath(dir: String) = s"${hnswPath(dir)}/_GRAPH_FP"
@@ -285,9 +284,7 @@ object AnnIndex {
         scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
       finally in.close()
     }
-    val key = parts.sorted.mkString("|")
-    f"${scala.util.hashing.MurmurHash3.stringHash(key, 0x9E3779B9) & 0xffffffffL}%08x" +
-      f"${scala.util.hashing.MurmurHash3.stringHash(key, 0x85EBCA6B) & 0xffffffffL}%08x"
+    Fingerprint.hash64(parts.sorted.mkString("|"))
   }
 
   private def graphParamsPath(dir: String) = s"${hnswPath(dir)}/_PARAMS"

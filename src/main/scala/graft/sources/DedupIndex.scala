@@ -16,11 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the sorted shingle hashes answer the exact-Jaccard confirm. ~(k + |sh|)
   * longs per doc, a small fraction of the text it indexes.
   *
-  * Staleness follows the engine-wide [[Fingerprint]] pattern (same as
-  * star-tree rollups and segment-pruning manifests): build through
-  * [[Fingerprint.buildOnce]] keyed on the corpus fixture's data version, so
-  * a regenerated corpus rebuilds the index rather than serving stale
-  * signatures.
+  * Staleness: build through [[Fingerprint.buildOnce]], the engine's one
+  * derived-artifact cache (its key covers the corpus file's path and data
+  * version), so a regenerated corpus rebuilds the index rather than
+  * serving stale signatures.
   */
 object DedupIndex {
 

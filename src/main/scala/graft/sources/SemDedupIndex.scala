@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   * cell partitions and the denormalized vectors avoid a join back to the
   * corpus at probe time.
   *
-  * Staleness follows the engine-wide [[Fingerprint.buildOnce]] pattern —
-  * keyed on the corpus fixture's data version, so a regenerated corpus
-  * rebuilds the artifacts instead of serving a stale codebook. Build and
+  * Staleness: build through [[Fingerprint.buildOnce]] with `k` and `iters`
+  * as params — its key also covers the corpus file's path and data
+  * version, so a regenerated corpus or a changed codebook size rebuilds
+  * the artifacts instead of serving a stale codebook. Build and
   * fresh recompute are bit-identical (`ops/KMeans` is deterministic end to
   * end; SemDedupIndexSpec asserts codebook + assignment parity).
   */

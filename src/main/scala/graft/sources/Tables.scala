@@ -22,23 +22,16 @@ object Tables {
     // query picks up the shuffle-free co-located join plan unchanged.
     // Routing is bound to the sfDir the copy was built from — a read for a
     // DIFFERENT sfDir falls through to the plain parquet scan instead of
-    // silently serving stale bucketed data.
+    // silently serving stale bucketed data. Dirs compare canonically, so a
+    // trailing slash or a relative spelling still hits the copy.
     val bucketedFacts = spark.conf.get("graft.bucketed.facts", "")
     val bucketedDir = spark.conf.get("graft.bucketed.sfdir", "")
-    if (bucketedFacts.nonEmpty && bucketedDir == normPath(sfDir) &&
+    if (bucketedFacts.nonEmpty && bucketedDir == Fingerprint.canon(sfDir) &&
         bucketedFacts.split(",").contains(name))
       spark.table(bucketedTableName(name, spark.conf.get("graft.bucketed.fp")))
     else if (name == "events") events(spark, sfDir)
     else spark.read.parquet(s"$sfDir/$name.parquet")
   }
-
-  /** Canonical spelling of an sfDir: routing compares normalized absolute
-    * paths, so `/root/testdata/sf0.1/` and a relative spelling of the same
-    * directory still hit the bucketed copy the session registered (advisor
-    * round-3: raw string equality silently lost the shuffle-free plan). */
-  private[graft] def normPath(dir: String): String =
-    try java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-    catch { case _: Throwable => dir }
 
   /** Table name carries a fingerprint of (sfDir, buckets) so a re-register
     * with different inputs can never collide with (and silently reuse) a
@@ -47,8 +40,7 @@ object Tables {
     s"graft_${name}_bucketed_$fp"
 
   private[graft] def fingerprint(sfDir: String, buckets: Int): String =
-    java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"${normPath(sfDir)}|$buckets") & 0xffffffffL)
+    Fingerprint.hash64(s"${Fingerprint.canon(sfDir)}|$buckets")
 
   /** Default bucketing spec for the fact tables: both sides of the big
     * orders⋈lineitem edge bucketed on the join key (SCALE.md: the layout
@@ -65,7 +57,7 @@ object Tables {
       sfDir: String,
       buckets: Int = 8,
       facts: Map[String, String] = defaultFactBuckets): Unit = {
-    val dir = normPath(sfDir)
+    val dir = Fingerprint.canon(sfDir)
     val fp = fingerprint(dir, buckets)
     facts.foreach { case (name, key) =>
       val tbl = bucketedTableName(name, fp)

@@ -9,14 +9,11 @@ import org.apache.spark.sql.functions._
   * partition pruning evidence, and the k-means build path's recall. */
 class AnnIndexSpec extends GraftSuite {
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_annidx").toString
-
   private def queriesFrame = Tables.t(spark, sfDir, "embeddings")
     .filter(col("vec_id") >= 20 && col("vec_id") < 40)
 
   test("index answers are bit-identical to the in-memory IVF declared query") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     AnnIndex.build(e, dir, "vec_id", "embedding", nCells = 16)
     val viaIndex = AnnIndex.topK(spark, dir, queriesFrame, "vec_id", "embedding",
@@ -28,7 +25,7 @@ class AnnIndexSpec extends GraftSuite {
   }
 
   test("append assigns against existing centroids: equals a full build") {
-    val dir1 = tmp(); val dir2 = tmp()
+    val dir1 = tempDir(); val dir2 = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     val n = e.count()
     AnnIndex.build(e, dir1, "vec_id", "embedding", nCells = 16)
@@ -49,7 +46,7 @@ class AnnIndexSpec extends GraftSuite {
   }
 
   test("probing k cells statically prunes the partitioned scan to k directories") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     AnnIndex.build(e, dir, "vec_id", "embedding", nCells = 16)
     val oneQuery = queriesFrame.limit(1)
@@ -77,7 +74,7 @@ class AnnIndexSpec extends GraftSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     val n = e.count()
     // standing corpus builds; the live tail arrives as a stream
@@ -98,7 +95,7 @@ class AnnIndexSpec extends GraftSuite {
     assert(AnnIndex.stats(spark, dir).nTotal === n)
     // a query whose true neighbors include streamed vectors finds them:
     // identical answers to the all-batch index (same centroids)
-    val dirAll = tmp()
+    val dirAll = tempDir()
     AnnIndex.build(e, dirAll, "vec_id", "embedding", nCells = 16)
     val a = AnnIndex.topK(spark, dir, queriesFrame, "vec_id", "embedding", 3, 2)
       .orderBy(col("qid"), col("rn")).collect().toSeq
@@ -108,7 +105,7 @@ class AnnIndexSpec extends GraftSuite {
   }
 
   test("compaction collapses per-append small files; answers unchanged") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     val n = e.count()
     AnnIndex.build(e.filter(col("vec_id") < n / 4), dir, "vec_id", "embedding", nCells = 16)
@@ -135,7 +132,7 @@ class AnnIndexSpec extends GraftSuite {
 
   test("compact swap is pointer-atomic: live path always resolvable, " +
       "superseded layout retained one cycle then GC'd") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     val n = e.count()
     AnnIndex.build(e.filter(col("vec_id") < n / 2), dir, "vec_id", "embedding", nCells = 8)
@@ -190,7 +187,7 @@ class AnnIndexSpec extends GraftSuite {
     assert(bruteDf.queryExecution.optimizedPlan.toString.contains("Sort"),
       "fallback must be the sort+limit retrieval plan")
     // registered → planning-time index probe, IN-list filter, no Sort scan
-    val dir = tmp()
+    val dir = tempDir()
     AnnIndex.build(e, dir, "vec_id", "embedding", nCells = 16)
     val s2 = spark.newSession()
     PinotFunctions.register(s2); Tables.registerViews(s2, sfDir)
@@ -209,7 +206,7 @@ class AnnIndexSpec extends GraftSuite {
   }
 
   test("VECTOR_SIMILARITY probe memo sees appends: newly ingested exact match wins") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     val n = e.count()
     // hold the last vector OUT of the initial build
@@ -235,7 +232,7 @@ class AnnIndexSpec extends GraftSuite {
   }
 
   test("k-means build path: distributed training, recall vs brute force") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     AnnIndex.build(e, dir, "vec_id", "embedding", nCells = 8, kmeansIters = 3)
     val st = AnnIndex.stats(spark, dir)

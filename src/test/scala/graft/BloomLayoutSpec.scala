@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.{BloomLayout, Tables}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Pinot bloom-filter index analog: per-file bloom bitsets over a
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
 class BloomLayoutSpec extends GraftSuite {
 
   test("bloom manifest prunes point lookups to the owning file; parity with full scan") {
-    val dir = Files.createTempDirectory("graft-bloom").toString
+    val dir = tempDir("graft-bloom")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id", "value")
     BloomLayout.write(ev, dir, "user_id", nFiles = 8)
     val manifest = BloomLayout.buildManifest(spark, dir, "user_id")
@@ -47,7 +46,7 @@ class BloomLayoutSpec extends GraftSuite {
   }
 
   test("absent value: bloom rejects all (or nearly all) files and the result is empty") {
-    val dir = Files.createTempDirectory("graft-bloom-absent").toString
+    val dir = tempDir("graft-bloom-absent")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id")
     BloomLayout.write(ev, dir, "user_id", nFiles = 8)
     val manifest = BloomLayout.buildManifest(spark, dir, "user_id")
@@ -60,7 +59,7 @@ class BloomLayoutSpec extends GraftSuite {
   }
 
   test("string column: low-cardinality values map to their owning files only") {
-    val dir = Files.createTempDirectory("graft-bloom-str").toString
+    val dir = tempDir("graft-bloom-str")
     val docs = Tables.t(spark, sfDir, "documents").select("doc_id", "source", "lang")
     BloomLayout.write(docs, dir, "source", nFiles = 8)
     val manifest = BloomLayout.buildManifest(spark, dir, "source")

@@ -4,7 +4,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.Files
 
 /** Controller REST parity for the reference's autoscaling lifecycle: this
   * spec replays the scale-in Lambda's EXACT call sequence
@@ -19,7 +18,7 @@ class ControllerRestSpec extends GraftSuite {
   private val srv1 = "Server_pinot-server-1.example.internal_8098"
 
   private lazy val httpServer = {
-    val dir = Files.createTempDirectory("graft-controller").toString
+    val dir = tempDir("graft-controller")
     import spark.implicits._
     (1L to 4000L).toDF("k").repartition(8).write.mode("overwrite").parquet(dir)
     server.HttpSqlEndpoint.start(spark, port = 0,

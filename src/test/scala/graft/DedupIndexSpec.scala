@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.{DedupIndex, Tables}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Corpus-side incremental-dedup index (sources/DedupIndex): the persisted
@@ -16,7 +15,7 @@ class DedupIndexSpec extends GraftSuite {
     val newDocs = d.filter(pmod(col("doc_id"), lit(10)) === 0)
     val corpus = d.filter(pmod(col("doc_id"), lit(10)) =!= 0)
 
-    val dir = Files.createTempDirectory("graft-dedupidx").toString + "/idx"
+    val dir = tempDir("graft-dedupidx") + "/idx"
     DedupIndex.build(corpus, dir, "doc_id", "text")
 
     // stored contract: the minhash prep schema, one row per corpus doc
@@ -36,8 +35,8 @@ class DedupIndexSpec extends GraftSuite {
 
   test("build is deterministic: two builds of the same corpus store equal frames") {
     val corpus = Tables.t(spark, sfDir, "documents").limit(500)
-    val d1 = Files.createTempDirectory("graft-dedupidx-a").toString + "/idx"
-    val d2 = Files.createTempDirectory("graft-dedupidx-b").toString + "/idx"
+    val d1 = tempDir("graft-dedupidx-a") + "/idx"
+    val d2 = tempDir("graft-dedupidx-b") + "/idx"
     DedupIndex.build(corpus, d1, "doc_id", "text")
     DedupIndex.build(corpus, d2, "doc_id", "text")
     val a = DedupIndex.read(spark, d1).collect().map(_.toString).sorted

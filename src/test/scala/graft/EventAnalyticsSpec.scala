@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Planted-data semantics for the funnel and gapfill operators (the oracle
@@ -13,7 +12,7 @@ class EventAnalyticsSpec extends GraftSuite {
     * expects `ts` as a NANOS long (it reads with nanosAsLong and converts
     * via `ts DIV 1000`), so plant ts as epoch-nanos INT64. */
   private def eventsDir(rows: Seq[(Long, String, Long, String, Double, String)]): String = {
-    val dir = Files.createTempDirectory("graft-ev").toString
+    val dir = tempDir("graft-ev")
     rows.toDF("event_id", "tss", "user_id", "event_type", "value", "props")
       .withColumn("ts", unix_micros(to_timestamp($"tss", "yyyy-MM-dd HH:mm:ss")) * lit(1000L))
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value", $"props")

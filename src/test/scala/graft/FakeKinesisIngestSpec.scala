@@ -4,8 +4,6 @@ import graft.streaming.{FakeKinesis, FakeKinesisIngest}
 import graft.streaming.FakeKinesis.TrimHorizon
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** S1→S7 end to end over the protocol fake: stream → low-level consumer →
   * shared Kinesis decode → sealed day-partitioned parquet, with the
   * exactly-once commit protocol (idempotent batch overwrite + atomic state
@@ -13,16 +11,14 @@ import java.nio.file.Files
   * state not committed) AND a reshard mid-ingest. */
 class FakeKinesisIngestSpec extends GraftSuite {
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   private def kdg(user: Int, price: Int, ts: String): String =
     s"""{"userID":"$user","productName":"p","color":"red","department":"d",""" +
       s""""product":"x","campaign":"c","price":$price,"creationTimestamp":"$ts"}"""
 
   test("stream to sealed store: reshard mid-ingest, exactly-once, day partitioning") {
-    val streamDir = tmp("fk-ingest-stream")
-    val sink = tmp("fk-ingest-sink")
-    val statePath = tmp("fk-ingest-state") + "/state.json"
+    val streamDir = tempDir("fk-ingest-stream")
+    val sink = tempDir("fk-ingest-sink")
+    val statePath = tempDir("fk-ingest-state") + "/state.json"
     val k = FakeKinesis.create(streamDir, shardCount = 2)
     (1 to 10).foreach(i => k.putRecord(s"u$i",
       kdg(i, i * 10, s"2024-05-01 10:0${i % 10}:00").getBytes("UTF-8")))
@@ -53,9 +49,9 @@ class FakeKinesisIngestSpec extends GraftSuite {
   test("ingested store answers the funnel aggregate (S1→S7→X7 composition)") {
     // the reference demo path: stream → sealed store → analytics query;
     // journeys encoded in the decoded `color` field, depths 3/2/1
-    val streamDir = tmp("fk-funnel-stream")
-    val sink = tmp("fk-funnel-sink")
-    val statePath = tmp("fk-funnel-state") + "/state.json"
+    val streamDir = tempDir("fk-funnel-stream")
+    val sink = tempDir("fk-funnel-sink")
+    val statePath = tempDir("fk-funnel-state") + "/state.json"
     val k = FakeKinesis.create(streamDir, shardCount = 2)
     val journeys = Seq(
       (1, Seq("view", "click", "purchase")),
@@ -83,9 +79,9 @@ class FakeKinesisIngestSpec extends GraftSuite {
   }
 
   test("crash between write and commit: restart converges to exactly-once") {
-    val streamDir = tmp("fk-crash-stream")
-    val sink = tmp("fk-crash-sink")
-    val statePath = tmp("fk-crash-state") + "/state.json"
+    val streamDir = tempDir("fk-crash-stream")
+    val sink = tempDir("fk-crash-sink")
+    val statePath = tempDir("fk-crash-state") + "/state.json"
     val k = FakeKinesis.create(streamDir, shardCount = 2)
     (1 to 8).foreach(i => k.putRecord(s"u$i",
       kdg(i, i, s"2024-05-01 10:00:0${i % 10}").getBytes("UTF-8")))

@@ -4,8 +4,6 @@ import graft.streaming.{EventIngest, FakeKinesis, FakeKinesisConsumer}
 import graft.streaming.FakeKinesis._
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
-
 /** S1 closure: the protocol-contract fake exercises the Kinesis stream
   * semantics the offline container cannot reach live — MD5 partition-key
   * routing into shard hash ranges, TRIM_HORIZON/LATEST iterators, iterator
@@ -15,9 +13,6 @@ import java.nio.file.Files
   * consumer). The headline proof: a reshard MID-INGEST loses nothing,
   * duplicates nothing, and preserves per-key order. */
 class FakeKinesisSpec extends GraftSuite {
-
-  private def tmpDir(): String =
-    Files.createTempDirectory("fake-kinesis").toString
 
   private def put(k: FakeKinesis, key: String, payload: String): Record =
     k.putRecord(key, payload.getBytes("UTF-8"))
@@ -34,7 +29,7 @@ class FakeKinesisSpec extends GraftSuite {
     }
 
   test("putRecord routes by unsigned-128-bit MD5 into the covering open shard") {
-    val k = FakeKinesis.create(tmpDir(), shardCount = 2)
+    val k = FakeKinesis.create(tempDir(), shardCount = 2)
     val shardsById = k.listShards().map(s => s.shardId -> s).toMap
     val recs = (0 until 64).map(i => put(k, s"user-$i", s"payload-$i"))
     recs.foreach { r =>
@@ -50,7 +45,7 @@ class FakeKinesisSpec extends GraftSuite {
   }
 
   test("TRIM_HORIZON replays history; LATEST sees only post-subscribe records") {
-    val k = FakeKinesis.create(tmpDir(), shardCount = 1)
+    val k = FakeKinesis.create(tempDir(), shardCount = 1)
     (0 until 5).foreach(i => put(k, s"k$i", s"old-$i"))
     val trim = new FakeKinesisConsumer(k, TrimHorizon)
     val latest = new FakeKinesisConsumer(k, Latest) // the reference's setting
@@ -62,7 +57,7 @@ class FakeKinesisSpec extends GraftSuite {
 
   test("expired iterator throws; the consumer recovers from its checkpoint with no loss, no dup") {
     var now = 0L
-    val k = FakeKinesis.create(tmpDir(), shardCount = 1, iteratorExpiryMs = 1000L)
+    val k = FakeKinesis.create(tempDir(), shardCount = 1, iteratorExpiryMs = 1000L)
     k.clockMs = () => now
     (0 until 10).foreach(i => put(k, s"k$i", s"p-$i"))
     // raw API contract: a stale token is rejected
@@ -83,7 +78,7 @@ class FakeKinesisSpec extends GraftSuite {
 
   test("per-shard GetRecords rate limit: over-limit calls throw, other shards unaffected") {
     var now = 0L
-    val k = FakeKinesis.create(tmpDir(), shardCount = 2)
+    val k = FakeKinesis.create(tempDir(), shardCount = 2)
     k.clockMs = () => now
     (0 until 40).foreach(i => put(k, s"k$i", s"p-$i"))
     k.maxGetRecordsPerSecondPerShard = 2
@@ -103,7 +98,7 @@ class FakeKinesisSpec extends GraftSuite {
 
   test("PutRecord rate limit: per-shard write throttle, retry after the window rolls") {
     var now = 0L
-    val k = FakeKinesis.create(tmpDir(), shardCount = 1)
+    val k = FakeKinesis.create(tempDir(), shardCount = 1)
     k.clockMs = () => now
     k.maxPutRecordsPerSecondPerShard = 3
     (0 until 3).foreach(i => put(k, s"k$i", s"p-$i"))
@@ -117,7 +112,7 @@ class FakeKinesisSpec extends GraftSuite {
 
   test("throttled polls converge with no loss, no dup (backoff handling)") {
     var now = 0L
-    val k = FakeKinesis.create(tmpDir(), shardCount = 2)
+    val k = FakeKinesis.create(tempDir(), shardCount = 2)
     k.clockMs = () => now
     (0 until 60).foreach(i => put(k, s"k$i", s"p-$i"))
     k.maxGetRecordsPerSecondPerShard = 1
@@ -143,7 +138,7 @@ class FakeKinesisSpec extends GraftSuite {
     // the rolling rate window can only roll if clockMs advances; a fixed
     // test clock used to make drain() spin forever (round-7 advice) — now
     // consecutive all-throttled passes with no clock movement throw
-    val k = FakeKinesis.create(tmpDir(), shardCount = 1)
+    val k = FakeKinesis.create(tempDir(), shardCount = 1)
     k.clockMs = () => 1000L // never advances
     (0 until 20).foreach(i => put(k, s"k$i", s"p-$i"))
     k.maxGetRecordsPerSecondPerShard = 1
@@ -158,7 +153,7 @@ class FakeKinesisSpec extends GraftSuite {
   }
 
   test("split mid-ingest: no loss, no dup, per-key order preserved across the reshard") {
-    val k = FakeKinesis.create(tmpDir(), shardCount = 2)
+    val k = FakeKinesis.create(tempDir(), shardCount = 2)
     val keys = (0 until 40).map(i => s"user-$i")
     // phase 1: ingest against the original 2 shards, partially consumed
     keys.zipWithIndex.foreach { case (key, i) => put(k, key, s"a-$i") }
@@ -189,7 +184,7 @@ class FakeKinesisSpec extends GraftSuite {
   }
 
   test("merge mid-ingest: no loss, no dup, both parents drained before the child") {
-    val k = FakeKinesis.create(tmpDir(), shardCount = 2)
+    val k = FakeKinesis.create(tempDir(), shardCount = 2)
     val keys = (0 until 30).map(i => s"item-$i")
     keys.zipWithIndex.foreach { case (key, i) => put(k, key, s"x-$i") }
     val c = new FakeKinesisConsumer(k, TrimHorizon)
@@ -210,7 +205,7 @@ class FakeKinesisSpec extends GraftSuite {
   }
 
   test("merge rejects non-adjacent shards; split rejects closed parents") {
-    val k = FakeKinesis.create(tmpDir(), shardCount = 4)
+    val k = FakeKinesis.create(tempDir(), shardCount = 4)
     val shards = k.openShards().sortBy(_.startingHashKey)
     intercept[InvalidArgumentException](
       k.mergeShards(shards(0).shardId, shards(2).shardId))
@@ -221,7 +216,7 @@ class FakeKinesisSpec extends GraftSuite {
   }
 
   test("restart: reload from disk + restored checkpoints resumes with no loss, no dup") {
-    val dir = tmpDir()
+    val dir = tempDir()
     val k = FakeKinesis.create(dir, shardCount = 2)
     (0 until 20).foreach(i => put(k, s"u-$i", s"p-$i"))
     val c = new FakeKinesisConsumer(k, TrimHorizon)
@@ -243,7 +238,7 @@ class FakeKinesisSpec extends GraftSuite {
     val jsonLines = Seq(
       """{"userID":"u1","productName":"p1","color":"red","department":"d1","product":"pr","campaign":"c1","price":42,"creationTimestamp":"2026-01-02 03:04:05"}""",
       """{"userID":"u2","productName":"p2","color":"blue","department":"d2","product":"pr2","campaign":"c2","price":7,"creationTimestamp":"2026-01-03 10:00:00"}""")
-    val k = FakeKinesis.create(tmpDir(), shardCount = 2)
+    val k = FakeKinesis.create(tempDir(), shardCount = 2)
     jsonLines.zipWithIndex.foreach { case (j, i) => put(k, s"u${i + 1}", j) }
     val c = new FakeKinesisConsumer(k, TrimHorizon)
     val frame = c.toFrame(spark, c.drain())

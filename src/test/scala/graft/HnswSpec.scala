@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   * in-memory graph and the exhaustive IVF scan. */
 class HnswSpec extends GraftSuite {
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_hnsw").toString
-
   /** Seeded isotropic float vectors — the fixture generator's shape. */
   private def randomPoints(n: Int, dim: Int, seed: Long): Seq[(Long, Array[Float])] = {
     val r = new scala.util.Random(seed)
@@ -113,7 +110,7 @@ class HnswSpec extends GraftSuite {
   }
 
   test("persisted per-cell route: wide beam equals the exhaustive IVF scan bit for bit") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     AnnIndex.build(e, dir, "vec_id", "embedding", nCells = 16)
     AnnIndex.buildHnsw(spark, dir, m = 8, efConstruction = 64)
@@ -131,7 +128,7 @@ class HnswSpec extends GraftSuite {
   }
 
   test("VECTOR_SIMILARITY with ef > 0 routes through the graphs; wide beam equals the scan route") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     AnnIndex.build(e, dir, "vec_id", "embedding", nCells = 16)
     AnnIndex.buildHnsw(spark, dir, m = 8, efConstruction = 64)
@@ -157,7 +154,7 @@ class HnswSpec extends GraftSuite {
   }
 
   test("graphSignature changes on a param-different rebuild while layoutSignature does not") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     AnnIndex.build(e, dir, "vec_id", "embedding", nCells = 16)
     assert(AnnIndex.graphSignature(spark, dir) === "", "no graphs yet -> empty")
@@ -176,7 +173,7 @@ class HnswSpec extends GraftSuite {
   }
 
   test("refreshHnsw rebuilds only the appended cells and equals a full rebuild") {
-    val dirIncr = tmp(); val dirFull = tmp()
+    val dirIncr = tempDir(); val dirFull = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     val n = e.count()
     // incremental: half build + graph, append rest, refresh touched cells
@@ -209,7 +206,7 @@ class HnswSpec extends GraftSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     val n = e.count()
     AnnIndex.build(e.filter(col("vec_id") < n / 2), dir, "vec_id", "embedding", nCells = 16)
@@ -232,7 +229,7 @@ class HnswSpec extends GraftSuite {
     q.awaitTermination(120000)
     // graphs are FRESH (no staleness refusal) and equal an all-batch build
     val queries = e.filter(col("vec_id") >= 20 && col("vec_id") < 40)
-    val dirAll = tmp()
+    val dirAll = tempDir()
     AnnIndex.build(e, dirAll, "vec_id", "embedding", nCells = 16)
     AnnIndex.buildHnsw(spark, dirAll, m = 8, efConstruction = 64)
     val a = AnnIndex.topKHnsw(spark, dir, queries, "vec_id", "embedding", 5, 2, 32)
@@ -243,7 +240,7 @@ class HnswSpec extends GraftSuite {
   }
 
   test("fragmented cell graphs (many files per cell) still rebuild whole") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     AnnIndex.build(e, dir, "vec_id", "embedding", nCells = 8)
     AnnIndex.buildHnsw(spark, dir, m = 8, efConstruction = 64)
@@ -273,7 +270,7 @@ class HnswSpec extends GraftSuite {
   }
 
   test("stale graphs refuse loudly after append; rebuild re-admits") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     val n = e.count()
     AnnIndex.build(e.filter(col("vec_id") < n / 2), dir, "vec_id", "embedding", nCells = 8)
@@ -292,7 +289,7 @@ class HnswSpec extends GraftSuite {
   }
 
   test("persisted per-cell route: narrow beam keeps recall >= 0.9 vs the exhaustive scan") {
-    val dir = tmp()
+    val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")
     AnnIndex.build(e, dir, "vec_id", "embedding", nCells = 16)
     AnnIndex.buildHnsw(spark, dir, m = 8, efConstruction = 64)

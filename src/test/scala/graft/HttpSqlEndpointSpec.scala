@@ -139,7 +139,7 @@ class HttpSqlEndpointSpec extends GraftSuite {
     // enableNullHandling has no SQL nulls at all
     val s = spark.newSession()
     PinotFunctions.register(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft-wire-nulldef").toString + "/t"
+    val dir = tempDir("graft-wire-nulldef") + "/t"
     spark.sql(
       """SELECT * FROM VALUES
         |  (1, CAST(10 AS INT), 'a', CAST(1.5 AS DOUBLE)),
@@ -221,9 +221,9 @@ class HttpSqlEndpointSpec extends GraftSuite {
   test("controller surface: pause/resumeConsumption toggle a realtime table's ingest") {
     import graft.streaming.EventIngest
     import java.nio.file.Files
-    val src = Files.createTempDirectory("graft-ctl-src").toString
-    val sink = Files.createTempDirectory("graft-ctl-sink").toString
-    val ckpt = Files.createTempDirectory("graft-ctl-ckpt").toString
+    val src = tempDir("graft-ctl-src")
+    val sink = tempDir("graft-ctl-sink")
+    val ckpt = tempDir("graft-ctl-ckpt")
     def event(u: Int): String =
       s"""{"userID":"$u","productName":"p","color":"red","department":"d",""" +
         s""""product":"x","campaign":"NONE","price":5,"creationTimestamp":"2024-05-01 10:0$u:00"}"""

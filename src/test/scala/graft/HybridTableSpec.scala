@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.HybridTable
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Hybrid table broker routing (Pinot OFFLINE+REALTIME under one name):
@@ -11,8 +10,6 @@ import org.apache.spark.sql.functions._
   * offline day (possibly partial) is served from realtime. */
 class HybridTableSpec extends GraftSuite {
   import spark.implicits._
-
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
 
   private def ev(id: Int, day: Int, hour: Int, v: Double) =
     (id, java.sql.Timestamp.valueOf(f"2024-05-0$day $hour%02d:00:00"), v)
@@ -53,8 +50,8 @@ class HybridTableSpec extends GraftSuite {
   }
 
   test("realtimeToOffline moves complete aged days with snapshot/staging, view identical before and after") {
-    val rtDir = tmp("graft-r2o-rt")
-    val offDir = tmp("graft-r2o-off")
+    val rtDir = tempDir("graft-r2o-rt")
+    val offDir = tempDir("graft-r2o-off")
     val rows = Seq(
       ev(1, 1, 5, 10), ev(2, 1, 6, 11), ev(3, 2, 7, 20), ev(4, 3, 8, 30), ev(5, 4, 9, 40))
     rows.toDF("id", "ts", "v").withColumn("dt", to_date($"ts"))

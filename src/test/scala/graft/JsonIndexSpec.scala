@@ -2,7 +2,6 @@ package graft
 
 import graft.expressions.JsonMatchBuilder
 import graft.sources.{JsonIndex, SortedLayout, Tables}
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
@@ -24,7 +23,7 @@ class JsonIndexSpec extends GraftSuite {
 
   test("numeric equality on the events props column: index ≡ scan, with file pruning") {
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "props")
-    val dir = Files.createTempDirectory("graft-jsonindex").toString
+    val dir = tempDir("graft-jsonindex")
     JsonIndex.build(ev, dir, "event_id", "props", nFiles = 8)
 
     Seq("\"$.k\" = 42", "\"$.k\" = 87", "\"$.k\" IS NOT NULL").foreach { f =>
@@ -56,7 +55,7 @@ class JsonIndexSpec extends GraftSuite {
       (3L, """{"tag": null, "n": 8.7e1}"""),
       (4L, """{"n": "eightyseven"}"""),
       (5L, """{"tag": "alpha beta", "nested": {"n": 87}}""")).toDF("id", "js")
-    val dir = Files.createTempDirectory("graft-jsonindex-planted").toString
+    val dir = tempDir("graft-jsonindex-planted")
     JsonIndex.build(planted, dir, "id", "js", nFiles = 2)
 
     // all three numeric renderings of 87 land on one canonical term
@@ -80,7 +79,7 @@ class JsonIndexSpec extends GraftSuite {
     val planted = Seq(
       (1L, """{"k": 1, "k": 2}"""),
       (2L, """{"k": 2}""")).toDF("id", "js")
-    val dir = Files.createTempDirectory("graft-jsonindex-dup").toString
+    val dir = tempDir("graft-jsonindex-dup")
     JsonIndex.build(planted, dir, "id", "js", nFiles = 2)
     Seq("\"$.k\" = 1", "\"$.k\" = 2").foreach { f =>
       assert(indexed(planted, "js", "id", dir, f) === fullScan(planted, "js", "id", f),
@@ -98,7 +97,7 @@ class JsonIndexSpec extends GraftSuite {
       (5L, """{"k": 5}"""), // no array at all
       (6L, """{"items": [{"tag": "a"}, {"q": null}]}"""), // JSON null ≠ presence
       (7L, """{"items": "notanarray"}""")).toDF("id", "js")
-    val dir = Files.createTempDirectory("graft-jsonindex-arr").toString
+    val dir = tempDir("graft-jsonindex-arr")
     JsonIndex.build(planted, dir, "id", "js", nFiles = 2)
 
     def parity(f: String): Set[Long] = {
@@ -135,7 +134,7 @@ class JsonIndexSpec extends GraftSuite {
       (3L, """{"k": 3, "tag": "alpha"}"""),
       (4L, """{"k": 2, "tag": "gamma", "items": [7, 8]}"""),
       (5L, """{"k": 9}""")).toDF("id", "js")
-    val dir = Files.createTempDirectory("graft-jsonindex-compound").toString
+    val dir = tempDir("graft-jsonindex-compound")
     JsonIndex.build(planted, dir, "id", "js", nFiles = 2)
 
     def parity(f: String): Set[Long] = {

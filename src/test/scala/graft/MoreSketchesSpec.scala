@@ -21,7 +21,7 @@ class MoreSketchesSpec extends GraftSuite {
   }
 
   test("cpc: stored sketch columns union via cpc_union_agg") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cpc").toString
+    val dir = tempDir("graft-cpc")
     // two overlapping stored cells: [0,6000) and [2000,8000)
     spark.range(0, 6000).select(lit(0).as("g"), col("id").as("v"))
       .union(spark.range(2000, 8000).select(lit(1).as("g"), col("id").as("v")))
@@ -88,7 +88,7 @@ class MoreSketchesSpec extends GraftSuite {
   }
 
   test("freq: stored daily cells merge via freq_union_agg") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-freq").toString
+    val dir = tempDir("graft-freq")
     // day 0: a x3, b x1; day 1: a x1, b x2 -> merged a:4, b:3
     Seq((0, "a"), (0, "a"), (0, "a"), (0, "b"), (1, "a"), (1, "b"), (1, "b"))
       .toDF("day", "s")
@@ -110,7 +110,7 @@ class MoreSketchesSpec extends GraftSuite {
     assert(math.abs(r._2 - 99000) / 100000 <= 0.01, s"p99 rank error: ${r._2}")
 
     // stored per-group sketches merge to the same global quantile estimate
-    val dir = java.nio.file.Files.createTempDirectory("graft-kll").toString
+    val dir = tempDir("graft-kll")
     df.withColumn("g", col("v") % 4)
       .groupBy(col("g")).agg(kllSketchAgg(col("v"), k = 400).as("sk"))
       .write.mode("overwrite").parquet(s"$dir/cells")

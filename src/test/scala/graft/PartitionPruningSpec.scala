@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class PartitionPruningSpec extends GraftSuite {
 
   test("time predicate prunes day partitions from the scan") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = tempDir("graft-part")
     val ev = Tables.t(spark, sfDir, "events")
       .withColumn("dt", date_trunc("day", col("ts")).cast("date"))
     ev.write.mode("overwrite").partitionBy("dt").parquet(dir)

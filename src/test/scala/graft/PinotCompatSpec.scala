@@ -584,7 +584,7 @@ class PinotCompatSpec extends GraftSuite {
   test("opt-in Pinot null defaults (F6): scans substitute type defaults; ANSI mode keeps SQL nulls") {
     // null-bearing fixture through a real file scan (the rule rewrites
     // LogicalRelation — Pinot substitutes at segment build, we at the scan)
-    val dir = java.nio.file.Files.createTempDirectory("graft-nulldef").toString + "/t"
+    val dir = tempDir("graft-nulldef") + "/t"
     spark.sql(
       """SELECT * FROM VALUES
         |  (1, CAST(10 AS INT),   'a',                CAST(1.5 AS DOUBLE)),

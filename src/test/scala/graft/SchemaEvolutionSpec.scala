@@ -24,7 +24,7 @@ class SchemaEvolutionSpec extends GraftSuite {
   }
 
   test("mergeSchema union: old segments serve nulls for late-added columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val dir = tempDir("graft_evo")
     writeGenerations(dir)
     val df = spark.read.option("mergeSchema", "true").parquet(dir)
       .orderBy(col("k"))
@@ -58,7 +58,7 @@ class SchemaEvolutionSpec extends GraftSuite {
       find(df.queryExecution.executedPlan).get.metrics("numFiles").value
     }
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo_prune").toString
+    val dir = tempDir("graft_evo_prune")
     val gen1 = (0L until 800L).map(i => (i, i * 2.0)).toDF("k", "v")
     graft.sources.SortedLayout.write(gen1, dir, "k", nFiles = 8)
     val s = spark.newSession()
@@ -88,7 +88,7 @@ class SchemaEvolutionSpec extends GraftSuite {
   }
 
   test("Pinot-mode defaults: pre-evolution segments answer console queries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evo2").toString
+    val dir = tempDir("graft_evo2")
     writeGenerations(dir)
     val s = spark.newSession()
     PinotFunctions.register(s)

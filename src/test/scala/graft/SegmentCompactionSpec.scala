@@ -11,8 +11,6 @@ import org.apache.spark.sql.streaming.Trigger
   * is exercised, not simulated. */
 class SegmentCompactionSpec extends GraftSuite {
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
-
   private def kdgEvent(user: Int, campaign: String, price: Int, ts: String): String =
     s"""{"userID":"$user","productName":"p","color":"red","department":"d",""" +
       s""""product":"x","campaign":"$campaign","price":$price,"creationTimestamp":"$ts"}"""
@@ -23,9 +21,9 @@ class SegmentCompactionSpec extends GraftSuite {
       rows.mkString("\n").getBytes("UTF-8"))
 
   test("compaction merges micro-batch files per partition, preserves every row, drops the sink log") {
-    val src = tmp("graft-cmp-src")
-    val sink = tmp("graft-cmp-sink")
-    val ckpt = tmp("graft-cmp-ckpt")
+    val src = tempDir("graft-cmp-src")
+    val sink = tempDir("graft-cmp-sink")
+    val ckpt = tempDir("graft-cmp-ckpt")
     // 4 micro-batches × 2 days → ≥4 files per dt partition (one per batch)
     (1 to 4).foreach { b =>
       writeBatch(src, Seq(
@@ -57,9 +55,9 @@ class SegmentCompactionSpec extends GraftSuite {
   }
 
   test("z-order compaction: re-clustered partitions keep every row and prune on both columns") {
-    val src = tmp("graft-zc-src")
-    val sink = tmp("graft-zc-sink")
-    val ckpt = tmp("graft-zc-ckpt")
+    val src = tempDir("graft-zc-src")
+    val sink = tempDir("graft-zc-sink")
+    val ckpt = tempDir("graft-zc-ckpt")
     // 6 micro-batches, one day, arrival order ~ time — userID and price
     // arrive fully interleaved so the raw layout prunes on neither
     (1 to 6).foreach { b =>
@@ -108,7 +106,7 @@ class SegmentCompactionSpec extends GraftSuite {
 
   test("merge-rollup collapses aged partitions to dims, keeps recent raw, preserves additive totals") {
     import spark.implicits._
-    val dir = tmp("graft-rollup")
+    val dir = tempDir("graft-rollup")
     // 3 day partitions, 2 files each, duplicate (user, type) combinations
     Seq("2024-05-01", "2024-05-02", "2024-05-03").foreach { day =>
       (0 to 1).foreach { f =>
@@ -148,7 +146,7 @@ class SegmentCompactionSpec extends GraftSuite {
 
   test("upsert-log purge: compaction to latest, aged tombstones drop, served snapshot unchanged") {
     import spark.implicits._
-    val dir = tmp("graft-purge")
+    val dir = tempDir("graft-purge")
     // (k, event_micros, payload, deleted) update log across several files
     val log = Seq(
       ("A", 1L, "A@1", false), ("A", 5L, "A@5", false),      // live, 2 versions
@@ -188,7 +186,7 @@ class SegmentCompactionSpec extends GraftSuite {
 
   test("snapshot-scoped swap: files landing after the snapshot survive; below-threshold partitions untouched") {
     import spark.implicits._
-    val dir = tmp("graft-cmp-plain")
+    val dir = tempDir("graft-cmp-plain")
     // partition A: 3 tiny files; partition B: 1 file (below minFiles)
     (1 to 3).foreach { i =>
       Seq((i, "a")).toDF("v", "p").write.mode("append").partitionBy("p").parquet(dir)

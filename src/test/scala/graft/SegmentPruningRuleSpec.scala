@@ -26,7 +26,7 @@ class SegmentPruningRuleSpec extends GraftSuite {
   }
 
   private lazy val layout: (String, Long) = {
-    val dir = Files.createTempDirectory("graft-segprune").toString
+    val dir = tempDir("graft-segprune")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id", "value")
     SortedLayout.write(ev, dir, "user_id", nFiles = 8)
     val mid = SortedLayout.fileRanges(spark, dir, "user_id")
@@ -73,7 +73,7 @@ class SegmentPruningRuleSpec extends GraftSuite {
 
   test("bloom-registered hash layout prunes equality predicates, not ranges") {
     import graft.sources.BloomLayout
-    val dir = Files.createTempDirectory("graft-segprune-bloom").toString
+    val dir = tempDir("graft-segprune-bloom")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id", "value")
     BloomLayout.write(ev, dir, "user_id", nFiles = 8)
     val s2 = spark.newSession()
@@ -100,7 +100,7 @@ class SegmentPruningRuleSpec extends GraftSuite {
 
   test("bloom registration refuses when the driver manifest would exceed its byte budget") {
     import graft.sources.BloomLayout
-    val dir = Files.createTempDirectory("graft-segprune-bloomcap").toString
+    val dir = tempDir("graft-segprune-bloomcap")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id").limit(1000)
     BloomLayout.write(ev, dir, "user_id", nFiles = 8)
     val s2 = spark.newSession()
@@ -119,7 +119,7 @@ class SegmentPruningRuleSpec extends GraftSuite {
 
   test("partitioned layout prunes = to the owning file and IN to the union; ranges full-scan") {
     import graft.sources.PartitionedLayout
-    val dir = Files.createTempDirectory("graft-segprune-part").toString
+    val dir = tempDir("graft-segprune-part")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id", "value")
     PartitionedLayout.write(ev, dir, "user_id", nPartitions = 8)
     val s2 = spark.newSession()
@@ -169,7 +169,7 @@ class SegmentPruningRuleSpec extends GraftSuite {
     // range/equality conjunctions; every pruned answer must equal the
     // unpruned one (and the whole point: some cases must actually prune)
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-segprune-fuzz").toString
+    val dir = tempDir("graft-segprune-fuzz")
     val rnd = new scala.util.Random(424242L)
     val rows = (0L until 4000L).map { i =>
       (i, rnd.nextInt(50).toLong, s"s${rnd.nextInt(12)}", rnd.nextDouble())
@@ -206,7 +206,7 @@ class SegmentPruningRuleSpec extends GraftSuite {
   }
 
   test("stale layout deregisters itself: rewritten files stop pruning, results stay exact") {
-    val dir = Files.createTempDirectory("graft-segprune-stale").toString
+    val dir = tempDir("graft-segprune-stale")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id")
     SortedLayout.write(ev, dir, "user_id", nFiles = 4)
     val s2 = spark.newSession()

@@ -22,7 +22,7 @@ class SemDedupIndexSpec extends GraftSuite {
 
   test("stored codebook and assignments replay a fresh train+assign bit for bit") {
     val corpus = corpusDf(150, 8, seed = 21)
-    val dir = java.nio.file.Files.createTempDirectory("semdedup_idx_spec").toString
+    val dir = tempDir("semdedup_idx_spec")
     SemDedupIndex.build(corpus, dir, k = 5, iters = 3)
 
     val init = corpus.orderBy(col("vec_id"))

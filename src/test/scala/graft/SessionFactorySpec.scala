@@ -3,15 +3,19 @@ package graft
 import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guard against session drift: `Graft.session` is the only code that
-  * builds a SparkSession and `Graft.cores` the only reader of the core-count
-  * env var, so Bench, Verify, the tools and the tests all share one config.
+/** Guard against drift: `Graft.session` is the only code that builds a
+  * SparkSession and `Graft.cores` the only reader of the core-count env
+  * var, so Bench, Verify, the tools and the tests all share one config;
+  * `Fingerprint` is the only code that places derived artifacts under the
+  * JVM temp dir or hashes with murmur, so every artifact has one key rule.
   * Comment lines are ignored; the search strings are assembled so this file
   * does not match itself. */
 class SessionFactorySpec extends AnyFunSuite {
 
   private val builderCall = "SparkSession" + ".builder"
   private val coresVar = "SPARK_GRAFT" + "_CPUS"
+  private val tmpdirProp = "java.io" + ".tmpdir"
+  private val murmurCall = "MurmurHash3" + ".stringHash"
 
   private def scalaFiles(dir: File): Seq[File] =
     Option(dir.listFiles).toSeq.flatten.flatMap { f =>
@@ -36,5 +40,10 @@ class SessionFactorySpec extends AnyFunSuite {
 
   test("only Graft.scala reads the core-count env var") {
     assert(filesWithCode(coresVar) === Set("Graft.scala"))
+  }
+
+  test("only Fingerprint.scala names the temp dir or hashes with murmur") {
+    assert(filesWithCode(tmpdirProp) === Set("Fingerprint.scala"))
+    assert(filesWithCode(murmurCall) === Set("Fingerprint.scala"))
   }
 }

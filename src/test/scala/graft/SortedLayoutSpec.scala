@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.{SortedLayout, Tables}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Pinot sorted-column index analog: range-sorted parquet layout gives
@@ -13,7 +12,7 @@ class SortedLayoutSpec extends GraftSuite {
   private def asLong(c: Comparable[Any]): Long = c.asInstanceOf[java.lang.Long].longValue()
 
   test("sorted layout yields disjoint per-file ranges; footer-driven pruning reads exactly one file") {
-    val dir = Files.createTempDirectory("graft-sorted").toString
+    val dir = tempDir("graft-sorted")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id", "value")
     SortedLayout.write(ev, dir, "user_id", nFiles = 8)
 
@@ -58,7 +57,7 @@ class SortedLayoutSpec extends GraftSuite {
   }
 
   test("unsorted layout cannot prune: every file's range spans the domain") {
-    val dir = Files.createTempDirectory("graft-unsorted").toString
+    val dir = tempDir("graft-unsorted")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id")
     ev.repartition(8).write.mode("overwrite").parquet(dir) // hash spray
     val ranges = SortedLayout.fileRanges(spark, dir, "user_id")
@@ -76,7 +75,7 @@ class SortedLayoutSpec extends GraftSuite {
     // BELOW U+FFFF; Spark's UTF8String byte order puts it ABOVE (F0 > EF).
     // Files are range-ordered by Spark, so comparing footer stats as java
     // Strings pruned the very file holding a supplementary-plane probe.
-    val dir = Files.createTempDirectory("graft-sorted-utf8").toString
+    val dir = tempDir("graft-sorted-utf8")
     import spark.implicits._
     val values = (1 to 100).map(i => f"ascii_$i%03d") ++ Seq("￿_sentinel", "😀_emoji")
     SortedLayout.write(values.toDF("k"), dir, "k", nFiles = 4)
@@ -91,7 +90,7 @@ class SortedLayoutSpec extends GraftSuite {
   }
 
   test("range predicate across a file boundary scans only the touched files") {
-    val dir = Files.createTempDirectory("graft-sorted-range").toString
+    val dir = tempDir("graft-sorted-range")
     import spark.implicits._
     SortedLayout.write((1L to 80000L).toDF("k"), dir, "k", nFiles = 8)
     val ranges = SortedLayout.fileRanges(spark, dir, "k")

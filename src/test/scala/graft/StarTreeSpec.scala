@@ -11,8 +11,16 @@ import org.apache.spark.sql.functions._
   * rule never fires on non-decomposable queries or unregistered sessions. */
 class StarTreeSpec extends GraftSuite {
 
+  // rollups of this suite's own temp facts are keyed on paths no later run
+  // reuses: delete them with the facts
+  private val tempRollups = scala.collection.mutable.Set.empty[String]
+
+  override def afterAll(): Unit =
+    try tempRollups.foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    finally super.afterAll()
+
   private lazy val factPath: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_st_fact").toString
+    val dir = tempDir("graft_st_fact")
     val out = s"$dir/fact.parquet"
     import spark.implicits._
     // planted: null dim, null metrics, duplicate dim combos
@@ -32,7 +40,8 @@ class StarTreeSpec extends GraftSuite {
 
   private def routed(): SparkSession = {
     val s = spark.newSession()
-    StarTree.register(s, factPath, dims = Seq("d1", "d2"), metrics = Seq("m1", "m2"))
+    tempRollups +=
+      StarTree.register(s, factPath, dims = Seq("d1", "d2"), metrics = Seq("m1", "m2")).rollupPath
     s
   }
 
@@ -143,14 +152,15 @@ class StarTreeSpec extends GraftSuite {
     import graft.expressions.ThetaSketch._
     // separate fact (the shared planted fact is registered without sketch
     // cols by other tests; registry is keyed by path)
-    val path = java.nio.file.Files.createTempDirectory("graft-st-sk").toString + "/fact"
+    val path = tempDir("graft-st-sk") + "/fact"
     // 3 groups x 500 distinct u each (gcd(3,500)=1 => every residue appears)
     spark.range(0, 3000).select(
         (col("id") % 3).cast("string").as("d1"), (col("id") % 500).as("u"))
       .write.mode("overwrite").parquet(path)
 
     val s = spark.newSession()
-    StarTree.register(s, path, dims = Seq("d1"), metrics = Nil, sketchCols = Seq("u"))
+    tempRollups +=
+      StarTree.register(s, path, dims = Seq("d1"), metrics = Nil, sketchCols = Seq("u")).rollupPath
 
     def shape(x: SparkSession) = x.read.parquet(path)
       .groupBy("d1")

@@ -17,8 +17,6 @@ import org.apache.spark.sql.streaming.Trigger
   * No loss, no duplication, and upsert state resumes where it left off. */
 class StreamingCrashRecoverySpec extends GraftSuite {
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
-
   private def kdgEvent(user: Int, price: Int, ts: String): String =
     s"""{"userID":"$user","productName":"p","color":"red","department":"d",""" +
       s""""product":"x","campaign":"c","price":$price,"creationTimestamp":"$ts"}"""
@@ -28,9 +26,9 @@ class StreamingCrashRecoverySpec extends GraftSuite {
       lines.mkString("\n").getBytes("UTF-8"))
 
   test("abrupt stop mid-stream: sealed store is exactly-once after restart (no loss, no dup)") {
-    val src = tmp("crash-src")
-    val sink = tmp("crash-sink")
-    val ckpt = tmp("crash-ckpt")
+    val src = tempDir("crash-src")
+    val sink = tempDir("crash-sink")
+    val ckpt = tempDir("crash-ckpt")
     // 30 single-row files, one file per micro-batch: plenty of commit
     // boundaries for the stop to land between — or inside — one
     val nEvents = 30
@@ -69,8 +67,8 @@ class StreamingCrashRecoverySpec extends GraftSuite {
 
   test("upsert state survives the restart: an older event cannot regress the stored row") {
     import spark.implicits._
-    val src = tmp("crash-upsert-src")
-    val ckpt = tmp("crash-upsert-ckpt")
+    val src = tempDir("crash-upsert-src")
+    val ckpt = tempDir("crash-upsert-ckpt")
     // memory sink cannot recover from a checkpoint; foreachBatch can — and
     // it is also the production delivery shape (upsert log → store)
     def run(): Array[(String, Long, String, Boolean)] = {

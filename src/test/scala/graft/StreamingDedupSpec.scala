@@ -10,10 +10,8 @@ import org.apache.spark.sql.streaming.Trigger
   * form — X1 applied to the stream). */
 class StreamingDedupSpec extends GraftSuite {
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   test("dropDuplicates on the stream suppresses redelivered events") {
-    val src = tmp("graft-dedup-src")
+    val src = tempDir("graft-dedup-src")
     def ev(id: Int, ts: String): String =
       s"""{"userID":"$id","productName":"p","color":"c","department":"d",""" +
         s""""product":"x","campaign":"NONE","price":$id,"creationTimestamp":"$ts"}"""

@@ -13,8 +13,7 @@ class StreamingSemDedupSpec extends GraftSuite {
 
   import spark.implicits._
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_semdedup").toString + "/corpus"
+  private def tmp(): String = tempDir() + "/corpus"
 
   private val cents: Seq[(Int, Array[Float])] = Seq(
     0 -> Array(1f, 0f, 0f, 0f),

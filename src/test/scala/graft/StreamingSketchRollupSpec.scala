@@ -2,7 +2,6 @@ package graft
 
 import graft.expressions.ThetaSketch._
 import graft.streaming.SketchRollup
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
@@ -12,15 +11,13 @@ import org.apache.spark.sql.functions._
 class StreamingSketchRollupSpec extends GraftSuite {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   private def ts(s: String) = Timestamp.valueOf(s)
 
   test("per-batch cells merge to exact distincts; replays and late data cannot inflate") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val cellDir = tmp("graft-skroll") + "/cells"
-    val ckpt = tmp("graft-skroll-ck")
+    val cellDir = tempDir("graft-skroll") + "/cells"
+    val ckpt = tempDir("graft-skroll-ck")
 
     val mem = MemoryStream[(Timestamp, String, Long)]
     val events = mem.toDF().toDF("ts", "event_type", "user_id")

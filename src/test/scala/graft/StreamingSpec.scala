@@ -11,8 +11,6 @@ import org.apache.spark.sql.streaming.Trigger
   * batch-only, so streaming correctness lives here (SURVEY.md §7.4.3). */
 class StreamingSpec extends GraftSuite {
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
-
   private def writeEvents(dir: String, lines: Seq[String]): Unit = {
     val p = java.nio.file.Paths.get(dir, s"batch_${System.nanoTime()}.json")
     Files.write(p, lines.mkString("\n").getBytes("UTF-8"))
@@ -23,9 +21,9 @@ class StreamingSpec extends GraftSuite {
       s""""product":"x","campaign":"$campaign","price":$price,"creationTimestamp":"$ts"}"""
 
   test("S1-S7: JSON replay ingests to day-partitioned parquet with exactly-once commit") {
-    val src = tmp("graft-src")
-    val sink = tmp("graft-sink")
-    val ckpt = tmp("graft-ckpt")
+    val src = tempDir("graft-src")
+    val sink = tempDir("graft-sink")
+    val ckpt = tempDir("graft-ckpt")
     writeEvents(src, Seq(
       kdgEvent(1, "BlackFriday", 100, "2024-05-01 10:00:00"),
       kdgEvent(2, "NONE", 50, "2024-05-01 11:00:00"),
@@ -65,9 +63,9 @@ class StreamingSpec extends GraftSuite {
 
   test("S5/T2: hot+cold view serves sealed plus in-flight rows") {
     import spark.implicits._
-    val src = tmp("graft-src2")
-    val sink = tmp("graft-sink2")
-    val ckpt = tmp("graft-ckpt2")
+    val src = tempDir("graft-src2")
+    val sink = tempDir("graft-sink2")
+    val ckpt = tempDir("graft-ckpt2")
     writeEvents(src, Seq(kdgEvent(1, "NONE", 10, "2024-05-01 10:00:00")))
     val q = EventIngest.sealedSink(
       EventIngest.readJsonLines(spark, src), sink, ckpt, Trigger.AvailableNow()).start()
@@ -99,7 +97,7 @@ class StreamingSpec extends GraftSuite {
 
   test("T4: watermarked tumbling-window aggregation over the stream") {
     import spark.implicits._
-    val src = tmp("graft-src3")
+    val src = tempDir("graft-src3")
     writeEvents(src, Seq(
       kdgEvent(1, "BlackFriday", 100, "2024-05-01 10:05:00"),
       kdgEvent(2, "BlackFriday", 60, "2024-05-01 10:55:00"),

@@ -12,8 +12,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 class StreamingSupersetSpec extends GraftSuite {
   import spark.implicits._
 
-  private def tmp(prefix: String) = Files.createTempDirectory(prefix).toString
-
   private def writeEvents(dir: String, lines: Seq[String]): Unit =
     Files.write(java.nio.file.Paths.get(dir, s"b_${System.nanoTime()}.json"),
       lines.mkString("\n").getBytes("UTF-8"))
@@ -23,7 +21,7 @@ class StreamingSupersetSpec extends GraftSuite {
       s""""product":"x","campaign":"NONE","price":$price,"creationTimestamp":"$ts"}"""
 
   test("sliding windows: one event lands in every overlapping pane") {
-    val src = tmp("graft-slide")
+    val src = tempDir("graft-slide")
     writeEvents(src, Seq(ev(1, 100, "2024-05-01 10:30:00")))
     val agg = EventIngest.readJsonLines(spark, src)
       .withWatermark("ts", "1 minute")
@@ -39,7 +37,7 @@ class StreamingSupersetSpec extends GraftSuite {
   }
 
   test("session windows: events within the gap merge, beyond it split") {
-    val src = tmp("graft-sess")
+    val src = tempDir("graft-sess")
     writeEvents(src, Seq(
       ev(1, 10, "2024-05-01 10:00:00"),
       ev(1, 20, "2024-05-01 10:10:00"),   // within 15-min gap → same session
@@ -60,7 +58,7 @@ class StreamingSupersetSpec extends GraftSuite {
   }
 
   test("flatMapGroupsWithState: running per-user spend with custom state") {
-    val src = tmp("graft-state")
+    val src = tempDir("graft-state")
     writeEvents(src, Seq(
       ev(1, 10, "2024-05-01 10:00:00"),
       ev(1, 25, "2024-05-01 10:05:00"),

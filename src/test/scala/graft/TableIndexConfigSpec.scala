@@ -2,7 +2,6 @@ package graft
 
 import graft.catalog.TableSpec
 import graft.sources.{SortedLayout, Tables}
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,7 +39,7 @@ class TableIndexConfigSpec extends GraftSuite {
       |}""".stripMargin
 
   test("sortedColumn from the config registers footer-range pruning") {
-    val dir = Files.createTempDirectory("graft-idxcfg").toString
+    val dir = tempDir("graft-idxcfg")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id", "value")
     SortedLayout.write(ev, dir, "user_id", nFiles = 8)
 
@@ -63,7 +62,7 @@ class TableIndexConfigSpec extends GraftSuite {
 
   test("sortedColumn + bloomFilterColumns register together; decisions intersect") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-idxcfg-both").toString
+    val dir = tempDir("graft-idxcfg-both")
     // k sorts the layout (8 range files); v = (k/100)%4 puts each v value
     // in exactly TWO files, so a (range ∧ equality) conjunction prunes
     // strictly tighter than either decision alone
@@ -88,7 +87,7 @@ class TableIndexConfigSpec extends GraftSuite {
   }
 
   test("bloomFilterColumns registers point-lookup pruning when nothing sorts") {
-    val dir = Files.createTempDirectory("graft-idxcfg-bloom").toString
+    val dir = tempDir("graft-idxcfg-bloom")
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id")
     graft.sources.BloomLayout.write(ev, dir, "user_id", nFiles = 4)
     val s2 = spark.newSession()
@@ -102,7 +101,7 @@ class TableIndexConfigSpec extends GraftSuite {
 
   test("over-budget bloom is SKIPPED with a surfaced refusal, not an abort " +
       "(other families still register)") {
-    val dir = Files.createTempDirectory("graft-idxcfg-refuse").toString
+    val dir = tempDir("graft-idxcfg-refuse")
     val ev = Tables.t(spark, sfDir, "events")
       .select("event_id", "user_id", "event_type")
     graft.sources.SortedLayout.write(ev, dir, "event_id", nFiles = 4)
@@ -129,7 +128,7 @@ class TableIndexConfigSpec extends GraftSuite {
     val in = Option(getClass.getResourceAsStream("/kinesisTableConfigFile.json"))
       .getOrElse(fail("test resource kinesisTableConfigFile.json is missing"))
     val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val dir = Files.createTempDirectory("graft-idxcfg-ref").toString
+    val dir = tempDir("graft-idxcfg-ref")
     Tables.t(spark, sfDir, "events").select("event_id", "user_id")
       .write.mode("overwrite").parquet(dir)
     val applied = TableSpec.applyIndexConfig(spark.newSession(), json, dir)

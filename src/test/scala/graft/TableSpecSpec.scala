@@ -187,7 +187,7 @@ class TableSpecSpec extends GraftSuite {
   test("registerView serves parquet through the spec-declared schema") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-spec").toString
+    val dir = tempDir("graft-spec")
     Seq(("7", "BlackFriday", Seq("a", "b"), 120, "2024-05-01 10:00:00"))
       .toDF("userID", "campaign", "tags", "price", "creationTimestamp")
       .write.mode("overwrite").parquet(dir)

@@ -2,7 +2,6 @@ package graft
 
 import graft.expressions.TextMatchBuilder
 import graft.sources.{SortedLayout, Tables, TextIndex}
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftBridge
@@ -15,7 +14,7 @@ class TextIndexSpec extends GraftSuite {
 
   private lazy val docs = Tables.t(spark, sfDir, "documents").select("doc_id", "text")
   private lazy val indexDir: String = {
-    val dir = Files.createTempDirectory("graft-textindex").toString
+    val dir = tempDir("graft-textindex")
     TextIndex.build(docs, dir, "doc_id", "text", nFiles = 8)
     dir
   }
@@ -137,7 +136,7 @@ class TextIndexSpec extends GraftSuite {
       (3L, "email is different"),
       (4L, "the e mail gap differs from e-mail"),
       (5L, "!!! ???")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-textindex-planted").toString
+    val dir = tempDir("graft-textindex-planted")
     TextIndex.build(planted, dir, "doc_id", "text", nFiles = 2)
 
     // "e-mail" word-runs are [e, mail]: doc 2 has "mail" but no "e" token;
@@ -173,7 +172,7 @@ class TextIndexSpec extends GraftSuite {
       (1L, "foo-bar baz"),
       (2L, "foobar baz"),
       (3L, "foo alone")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-textindex-prefix").toString
+    val dir = tempDir("graft-textindex-prefix")
     TextIndex.build(planted, dir, "doc_id", "text", nFiles = 2)
     // "foo-*" → regex \bfoo-  : doc 1 only (doc 2's foobar has no boundary
     // after foo; doc 3 has no hyphen)
@@ -196,7 +195,7 @@ class TextIndexSpec extends GraftSuite {
       (1L, "rebatch streams nightly"),
       (2L, "batch stream basics"),
       (3L, "rebatch nothing")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-textindex-midtok").toString
+    val dir = tempDir("graft-textindex-midtok")
     TextIndex.build(planted, dir, "doc_id", "text", nFiles = 2)
 
     // "rebatch streams" CONTAINS the substring "batch stream" — the index
@@ -250,7 +249,7 @@ class TextIndexSpec extends GraftSuite {
       (3L, "reform matters"), // 2 prepended chars
       (4L, "fort knox"), // 1 substitution
       (5L, "formidable scope")).toDF("doc_id", "text") // 'form' only as a token PREFIX — no whole-token match
-    val dir = Files.createTempDirectory("graft-textindex-fuzzy").toString
+    val dir = tempDir("graft-textindex-fuzzy")
     TextIndex.build(planted, dir, "doc_id", "text", nFiles = 2)
     def both(q: String): Set[Long] = {
       val scan = fullScan(planted, q)

@@ -31,7 +31,7 @@ class ThetaSketchSpec extends GraftSuite {
   test("stored sketch columns intersect later — the capability HLL lacks") {
     // per-group sketches persisted to parquet, read back, then INTERSECTED:
     // groups 0 and 1 share exactly ids [2000, 6000)
-    val dir = java.nio.file.Files.createTempDirectory("graft-theta").toString
+    val dir = tempDir("graft-theta")
     val rows = spark.range(0, 6000).select(lit(0).as("g"), col("id").as("v"))
       .union(spark.range(2000, 8000).select(lit(1).as("g"), col("id").as("v")))
     rows.groupBy(col("g")).agg(thetaSketchAgg(col("v"), lgK = 14).as("sk"))

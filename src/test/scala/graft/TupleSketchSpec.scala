@@ -38,7 +38,7 @@ class TupleSketchSpec extends GraftSuite {
   }
 
   test("stored cells union (values sum across cells) then intersect with summed summaries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tuple").toString
+    val dir = tempDir("graft-tuple")
     // group 0: keys [0,3000) value 1; group 1: keys [1000,4000) value 10;
     // key k appears in BOTH days of each group (values add across cells)
     val rows = spark.range(0, 6000).select(

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.{SortedLayout, Tables, ValueIndex}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Pinot inverted/range index analog: value-sorted postings answer equality
@@ -13,7 +12,7 @@ class ValueIndexSpec extends GraftSuite {
 
   test("numeric equality and range: index ≡ scan, lookups touch few postings files") {
     val ev = Tables.t(spark, sfDir, "events").select("event_id", "user_id", "value")
-    val dir = Files.createTempDirectory("graft-valueindex").toString
+    val dir = tempDir("graft-valueindex")
     ValueIndex.build(ev, dir, "event_id", "user_id", nFiles = 8)
 
     val probe = ev.select("user_id").head().getLong(0)
@@ -38,7 +37,7 @@ class ValueIndexSpec extends GraftSuite {
 
   test("string column: per-source equality partitions the table exactly") {
     val docs = Tables.t(spark, sfDir, "documents").select("doc_id", "source", "lang")
-    val dir = Files.createTempDirectory("graft-valueindex-str").toString
+    val dir = tempDir("graft-valueindex-str")
     ValueIndex.build(docs, dir, "doc_id", "source", nFiles = 4)
     val sources = docs.select("source").distinct().collect().map(_.getString(0))
     val total = sources.map { s =>

@@ -29,7 +29,7 @@ class ZOrderLayoutSpec extends GraftSuite {
   private val nFiles = 16
 
   private lazy val zdir: String = {
-    val dir = Files.createTempDirectory("graft-zorder").toString
+    val dir = tempDir("graft-zorder")
     val ev = Tables.t(spark, sfDir, "events")
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
     ZOrderLayout.write(ev, dir, "user_id", "value", nFiles = nFiles)
@@ -37,7 +37,7 @@ class ZOrderLayoutSpec extends GraftSuite {
   }
 
   private lazy val sortedDir: String = {
-    val dir = Files.createTempDirectory("graft-zorder-sorted").toString
+    val dir = tempDir("graft-zorder-sorted")
     val ev = Tables.t(spark, sfDir, "events")
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
     SortedLayout.write(ev, dir, "user_id", nFiles = nFiles)
