@@ -6,8 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * prints the contract JSON lines, the short total line last. A
   * query that throws is counted in that line's `failed` and the run exits
   * non-zero. A warmup pass (count over the two
-  * fact tables + one tiny agg/join/window) runs first so JIT/codegen warmup
-  * isn't charged to whichever query happens to execute first.
+  * fact tables + one tiny agg/join) runs first so JIT warmup isn't charged
+  * to whichever query happens to execute first. After each pass the number
+  * of generated classes it compiled goes to stderr
+  * (`[bench] pass N: codegen compiles=X`).
   */
 object Bench {
   type Query = (SparkSession, String) => DataFrame
@@ -27,8 +29,14 @@ object Bench {
     // two passes, best time per query: JIT/page-cache noise on a shared box
     // otherwise adds ±10% run-to-run variance to the recorded total. A query
     // that fails in either pass is reported as failed and never timed.
-    val (p1, f1) = pass(spark, sfDir, queries)
-    val (p2, f2) = pass(spark, sfDir, queries)
+    def countedPass(n: Int) = {
+      val c0 = compiles
+      val r = pass(spark, sfDir, queries)
+      System.err.println(s"[bench] pass $n: codegen compiles=${compiles - c0}")
+      r
+    }
+    val (p1, f1) = countedPass(1)
+    val (p2, f2) = countedPass(2)
     val failed = (f1 ++ f2).distinct
     val t2 = p2.toMap
     val results = p1.collect { case (name, t) if t2.contains(name) => name -> math.min(t, t2(name)) }
@@ -63,6 +71,10 @@ object Bench {
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }
+
+  /** Generated classes Janino has compiled in this JVM so far. */
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private def fmt3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
@@ -104,8 +116,11 @@ object Bench {
     (runs.collect { case Right(r) => r }, runs.collect { case Left(n) => n })
   }
 
-  /** Exercise the scan/agg/join/window/expression code paths once so codegen
-    * compilation and parquet footer caching are off the timed path. */
+  /** Exercise the scan/agg/join code paths once so the JIT has warmed them
+    * and the fact tables' relations are resolved (`Tables.t`) before the
+    * first timed query. Each query's own generated classes are compiled in
+    * pass 1 and, with the codegen cache `Graft.session` sizes to hold a
+    * whole pass, reused in pass 2. */
   private def warmup(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
     val li = sources.Tables.t(spark, sfDir, "lineitem")

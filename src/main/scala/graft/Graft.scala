@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
@@ -21,6 +23,15 @@ import org.apache.spark.sql.SparkSession
   *  - Thrift single-session mode (static, read only by the Thrift server):
   *    JDBC connections share this session's functions, views and confs
   *    instead of each getting a fresh one (see `server.SqlEndpoint`).
+  *  - Generated-code cache of 8,000 classes (static, JVM-wide): Spark's
+  *    default of 100 is smaller than one 12-query perfbench suite pass
+  *    (~233 classes), so every pass evicted the last and Janino recompiled
+  *    all of it. One 209-query Bench pass compiles 2,715 distinct classes
+  *    at sf0.01; 8,000 is about 3x that. Bench at sf0.01, 4 cores, 7 GB
+  *    heap, with `Graft.child` and the `sources.Tables` relation memo,
+  *    against Spark's default: pass-2 compiles 3,742 -> 44, total 104 s ->
+  *    56 s; after pass 1 and a full GC, heap 467 -> 725 MB and Metaspace
+  *    195 -> 216 MB.
   *
   * This is the only place a SparkSession is built: Bench, Verify, the dev
   * tools and the test base trait all call it, so the oracle gates the same
@@ -46,9 +57,34 @@ object Graft {
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       .config("spark.sql.hive.thriftServer.singleSession", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // one "No Partition Defined" WARN per global window per execution:
+    // hundreds per Bench pass, all expected (the ranked sets are small)
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", org.apache.logging.log4j.Level.ERROR)
     spark
+  }
+
+  private val children = new ConcurrentHashMap[(SparkSession, String), SparkSession]()
+
+  /** The child session of `parent` for `role`: built by the first call with
+    * `parent.newSession()` and `init` (function registrations, views, index
+    * or rollup registrations), then returned as is. A role names everything
+    * `init` installs, so callers put the dir or artifact path `init` reads
+    * into it. A child made per call would redo `init` and, because each
+    * session has its own class loader, recompile its generated code.
+    * Concurrent first calls for one role wait for a single `init`; an `init`
+    * that throws records nothing. Children of a stopped context are dropped.
+    * The one place a session is derived from another. */
+  def child(parent: SparkSession, role: String)(init: SparkSession => Unit): SparkSession = {
+    children.keySet.removeIf(_._1.sparkContext.isStopped)
+    children.computeIfAbsent((parent, role), _ => {
+      val s = parent.newSession()
+      init(s)
+      s
+    })
   }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * differ from Spark's (STRPOS is 0-based with -1 missing; SUBSTR/ARRAYSLICE
   * are 0-based end-exclusive; PERCENTILE takes 0–100).
   *
-  * Register on a DEDICATED `spark.newSession()` ("Pinot mode"): some aliases
+  * Register on a DEDICATED child session ("Pinot mode", `Graft.child`): some aliases
   * intentionally shadow Spark names with different semantics (percentile,
   * substr, concat), and a session-scoped registry keeps the ANSI surface of
   * the parent session untouched — see PinotCompatSpec.
@@ -1425,7 +1425,18 @@ object PinotFunctions {
     }
   }
 
-  /** A fresh Pinot-vocabulary session whose PARSER applies [[rewriteBroker]]
+  /** The Pinot-mode child of `spark` with every fixture under `dir` as a
+    * temp view: the one session all declared Pinot-vocabulary SQL queries
+    * run on. Built once per (parent, dir); the views follow the fixtures'
+    * data version ([[graft.sources.Tables.registerViews]]). */
+  def viewsSession(spark: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.SparkSession = {
+    val s = Graft.child(spark, s"pinot-views ${graft.sources.Fingerprint.canon(dir)}")(register)
+    graft.sources.Tables.registerViews(s, dir)
+    s
+  }
+
+  /** The Pinot-vocabulary child session whose PARSER applies [[rewriteBroker]]
     * (round 10): `session.sql("... timestampAdd(ts, 'MONTH', 1) ...")` and
     * the GAPFILL broker spelling work DIRECTLY through `session.sql`, not
     * just via the HTTP/JDBC endpoints — Spark's parser owns the
@@ -1437,12 +1448,12 @@ object PinotFunctions {
     * `graft.pinot.parserRewrite`, so the parent session and plain
     * `newSession()`s parse untouched; the endpoints' explicit
     * [[rewriteBroker]] stays (rewrites are idempotent — a renamed call
-    * contains no trigger name). */
+    * contains no trigger name). Built once per parent ([[Graft.child]]). */
   def newPinotSession(parent: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
     org.apache.spark.sql.graft.GraftBridge.installRewritingParser(parent, rewriteBroker)
-    val s = parent.newSession()
-    s.conf.set("graft.pinot.parserRewrite", "true")
-    register(s)
-    s
+    Graft.child(parent, "pinot-parser") { s =>
+      s.conf.set("graft.pinot.parserRewrite", "true")
+      register(s)
+    }
   }
 }

@@ -78,11 +78,22 @@ object SegmentPruning {
 
   private def fingerprintOf(dir: String): String = Fingerprint.of(Fingerprint.canon(dir))
 
+  /** The registered entry for (`dir`, `kind`, `col`, `nParts`) if its data
+    * version still matches the dir's, else the one `build` makes: a repeated
+    * registration of an unchanged layout opens no footer. */
+  private def manifest(dir: String, kind: String, col: String, nParts: Int = 0)(
+      build: String => Entry): Entry = {
+    val fp = fingerprintOf(dir)
+    Option(registry.get(Fingerprint.canon(dir))).getOrElse(Nil)
+      .find(e => kindOf(e) == kind && e.sortCol == col && e.nParts == nParts && e.fingerprint == fp)
+      .getOrElse(build(fp))
+  }
+
   /** Read the footer manifest for a SortedLayout-written `dir` and enable
     * transparent range+equality pruning on `sortCol` for this session. */
   def register(spark: SparkSession, dir: String, sortCol: String): Entry =
-    install(spark, Entry(Fingerprint.canon(dir), sortCol,
-      SortedLayout.fileRanges(spark, dir, sortCol), Nil, fingerprintOf(dir)))
+    install(spark, manifest(dir, "sorted", sortCol)(fp => Entry(Fingerprint.canon(dir), sortCol,
+      SortedLayout.fileRanges(spark, dir, sortCol), Nil, fp)))
 
   /** Driver-memory budget for a bloom registration. The manifest costs
     * `numBits/8` bytes per file (8 KiB at the default 2^16 bits): a 100 TB
@@ -113,8 +124,8 @@ object SegmentPruning {
       s"bloom manifest for $dir needs $need B ($nFiles files x " +
         s"${graft.sources.BloomLayout.DefaultNumBits / 8} B) > budget $maxManifestBytes B: " +
         "register per partition subdirectory (sharded manifests) or raise the budget")
-    install(spark, Entry(Fingerprint.canon(dir), col, Nil,
-      graft.sources.BloomLayout.buildManifest(spark, dir, col), fingerprintOf(dir)))
+    install(spark, manifest(dir, "bloom", col)(fp => Entry(Fingerprint.canon(dir), col, Nil,
+      graft.sources.BloomLayout.buildManifest(spark, dir, col), fp)))
   }
 
   /** Build the exact per-file partition-id manifest for a
@@ -124,9 +135,10 @@ object SegmentPruning {
     * positives; ranges keep the full scan, as on any hash layout). */
   def registerPartitioned(spark: SparkSession, dir: String, col: String,
       nPartitions: Int): Entry =
-    install(spark, Entry(Fingerprint.canon(dir), col, Nil, Nil, fingerprintOf(dir),
-      graft.sources.PartitionedLayout.buildManifest(spark, dir, col, nPartitions),
-      nPartitions))
+    install(spark, manifest(dir, "part", col, nPartitions)(fp =>
+      Entry(Fingerprint.canon(dir), col, Nil, Nil, fp,
+        graft.sources.PartitionedLayout.buildManifest(spark, dir, col, nPartitions),
+        nPartitions)))
 
   private def install(spark: SparkSession, entry: Entry): Entry = {
     registry.compute(entry.path, (_, old) => {

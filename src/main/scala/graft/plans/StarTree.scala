@@ -43,7 +43,7 @@ import org.apache.spark.sql.types._
   *
   * Safety: the rule fires only for fact paths registered in THIS session
   * (conf `spark.graft.startree.facts`, set by `register`). Like
-  * PinotFunctions, callers use a dedicated `spark.newSession()` so declared
+  * PinotFunctions, callers use a dedicated child session so declared
   * queries outside the star-tree surface can never be silently re-planned
   * (a rollup re-associates double sums, which could flip a rounding
   * boundary in an unrelated query's hashed output).
@@ -103,7 +103,7 @@ object StarTree {
       sketchCols: Seq[String] = Nil,
       sketchLgK: Int = 12): Spec = {
     import org.apache.spark.sql.functions._
-    val fact = spark.read.parquet(factParquetPath)
+    val fact = graft.sources.Tables.read(spark, factParquetPath)
     val fieldType = fact.schema.fields.map(f => f.name -> f.dataType).toMap
     require(dims.nonEmpty && dims.forall(fieldType.contains), s"dims must be fact columns: $dims")
     require(metrics.forall(m => fieldType.get(m).exists(metricTypeOk)),
@@ -133,7 +133,7 @@ object StarTree {
         .write.mode("overwrite").parquet(staging)
     }
 
-    val relation = spark.read.parquet(out).queryExecution.analyzed
+    val relation = graft.sources.Tables.read(spark, out).queryExecution.analyzed
       .collectFirst { case l: LogicalRelation => l }
       .getOrElse(sys.error(s"rollup scan did not analyze to a LogicalRelation: $out"))
     val spec = Spec(

@@ -507,9 +507,7 @@ object EventQueries {
   val eventsGapfillSql = Q(
     "q_events_gapfill_sql",
     (spark, dir) => {
-      val s = spark.newSession()
-      graft.PinotFunctions.register(s)
-      Tables.registerViews(s, dir)
+      val s = graft.PinotFunctions.viewsSession(spark, dir)
       s.sql(graft.PinotFunctions.rewriteGapfill(
         """SELECT event_type, ts AS t_ms, value AS v_filled FROM GAPFILL(
           |  'SELECT event_type, ts, value FROM events',
@@ -632,8 +630,8 @@ object EventQueries {
         tagged.filter(col("ts") >= col("d") - expr("INTERVAL 2 DAYS")).drop("d")
           .write.parquet(s"$out/realtime")
       }
-      val offline = spark.read.parquet(s"$stores/offline")
-      val realtime = spark.read.parquet(s"$stores/realtime")
+      val offline = Tables.read(spark, s"$stores/offline")
+      val realtime = Tables.read(spark, s"$stores/realtime")
       graft.streaming.HybridTable.view(offline, realtime, "ts")
         .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
         .agg(
@@ -659,9 +657,7 @@ object EventQueries {
   private val eventsFunnelCount = Q(
     "q_events_funnel_count",
     (spark, dir) => {
-      val s = spark.newSession()
-      graft.PinotFunctions.register(s)
-      Tables.registerViews(s, dir)
+      val s = graft.PinotFunctions.viewsSession(spark, dir)
       s.sql(
         """SELECT cohort, fc[0] AS n_step1, fc[1] AS n_step2, fc[2] AS n_step3
           |FROM (
@@ -697,9 +693,7 @@ object EventQueries {
   private val eventsFunnelTheta = Q(
     "q_events_funnel_theta",
     (spark, dir) => {
-      val s = spark.newSession()
-      graft.PinotFunctions.register(s)
-      Tables.registerViews(s, dir)
+      val s = graft.PinotFunctions.viewsSession(spark, dir)
       s.sql(
         """WITH ex AS (
           |  SELECT user_id % 4 AS cohort,

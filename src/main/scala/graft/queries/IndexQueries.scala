@@ -36,9 +36,9 @@ object IndexQueries {
     "q_idx_prune_range",
     (spark, dir) => {
       val sorted = sortedEventsCopy(spark, dir)
-      val s = spark.newSession()
-      SegmentPruning.register(s, sorted, "user_id")
-      s.read.parquet(sorted)
+      val s = graft.Graft.child(spark, s"q_idx_prune_range $sorted")(
+        SegmentPruning.register(_, sorted, "user_id"))
+      Tables.read(s, sorted)
         .filter(col("user_id") >= 10 && col("user_id") <= 20)
         .groupBy(col("event_type"))
         .agg(
@@ -74,9 +74,9 @@ object IndexQueries {
     (spark, dir) => {
       val nPartitions = 8
       val part = partitionedEventsCopy(spark, dir, nPartitions)
-      val s = spark.newSession()
-      SegmentPruning.registerPartitioned(s, part, "event_type", nPartitions)
-      s.read.parquet(part)
+      val s = graft.Graft.child(spark, s"q_idx_prune_partition $part")(
+        SegmentPruning.registerPartitioned(_, part, "event_type", nPartitions))
+      Tables.read(s, part)
         .filter(col("event_type").isin("click", "purchase"))
         .groupBy(col("event_type"))
         .agg(
@@ -176,10 +176,11 @@ object IndexQueries {
     "q_idx_prune_multi",
     (spark, dir) => {
       val sorted = sortedEventsCopy(spark, dir)
-      val s = spark.newSession()
-      SegmentPruning.register(s, sorted, "user_id")
-      SegmentPruning.registerBloom(s, sorted, "event_type")
-      s.read.parquet(sorted)
+      val s = graft.Graft.child(spark, s"q_idx_prune_multi $sorted") { s =>
+        SegmentPruning.register(s, sorted, "user_id")
+        SegmentPruning.registerBloom(s, sorted, "event_type")
+      }
+      Tables.read(s, sorted)
         .filter(col("user_id") >= 5 && col("user_id") <= 40 &&
           col("event_type") === "purchase")
         .groupBy(col("user_id"))
@@ -215,9 +216,9 @@ object IndexQueries {
     "q_idx_prune_zorder",
     (spark, dir) => {
       val z = zorderEventsCopy(spark, dir)
-      val s = spark.newSession()
-      graft.sources.ZOrderLayout.register(s, z, "user_id", "value")
-      s.read.parquet(z)
+      val s = graft.Graft.child(spark, s"q_idx_prune_zorder $z")(
+        graft.sources.ZOrderLayout.register(_, z, "user_id", "value"))
+      Tables.read(s, z)
         .filter(col("user_id").between(10, 25) && col("value").between(20.0, 40.0))
         .groupBy(col("event_type"))
         .agg(

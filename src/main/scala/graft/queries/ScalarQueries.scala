@@ -310,9 +310,7 @@ object ScalarQueries {
   private val epochBucketFuncs = Q(
     "q_scalar_epoch_bucket",
     (spark, dir) => {
-      val s = spark.newSession()
-      graft.PinotFunctions.register(s)
-      Tables.registerViews(s, dir)
+      val s = graft.PinotFunctions.viewsSession(spark, dir)
       s.sql(
         """SELECT toEpochMinutesBucket(ts, 15) AS m15_idx,
           |  toEpochMillis(fromEpochMinutesBucket(toEpochMinutesBucket(ts, 15), 15)) AS m15_start_ms,
@@ -614,9 +612,7 @@ object ScalarQueries {
   private val pinotStrings = Q(
     "q_scalar_pinot_strings",
     (spark, dir) => {
-      val s = spark.newSession()
-      graft.PinotFunctions.register(s)
-      Tables.registerViews(s, dir)
+      val s = graft.PinotFunctions.viewsSession(spark, dir)
       s.sql(
         """SELECT n_name,
           |  array_join(split(n_name, 'I'), '|') AS sp,
@@ -648,9 +644,7 @@ object ScalarQueries {
   private val epochFields = Q(
     "q_scalar_epoch_fields",
     (spark, dir) => {
-      val s = spark.newSession()
-      graft.PinotFunctions.register(s)
-      Tables.registerViews(s, dir)
+      val s = graft.PinotFunctions.viewsSession(spark, dir)
       s.sql(
         """SELECT event_type,
           |  dayOfWeek(unix_millis(ts)) AS dow,
@@ -691,9 +685,7 @@ object ScalarQueries {
   private val pinotMath = Q(
     "q_scalar_pinot_math",
     (spark, dir) => {
-      val s = spark.newSession()
-      graft.PinotFunctions.register(s)
-      Tables.registerViews(s, dir)
+      val s = graft.PinotFunctions.viewsSession(spark, dir)
       s.sql(
         """SELECT p_partkey,
           |  ADD(p_size, 1) AS a,
@@ -740,9 +732,7 @@ object ScalarQueries {
   private val tsArith = Q(
     "q_scalar_ts_arith",
     (spark, dir) => {
-      val s = spark.newSession()
-      graft.PinotFunctions.register(s)
-      Tables.registerViews(s, dir)
+      val s = graft.PinotFunctions.viewsSession(spark, dir)
       val refMs = java.time.Instant.parse("2002-12-31T00:00:00Z").toEpochMilli
       s.sql(graft.PinotFunctions.rewriteBroker(
         s"""SELECT o_orderkey,

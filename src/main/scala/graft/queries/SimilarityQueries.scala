@@ -443,9 +443,7 @@ object SimilarityQueries {
     "q_sim_vector_similarity",
     (spark, dir) => {
       val idxDir = annIndex(spark, dir)
-      val s = spark.newSession()
-      graft.PinotFunctions.register(s)
-      Tables.registerViews(s, dir)
+      val s = graft.PinotFunctions.viewsSession(spark, dir)
       graft.plans.VectorSimilarity.register(
         s, s"$dir/embeddings.parquet", "embedding", "vec_id", idxDir, probes = 2)
       val qv = Tables.t(spark, dir, "embeddings").filter(col("vec_id") === 0)

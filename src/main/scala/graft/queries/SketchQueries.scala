@@ -625,9 +625,7 @@ object SketchQueries {
   private val sketchThetaSql = Q(
     "q_sketch_theta_sql",
     (spark, dir) => {
-      val s = spark.newSession()
-      graft.PinotFunctions.register(s)
-      Tables.registerViews(s, dir)
+      val s = graft.PinotFunctions.viewsSession(spark, dir)
       s.sql(
         """SELECT DISTINCT_COUNT_THETA_SKETCH(user_id, 'nominalEntries=65536',
           |         'event_type = ''view''', 'event_type = ''click''',

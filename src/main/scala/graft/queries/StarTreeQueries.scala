@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.plans.StarTree
+import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
 /** Star-tree-index-served aggregations (plans/StarTree): Pinot's signature
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
   * runs the same SQL over the raw table, so the gate proves the routed
   * result is value-identical to the full scan.
   *
-  * Like PinotFunctions, the star-tree session is a dedicated `newSession()`:
+  * Like PinotFunctions, the star-tree session is a dedicated child session:
   * routing is conf-scoped there, so no other declared query can be silently
   * re-planned (a rollup re-associates double sums — harmless here because
   * the hashed metrics are exact: l_quantity is integral-valued, min/max and
@@ -20,8 +21,12 @@ import org.apache.spark.sql.functions._
   */
 object StarTreeQueries {
 
+  /** The one routed child of `spark`. The rollup is registered on every
+    * call because the star-tree registry is JVM-wide and keyed by fact path
+    * alone, so another session may have replaced the entry; a warm
+    * registration runs no Spark job. */
   private def routedSession(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val s = spark.newSession()
+    val s = graft.Graft.child(spark, "startree")(_ => ())
     StarTree.register(s, s"$dir/lineitem.parquet",
       dims = Seq("l_returnflag", "l_linestatus"),
       metrics = Seq("l_quantity", "l_extendedprice"),
@@ -35,7 +40,7 @@ object StarTreeQueries {
     "q_startree_rollup",
     (spark, dir) => {
       val s = routedSession(spark, dir)
-      s.read.parquet(s"$dir/lineitem.parquet")
+      Tables.t(s, dir, "lineitem")
         .filter(col("l_returnflag").isin("A", "R"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -67,7 +72,7 @@ object StarTreeQueries {
     "q_startree_subset",
     (spark, dir) => {
       val s = routedSession(spark, dir)
-      s.read.parquet(s"$dir/lineitem.parquet")
+      Tables.t(s, dir, "lineitem")
         .groupBy(col("l_linestatus"))
         .agg(
           count(lit(1)).as("cnt"),
@@ -99,12 +104,12 @@ object StarTreeQueries {
     (spark, dir) => {
       import graft.expressions.ThetaSketch._
       val s = routedSession(spark, dir)
-      val est = s.read.parquet(s"$dir/lineitem.parquet")
+      val est = Tables.t(s, dir, "lineitem")
         .groupBy(col("l_linestatus"))
         .agg(
           hll_sketch_estimate(hll_sketch_agg(col("l_partkey"), lit(12))).as("hll_est"),
           thetaEstimate(thetaSketchAgg(col("l_partkey"))).as("theta_est"))
-      val exact = s.read.parquet(s"$dir/lineitem.parquet")
+      val exact = Tables.t(s, dir, "lineitem")
         .select(col("l_linestatus"), col("l_partkey")).distinct()
         .groupBy(col("l_linestatus")).agg(count(lit(1)).as("exact_parts"))
       def within(estC: String, tol: Double) =

@@ -4,8 +4,10 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guard against drift: `Graft.session` is the only code that builds a
-  * SparkSession and `Graft.cores` the only reader of the core-count env
-  * var, so Bench, Verify, the tools and the tests all share one config;
+  * SparkSession, `Graft.child` the only engine code that derives one from
+  * another (so a query closure cannot make a session per call), and
+  * `Graft.cores` the only reader of the core-count env var, so Bench,
+  * Verify, the tools and the tests all share one config;
   * `Fingerprint` is the only code that places derived artifacts under the
   * JVM temp dir or hashes with murmur, so every artifact has one key rule.
   * Comment lines are ignored; the search strings are assembled so this file
@@ -16,17 +18,20 @@ class SessionFactorySpec extends AnyFunSuite {
   private val coresVar = "SPARK_GRAFT" + "_CPUS"
   private val tmpdirProp = "java.io" + ".tmpdir"
   private val murmurCall = "MurmurHash3" + ".stringHash"
+  private val newSessionCall = "newSession" + "()"
 
   private def scalaFiles(dir: File): Seq[File] =
     Option(dir.listFiles).toSeq.flatten.flatMap { f =>
       if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     }
 
-  private lazy val sources = Seq("src/main", "src/test").flatMap(d => scalaFiles(new File(d)))
+  private lazy val mainSources = scalaFiles(new File("src/main"))
+  private lazy val sources = mainSources ++ scalaFiles(new File("src/test"))
 
-  /** Names of the files whose code (comment lines dropped, whitespace
-    * removed so a call split across lines still matches) contains `needle`. */
-  private def filesWithCode(needle: String): Set[String] = sources.filter { f =>
+  /** Names of the files in `in` whose code (comment lines dropped,
+    * whitespace removed so a call split across lines still matches)
+    * contains `needle`. */
+  private def filesWithCode(needle: String, in: Seq[File] = sources): Set[String] = in.filter { f =>
     val src = scala.io.Source.fromFile(f, "UTF-8")
     val code = try src.getLines().map(_.trim).filterNot { l =>
       l.startsWith("//") || l.startsWith("*") || l.startsWith("/*")
@@ -36,6 +41,10 @@ class SessionFactorySpec extends AnyFunSuite {
 
   test("only Graft.scala builds a SparkSession") {
     assert(filesWithCode(builderCall) === Set("Graft.scala"))
+  }
+
+  test("only Graft.scala derives a session from another in src/main") {
+    assert(filesWithCode(newSessionCall, mainSources) === Set("Graft.scala"))
   }
 
   test("only Graft.scala reads the core-count env var") {
