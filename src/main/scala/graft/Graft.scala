@@ -32,6 +32,11 @@ import org.apache.spark.sql.SparkSession
   *    against Spark's default: pass-2 compiles 3,742 -> 44, total 104 s ->
   *    56 s; after pass 1 and a full GC, heap 467 -> 725 MB and Metaspace
   *    195 -> 216 MB.
+  *  - Runtime optimizer rule `plans.SmallSortRule`: a global sort or an
+  *    unpartitioned window over small materialized AQE stages runs in one
+  *    partition, with no range-sampling job and no range shuffle. Rules
+  *    that change partitioning live in these extensions, so every session
+  *    and every `newSession()` child plans the same way.
   *
   * This is the only place a SparkSession is built: Bench, Verify, the dev
   * tools and the test base trait all call it, so the oracle gates the same
@@ -59,6 +64,7 @@ object Graft {
       .config("spark.sql.hive.thriftServer.singleSession", "true")
       .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.ui.enabled", "false")
+      .withExtensions(_.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortRule))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // one "No Partition Defined" WARN per global window per execution:

@@ -41,8 +41,10 @@ import org.apache.spark.sql.types._
   * expressions over metrics, filters touching non-dimension columns) leaves
   * the plan untouched — fall back to the fact scan, never approximate.
   *
-  * Safety: the rule fires only for fact paths registered in THIS session
-  * (conf `spark.graft.startree.facts`, set by `register`). Like
+  * Safety: the rule fires only for rollups registered in THIS session
+  * (conf `spark.graft.startree.rollups`, set by `register`). The registry
+  * is JVM-wide but keyed by rollup, so sessions that register different
+  * rollups of one fact each keep routing to their own. Like
   * PinotFunctions, callers use a dedicated child session so declared
   * queries outside the star-tree surface can never be silently re-planned
   * (a rollup re-associates double sums, which could flip a rounding
@@ -50,7 +52,8 @@ import org.apache.spark.sql.types._
   */
 object StarTree {
 
-  /** One registered star-tree: canonical fact path → rollup scan.
+  /** One registered star-tree: a canonical fact path, the fact's data
+    * version the rollup was built from, and the rollup scan.
     * `sketchCols` are Pinot functionColumnPair analogs
     * (DISTINCTCOUNTHLL__col / DISTINCTCOUNTTHETASKETCH__col): the rollup
     * stores one DataSketches HLL and one theta sketch per cell per column,
@@ -58,6 +61,7 @@ object StarTree {
     * of the stored state. */
   final case class Spec(
       factPath: String,
+      factVersion: String,
       dims: Seq[String],
       metrics: Seq[String],
       sketchCols: Seq[String],
@@ -65,9 +69,12 @@ object StarTree {
       rollupPath: String,
       relation: LogicalRelation)
 
+  /** Rollup path → spec. A rollup path is a [[Fingerprint.buildOnce]]
+    * artifact, so it names the fact, its data version and the whole build
+    * configuration: one entry can never stand for another. */
   private val registry = new ConcurrentHashMap[String, Spec]()
 
-  private[graft] val ConfFacts = "spark.graft.startree.facts"
+  private[graft] val ConfRollups = "spark.graft.startree.rollups"
 
   // rollup column naming (prefixed so they can never collide with fact cols)
   private[graft] def cntCol: String = "__st_cnt"
@@ -88,7 +95,7 @@ object StarTree {
   }
 
   /** Build (or reuse) the materialized rollup for `factParquetPath` and
-    * enable transparent routing for this session. Returns the spec.
+    * enable transparent routing to it in this session. Returns the spec.
     *
     * The rollup is a [[Fingerprint.buildOnce]] artifact keyed on the fact
     * path, the configuration and the fact data version, so a regenerated
@@ -103,6 +110,8 @@ object StarTree {
       sketchCols: Seq[String] = Nil,
       sketchLgK: Int = 12): Spec = {
     import org.apache.spark.sql.functions._
+    // read before the build: a fact rewritten meanwhile never matches it
+    val factVersion = Fingerprint.of(factParquetPath)
     val fact = graft.sources.Tables.read(spark, factParquetPath)
     val fieldType = fact.schema.fields.map(f => f.name -> f.dataType).toMap
     require(dims.nonEmpty && dims.forall(fieldType.contains), s"dims must be fact columns: $dims")
@@ -136,22 +145,22 @@ object StarTree {
     val relation = graft.sources.Tables.read(spark, out).queryExecution.analyzed
       .collectFirst { case l: LogicalRelation => l }
       .getOrElse(sys.error(s"rollup scan did not analyze to a LogicalRelation: $out"))
-    val spec = Spec(
-      Fingerprint.canon(factParquetPath), dims, metrics, sketchCols, sketchLgK, out, relation)
-    registry.put(spec.factPath, spec)
+    val spec = Spec(Fingerprint.canon(factParquetPath), factVersion,
+      dims, metrics, sketchCols, sketchLgK, out, relation)
+    registry.put(out, spec)
 
-    // per-session opt-in: the rule only routes fact paths listed in THIS
+    // per-session opt-in: the rule only routes to rollups listed in THIS
     // session's conf, so a global registry entry is inert elsewhere
-    val enabled = spark.conf.get(ConfFacts, "")
-    if (!enabled.split(';').contains(spec.factPath))
-      spark.conf.set(ConfFacts, if (enabled.isEmpty) spec.factPath else s"$enabled;${spec.factPath}")
+    val enabled = spark.conf.get(ConfRollups, "")
+    if (!enabled.split(';').contains(out))
+      spark.conf.set(ConfRollups, if (enabled.isEmpty) out else s"$enabled;$out")
     if (!spark.experimental.extraOptimizations.contains(StarTreeRoutingRule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ StarTreeRoutingRule
     spec
   }
 
-  private[plans] def specFor(path: String): Option[Spec] = Option(registry.get(path))
+  private[plans] def specFor(rollupPath: String): Option[Spec] = Option(registry.get(rollupPath))
 
   private[graft] def clear(): Unit = registry.clear()
 }
@@ -165,12 +174,12 @@ object StarTree {
 object StarTreeRoutingRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = conf.getConfString(StarTree.ConfFacts, "")
+    val enabled = conf.getConfString(StarTree.ConfRollups, "")
     if (enabled.isEmpty) return plan
-    val facts = enabled.split(';').toSet
+    val specs = enabled.split(';').toSeq.flatMap(StarTree.specFor)
     plan.transformUp {
       case agg @ Aggregate(_, _, _, _) =>
-        rewrite(agg, facts).getOrElse(agg)
+        rewrite(agg, specs).getOrElse(agg)
     }
   }
 
@@ -193,12 +202,16 @@ object StarTreeRoutingRule extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def rewrite(agg: Aggregate, facts: Set[String]): Option[LogicalPlan] = {
-    for {
-      (cond, scan) <- decompose(agg.child)
-      path <- scanPath(scan)
-      if facts.contains(path)
-      spec <- StarTree.specFor(path)
+  /** The aggregate over the first of this session's rollups of the scanned
+    * fact's current data version that serves it. */
+  private def rewrite(agg: Aggregate, specs: Seq[StarTree.Spec]): Option[LogicalPlan] = {
+    val rewrites = for {
+      (cond, scan) <- decompose(agg.child).iterator
+      path <- scanPath(scan).iterator
+      version = Fingerprint.of(path)
+      spec <- specs.iterator
+      // a rollup of an older version of the fact is never served
+      if spec.factPath == path && spec.factVersion == version
       dims = spec.dims.toSet
       metrics = spec.metrics.toSet
       // grouping: attribute-only, all dimensions
@@ -226,6 +239,7 @@ object StarTreeRoutingRule extends Rule[LogicalPlan] {
       }
       Aggregate(newGrouping, newAggExprs, newChild)
     }
+    rewrites.nextOption()
   }
 
   private def traverseOption[A, B](xs: Seq[A])(f: A => Option[B]): Option[Seq[B]] = {

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Q
 import graft.plans.StarTree
-import graft.sources.Tables
+import graft.sources.{Fingerprint, Tables}
 import org.apache.spark.sql.functions._
 
 /** Star-tree-index-served aggregations (plans/StarTree): Pinot's signature
@@ -21,17 +21,16 @@ import org.apache.spark.sql.functions._
   */
 object StarTreeQueries {
 
-  /** The one routed child of `spark`. The rollup is registered on every
-    * call because the star-tree registry is JVM-wide and keyed by fact path
-    * alone, so another session may have replaced the entry; a warm
-    * registration runs no Spark job. */
+  /** The routed child of `spark` for `dir`'s lineitem, built once per fact
+    * data version: the role names the fact's version, so a rewritten
+    * fixture gets a new child and a rollup of the new data. */
   private def routedSession(spark: org.apache.spark.sql.SparkSession, dir: String) = {
-    val s = graft.Graft.child(spark, "startree")(_ => ())
-    StarTree.register(s, s"$dir/lineitem.parquet",
-      dims = Seq("l_returnflag", "l_linestatus"),
-      metrics = Seq("l_quantity", "l_extendedprice"),
-      sketchCols = Seq("l_partkey"))
-    s
+    val fact = s"$dir/lineitem.parquet"
+    graft.Graft.child(spark, s"startree ${Fingerprint.canon(fact)} ${Fingerprint.of(fact)}")(
+      StarTree.register(_, fact,
+        dims = Seq("l_returnflag", "l_linestatus"),
+        metrics = Seq("l_quantity", "l_extendedprice"),
+        sketchCols = Seq("l_partkey")))
   }
 
   /** Full-dimension grouping with a dimension filter: the star-tree's home

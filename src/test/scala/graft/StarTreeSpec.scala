@@ -1,7 +1,7 @@
 package graft
 
 import graft.plans.StarTree
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Star-tree index analog (plans/StarTree): materialized rollup + Catalyst
@@ -116,6 +116,46 @@ class StarTreeSpec extends GraftSuite {
     assert(!df.queryExecution.executedPlan.toString.contains("graft_startree_"))
   }
 
+  test("two sessions routing different rollups of one fact both stay routed") {
+    val a = routed() // dims (d1, d2), metrics (m1, m2)
+    val b = spark.newSession()
+    tempRollups +=
+      StarTree.register(b, factPath, dims = Seq("d2"), metrics = Seq("m2")).rollupPath
+    def byD1(x: SparkSession) =
+      x.read.parquet(factPath).groupBy("d1").agg(sum("m1").as("s1")).orderBy("d1")
+    def byD2(x: SparkSession) =
+      x.read.parquet(factPath).groupBy("d2").agg(max("m2").as("x2")).orderBy("d2")
+    for ((s, shape) <- Seq[(SparkSession, SparkSession => DataFrame)](a -> byD1, b -> byD2)) {
+      val df = shape(s)
+      assert(df.queryExecution.executedPlan.toString.contains("graft_startree_"),
+        s"a later registration on the same fact un-routed this session:\n${df.queryExecution.executedPlan}")
+      assert(df.collect().toSeq === shape(spark).collect().toSeq)
+    }
+  }
+
+  test("a rewritten fact is never served from a rollup of its old data") {
+    val path = tempDir("graft-st-rw") + "/fact"
+    def write(n: Long): Unit = spark.range(0, n)
+      .select((col("id") % 3).cast("string").as("d1"), col("id").as("m1"))
+      .write.mode("overwrite").parquet(path)
+    def shape(x: SparkSession) =
+      x.read.parquet(path).groupBy("d1").agg(sum("m1").as("s")).orderBy("d1")
+    def routes(df: DataFrame) = df.queryExecution.executedPlan.toString.contains("graft_startree_")
+    val s = spark.newSession()
+    def register(): Unit = tempRollups +=
+      StarTree.register(s, path, dims = Seq("d1"), metrics = Seq("m1")).rollupPath
+
+    write(30)
+    register()
+    assert(routes(shape(s)))
+    write(60)
+    assert(!routes(shape(s)), "routed to the rollup of the old data")
+    assert(shape(s).collect().toSeq === shape(spark).collect().toSeq)
+    register()
+    assert(routes(shape(s)))
+    assert(shape(s).collect().toSeq === shape(spark).collect().toSeq)
+  }
+
   test("lineitem rollup: scan-size reduction and value parity on the declared query shape") {
     val s = spark.newSession()
     val li = s"$sfDir/lineitem.parquet"
@@ -150,8 +190,7 @@ class StarTreeSpec extends GraftSuite {
 
   test("sketch measures: hll/theta aggs route to union-merges of stored cells, bit-equal to raw") {
     import graft.expressions.ThetaSketch._
-    // separate fact (the shared planted fact is registered without sketch
-    // cols by other tests; registry is keyed by path)
+    // a fact whose distinct counts make every merge below checkable
     val path = tempDir("graft-st-sk") + "/fact"
     // 3 groups x 500 distinct u each (gcd(3,500)=1 => every residue appears)
     spark.range(0, 3000).select(

@@ -2,47 +2,30 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import graft.plans.SegmentPruning
 import graft.sources.{Fingerprint, SortedLayout, Tables}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, count, lit, row_number, sum}
+import org.apache.spark.sql.internal.SQLConf
 
 /** A repeated execution redoes none of the one-time work of the first: no
   * Janino compile, no Spark job while the query is built (relations,
   * child sessions and pruning manifests are reused), and every reuse still
-  * follows a changed data version. */
+  * follows a changed data version. A small global sort or unpartitioned
+  * window runs in one partition (`plans.SmallSortRule`), without the
+  * range-sampling and range-shuffle jobs. */
 class WarmExecutionSpec extends GraftSuite {
 
-  private val Sentinel = "warm-execution-sentinel"
+  private def jobsOf[T](body: => T): (T, Int) = Bench.jobsOf(spark)(body)
 
-  /** Spark jobs `body` launches. The listener bus delivers in order, so
-    * once a sentinel job run after `body` is seen, every job of `body` has
-    * been counted. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val started = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = started.put(
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(Sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      var n = 0
-      var d = started.poll(60, TimeUnit.SECONDS)
-      while (d != Sentinel) {
-        assert(d != null, "listener saw no sentinel job")
-        n += 1
-        d = started.poll(60, TimeUnit.SECONDS)
-      }
-      (out, n)
-    } finally sc.removeSparkListener(listener)
+  /** The plan AQE finally ran, query stages included. */
+  private def finalPlan(df: DataFrame): String = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan.toString
+    case p => p.toString
   }
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -114,5 +97,62 @@ class WarmExecutionSpec extends GraftSuite {
     assert(again ne first)
     assert(again.ranges.map(_.min.asInstanceOf[java.lang.Long].longValue).min === 1000L)
     assert(Tables.read(s, dir).filter(col("k") < 1100).count() === 100L)
+  }
+
+  test("a warm q_events_by_day runs at most 3 jobs and sorts without a range exchange") {
+    val q = SparkEntry.queries("q_events_by_day")
+    val first = q(spark, sfDir).collect().toSeq
+    val df = q(spark, sfDir)
+    val (rows, jobs) = jobsOf(df.collect().toSeq)
+    assert(jobs <= 3, s"jobs:\n${finalPlan(df)}")
+    assert(!finalPlan(df).contains("rangepartitioning"), finalPlan(df))
+    assert(rows === first)
+  }
+
+  test("a sort larger than AQE's one-partition size keeps its range exchange") {
+    val key = SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE.key
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1b")
+    try {
+      val df = SparkEntry.queries("q_events_by_day")(spark, sfDir)
+      df.collect()
+      assert(finalPlan(df).contains("rangepartitioning"), finalPlan(df))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("a one-partition sort over many duplicate keys keeps every row, in key order") {
+    // 20,000 ids in 500 groups of 40; 7 sort keys, so each repeats ~71 times
+    val df = spark.range(0, 20000)
+      .groupBy((col("id") % 500).as("g"))
+      .agg(count(lit(1)).as("n"), sum(col("id")).as("s"))
+      .withColumn("k", col("g") % 7)
+      .orderBy(col("k"))
+    val rows = df.collect().toSeq
+    assert(!finalPlan(df).contains("rangepartitioning"), finalPlan(df))
+    val keys = rows.map(_.getAs[Long]("k"))
+    assert(keys.zip(keys.drop(1)).forall { case (a, b) => a <= b }, "keys out of order")
+    val got = rows.map(r => (r.getAs[Long]("g"), r.getAs[Long]("n"), r.getAs[Long]("s"))).sorted
+    val expected = (0L until 500L).map(g => (g, 40L, 40L * g + 500L * (0L until 40L).sum))
+    assert(got === expected)
+  }
+
+  test("a Graft.child session sorts small input in one partition too") {
+    val child = Graft.child(spark, "warm-execution small sort")(_ => ())
+    val df = child.range(0, 1000).groupBy((col("id") % 10).as("g")).count().orderBy(col("g"))
+    assert(df.collect().map(_.getLong(0)).toSeq === (0L until 10L))
+    assert(!finalPlan(df).contains("rangepartitioning"), finalPlan(df))
+  }
+
+  test("a global window over a small aggregate plans no SinglePartition exchange") {
+    val agg = spark.range(0, 1000).groupBy((col("id") % 50).as("g")).agg(sum(col("id")).as("s"))
+    val ranked = agg.withColumn("r", row_number().over(Window.orderBy(col("s").desc)))
+    // the whole ranking, and a top-5 that plans a WindowGroupLimit under it
+    for ((df, n) <- Seq(ranked -> 50, ranked.filter(col("r") <= 5) -> 5)) {
+      val rows = df.collect()
+      assert(!finalPlan(df).contains("SinglePartition"), finalPlan(df))
+      assert(rows.map(_.getAs[Int]("r")).sorted.toSeq === (1 to n))
+      // s = 20 * g + 50 * (0 + ... + 19) grows with g: rank 1 is g = 49
+      assert(rows.forall(r => r.getAs[Long]("g") === 50L - r.getAs[Int]("r")))
+    }
   }
 }
