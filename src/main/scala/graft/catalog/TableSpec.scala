@@ -176,12 +176,12 @@ object TableSpec {
 
   /** Wire a Pinot `tableIndexConfig` (the reference's own config shape —
     * `kinesisTableConfigFile.json:12-27`) onto a data directory: the
-    * broker-pruning families register into
-    * [[graft.plans.SegmentPruningRule]] so a user's table config turns on
+    * broker-pruning families register as this session's routes
+    * ([[graft.plans.Routes]]) so a user's table config turns on
     * the same transparent segment pruning the reference's broker performs —
     * `sortedColumn` → footer range manifest, `bloomFilterColumns` →
     * per-file bloom manifests (budget-guarded), `segmentPartitionConfig` →
-    * exact partition-id manifests. Round 7: the registry holds ONE entry
+    * exact partition-id manifests. Round 7: a session holds ONE route
     * per (directory, kind, column), so EVERY family in the config
     * registers — a table with sortedColumn AND bloomFilterColumns (the
     * normal Pinot shape) prunes by the INTERSECTION of both decisions.

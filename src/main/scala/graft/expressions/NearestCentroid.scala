@@ -32,6 +32,14 @@ import org.apache.spark.sql.types._
   * exhaustive form (NearestCentroidParitySpec pits the two against each
   * other; the DuckDB oracles replay the exhaustive argmin).
   *
+  * Validated envelope of the guard: NearestCentroidParitySpec checks
+  * bit-identity at dims 3 to 64 (k up to 257), with coordinates uniform in
+  * [-10, 10] (on a 0.25/0.5 grid for the tie cases) and in [-2, 2] for the
+  * guard-band check against a plain exhaustive loop. The rounding error of
+  * the distance fold grows with dim and with coordinate magnitude, so a
+  * caller beyond dim 64 or |x| ≈ 10 should re-run that spec at its own
+  * operating point before relying on bit-identity.
+  *
   * Member distances are the same sequential float64 (x−y)² fold as
   * [[VectorOps.minkowski]] (p = 2) in array order — every evaluated
   * distance is bit-identical to the old path, and the winner is always

@@ -1,25 +1,22 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
-import graft.sources.{Fingerprint, SortedLayout}
+import graft.sources.{BloomLayout, Fingerprint, PartitionedLayout, SortedLayout}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, LogicalRelation}
 
 /** Transparent segment pruning — the Pinot BROKER behavior for sorted
   * columns: the broker consults per-segment [min,max] metadata and routes a
   * query only to the segments whose range can match; the query itself is
   * unchanged (`/root/reference/README.md:22` "optimizes segment pruning").
-  * `sources/SortedLayout` provides the layout + explicit `prunedRead` API;
-  * this rule makes the same decision AUTOMATICALLY for any query shape.
+  * `sources/SortedLayout` provides the layout and the footer-range decision
+  * ([[SortedLayout.pruneFiles]]); this rule applies it to any query shape.
   *
   * [[SegmentPruning.register]] reads the footer manifest once (bytes per
-  * file, like Pinot's segment metadata) and installs
-  * [[SegmentPruningRule]] on the session. The rule then rewrites
+  * file, like Pinot's segment metadata) into the session's [[Routes]]. The
+  * session's rule then rewrites
   *
   *   Filter(.. sortCol ⋈ literal .., scan(path))   ⋈ ∈ {=, >, >=, <, <=}
   *
@@ -38,11 +35,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
   * bloom probe hashes through a 1-row Spark job at planning time — the
   * same driver-side metadata cost class as the footer compare.
   *
-  * Session-gated like StarTree: only fact paths registered in THIS
-  * session's conf (`spark.graft.segprune.facts`) are rewritten, and the
-  * manifest is fingerprinted against the file listing (count+bytes+mtimes)
-  * at registration, so a rewritten/regenerated layout deregisters itself
-  * rather than serving stale prune decisions.
+  * Routes are per session and carry the layout's data version, so a
+  * rewritten/regenerated layout stops pruning rather than serving stale
+  * decisions ([[Routes]]).
   *
   * Scale posture: the decision is O(|files|) over driver-resident (min,max)
   * pairs — a few hundred KB at 100 TB — and turns point/range lookups from
@@ -51,49 +46,13 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
   */
 object SegmentPruning {
 
-  /** One registered prunable layout: footer ranges (sorted layout), bloom
-    * bitsets (hash layout), or exact partition-id sets (partitioned layout)
-    * for `col` — any list may be empty. */
-  final case class Entry(
-      path: String,
-      sortCol: String,
-      ranges: Seq[SortedLayout.FileRange],
-      blooms: Seq[graft.sources.BloomLayout.FileBloom],
-      fingerprint: String,
-      parts: Seq[graft.sources.PartitionedLayout.FileParts] = Nil,
-      nParts: Int = 0)
-
-  // path → registered entries (round 7: a dir can carry SEVERAL index
-  // manifests — e.g. footer ranges on the sort column AND a bloom on a
-  // second column, the normal Pinot table shape of sortedColumn +
-  // bloomFilterColumns — keyed by (kind, column) within the path; prune()
-  // INTERSECTS every applicable decision)
-  private val registry = new ConcurrentHashMap[String, List[Entry]]()
-
-  private def kindOf(e: Entry): String =
-    if (e.ranges.nonEmpty) "sorted" else if (e.blooms.nonEmpty) "bloom"
-    else if (e.parts.nonEmpty) "part" else "none"
-
-  private[graft] val ConfFacts = "spark.graft.segprune.facts"
-
-  private def fingerprintOf(dir: String): String = Fingerprint.of(Fingerprint.canon(dir))
-
-  /** The registered entry for (`dir`, `kind`, `col`, `nParts`) if its data
-    * version still matches the dir's, else the one `build` makes: a repeated
-    * registration of an unchanged layout opens no footer. */
-  private def manifest(dir: String, kind: String, col: String, nParts: Int = 0)(
-      build: String => Entry): Entry = {
-    val fp = fingerprintOf(dir)
-    Option(registry.get(Fingerprint.canon(dir))).getOrElse(Nil)
-      .find(e => kindOf(e) == kind && e.sortCol == col && e.nParts == nParts && e.fingerprint == fp)
-      .getOrElse(build(fp))
-  }
-
   /** Read the footer manifest for a SortedLayout-written `dir` and enable
     * transparent range+equality pruning on `sortCol` for this session. */
-  def register(spark: SparkSession, dir: String, sortCol: String): Entry =
-    install(spark, manifest(dir, "sorted", sortCol)(fp => Entry(Fingerprint.canon(dir), sortCol,
-      SortedLayout.fileRanges(spark, dir, sortCol), Nil, fp)))
+  def register(spark: SparkSession, dir: String, sortCol: String): Route.Footer = {
+    val path = Fingerprint.canon(dir)
+    Routes.reuseOrAdd[Route.Footer](spark, path)(_.col == sortCol)(version =>
+      Route.Footer(path, version, sortCol, SortedLayout.fileRanges(spark, dir, sortCol)))
+  }
 
   /** Driver-memory budget for a bloom registration. The manifest costs
     * `numBits/8` bytes per file (8 KiB at the default 2^16 bits): a 100 TB
@@ -114,18 +73,19 @@ object SegmentPruning {
     * unregistered table simply keeps full scans (pruning is an
     * accelerator, never a correctness dependency). */
   def registerBloom(spark: SparkSession, dir: String, col: String,
-      maxManifestBytes: Long = DefaultMaxBloomManifestBytes): Entry = {
-    val root = new Path(Fingerprint.canon(dir))
+      maxManifestBytes: Long = DefaultMaxBloomManifestBytes): Route.Bloom = {
+    val path = Fingerprint.canon(dir)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val nFiles = fs.listStatus(root)
       .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val need = nFiles.toLong * (graft.sources.BloomLayout.DefaultNumBits / 8)
+    val need = nFiles.toLong * (BloomLayout.DefaultNumBits / 8)
     require(need <= maxManifestBytes,
       s"bloom manifest for $dir needs $need B ($nFiles files x " +
-        s"${graft.sources.BloomLayout.DefaultNumBits / 8} B) > budget $maxManifestBytes B: " +
+        s"${BloomLayout.DefaultNumBits / 8} B) > budget $maxManifestBytes B: " +
         "register per partition subdirectory (sharded manifests) or raise the budget")
-    install(spark, manifest(dir, "bloom", col)(fp => Entry(Fingerprint.canon(dir), col, Nil,
-      graft.sources.BloomLayout.buildManifest(spark, dir, col), fp)))
+    Routes.reuseOrAdd[Route.Bloom](spark, path)(_.col == col)(version =>
+      Route.Bloom(path, version, col, BloomLayout.buildManifest(spark, dir, col)))
   }
 
   /** Build the exact per-file partition-id manifest for a
@@ -134,160 +94,80 @@ object SegmentPruning {
     * (exact: a value's partition id names its owning files with no false
     * positives; ranges keep the full scan, as on any hash layout). */
   def registerPartitioned(spark: SparkSession, dir: String, col: String,
-      nPartitions: Int): Entry =
-    install(spark, manifest(dir, "part", col, nPartitions)(fp =>
-      Entry(Fingerprint.canon(dir), col, Nil, Nil, fp,
-        graft.sources.PartitionedLayout.buildManifest(spark, dir, col, nPartitions),
-        nPartitions)))
-
-  private def install(spark: SparkSession, entry: Entry): Entry = {
-    registry.compute(entry.path, (_, old) => {
-      val prior = Option(old).getOrElse(Nil)
-      // a re-registration replaces its own (kind, column) slot; entries
-      // with a different fingerprint are stale for the SAME listing and
-      // are dropped rather than intersected with fresh evidence
-      entry :: prior.filter(e =>
-        (kindOf(e), e.sortCol) != (kindOf(entry), entry.sortCol) &&
-          e.fingerprint == entry.fingerprint)
-    })
-    val enabled = spark.conf.get(ConfFacts, "")
-    if (!enabled.split(';').contains(entry.path))
-      spark.conf.set(ConfFacts, if (enabled.isEmpty) entry.path else s"$enabled;${entry.path}")
-    if (!spark.experimental.extraOptimizations.contains(SegmentPruningRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SegmentPruningRule
-    entry
+      nPartitions: Int): Route.Partitions = {
+    val path = Fingerprint.canon(dir)
+    Routes.reuseOrAdd[Route.Partitions](spark, path)(p => p.col == col && p.nParts == nPartitions)(
+      version => Route.Partitions(path, version, col, nPartitions,
+        PartitionedLayout.buildManifest(spark, dir, col, nPartitions)))
   }
-
-  /** Valid only while the layout on disk is the one the manifest described. */
-  private[plans] def entriesFor(path: String): List[Entry] = {
-    val es = Option(registry.get(path)).getOrElse(Nil)
-    if (es.isEmpty) Nil
-    else {
-      val fp = fingerprintOf(path)
-      es.filter(_.fingerprint == fp)
-    }
-  }
-
-  private[graft] def clear(): Unit = registry.clear()
 }
 
-object SegmentPruningRule extends Rule[LogicalPlan] {
+/** The segment-pruning rewrite the session's [[Routes]] rule runs. */
+object SegmentPruningRule extends PredicateHelper {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = conf.getConfString(SegmentPruning.ConfFacts, "")
-    if (enabled.isEmpty) return plan
-    val facts = enabled.split(';').toSet
-    plan.transformUp {
-      case f @ Filter(cond, l: LogicalRelation) =>
-        prune(cond, l, facts).map(nl => Filter(cond, nl)).getOrElse(f)
-      case f @ Filter(cond, Project(p, l: LogicalRelation))
-          if p.forall(_.isInstanceOf[AttributeReference]) =>
-        prune(cond, l, facts).map(nl => Filter(cond, Project(p, nl))).getOrElse(f)
-      case f @ Project(p, Filter(cond, l: LogicalRelation))
-          if p.forall(_.isInstanceOf[AttributeReference]) =>
-        prune(cond, l, facts).map(nl => Project(p, Filter(cond, nl))).getOrElse(f)
-    }
+  def apply(plan: LogicalPlan, routes: Routes): LogicalPlan = plan.transformUp {
+    case f @ Filter(cond, l: LogicalRelation) =>
+      prune(cond, l, routes).map(nl => Filter(cond, nl)).getOrElse(f)
+    case f @ Filter(cond, Project(p, l: LogicalRelation))
+        if p.forall(_.isInstanceOf[AttributeReference]) =>
+      prune(cond, l, routes).map(nl => Filter(cond, Project(p, nl))).getOrElse(f)
+    case f @ Project(p, Filter(cond, l: LogicalRelation))
+        if p.forall(_.isInstanceOf[AttributeReference]) =>
+      prune(cond, l, routes).map(nl => Project(p, Filter(cond, nl))).getOrElse(f)
   }
 
-  private def scanPath(l: LogicalRelation): Option[(HadoopFsRelation, String)] = l.relation match {
-    case fs: HadoopFsRelation if fs.location.rootPaths.length == 1 &&
-        fs.partitionSchema.isEmpty =>
-      Some((fs, Fingerprint.canon(fs.location.rootPaths.head.toString)))
+  private def isCol(x: Expression, c: String) = x match {
+    case a: AttributeReference => a.name == c
+    case _ => false
+  }
+
+  /** Bounds (lo, hi) (None = unbounded) implied by one conjunct on `c`.
+    * Strict bounds are safe to relax to inclusive — pruning keeps a
+    * superset, the Filter decides exactly. */
+  private def boundsOf(e: Expression, c: String): Option[(Option[Any], Option[Any])] = e match {
+    case EqualTo(a, Literal(v, _)) if isCol(a, c) => Some((Some(v), Some(v)))
+    case EqualTo(Literal(v, _), a) if isCol(a, c) => Some((Some(v), Some(v)))
+    case GreaterThan(a, Literal(v, _)) if isCol(a, c) => Some((Some(v), None))
+    case GreaterThanOrEqual(a, Literal(v, _)) if isCol(a, c) => Some((Some(v), None))
+    case LessThan(a, Literal(v, _)) if isCol(a, c) => Some((None, Some(v)))
+    case LessThanOrEqual(a, Literal(v, _)) if isCol(a, c) => Some((None, Some(v)))
+    case GreaterThan(Literal(v, _), a) if isCol(a, c) => Some((None, Some(v)))
+    case GreaterThanOrEqual(Literal(v, _), a) if isCol(a, c) => Some((None, Some(v)))
+    case LessThan(Literal(v, _), a) if isCol(a, c) => Some((Some(v), None))
+    case LessThanOrEqual(Literal(v, _), a) if isCol(a, c) => Some((Some(v), None))
     case _ => None
   }
 
-  /** Conjuncts of the top-level AND. */
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => conjuncts(a) ++ conjuncts(b)
-    case other => Seq(other)
+  /** Footer-range decision: the files every conjunct's bound on the sort
+    * column admits (filtering by each bound in turn keeps exactly the files
+    * the tightest bounds keep). */
+  private def footerKeep(m: Route.Footer, cs: Seq[Expression]): Option[Seq[String]] = {
+    val bounds = cs.flatMap(boundsOf(_, m.col))
+    if (bounds.isEmpty) None
+    else Some(bounds.foldLeft(m.ranges) { case (rs, (lo, hi)) =>
+      SortedLayout.pruneFiles(rs, lo, hi)
+    }.map(_.path))
   }
 
-  /** Bounds [lo, hi] (None = unbounded) implied by one conjunct on `c`.
-    * Strict bounds are safe to relax to inclusive — pruning keeps a
-    * superset, the Filter decides exactly. */
-  private def boundsOf(e: Expression, c: String): Option[(Option[Any], Option[Any])] = {
-    def isCol(x: Expression) = x match {
-      case a: AttributeReference => a.name == c
-      case _ => false
-    }
-    e match {
-      case EqualTo(a, Literal(v, _)) if isCol(a) => Some((Some(v), Some(v)))
-      case EqualTo(Literal(v, _), a) if isCol(a) => Some((Some(v), Some(v)))
-      case GreaterThan(a, Literal(v, _)) if isCol(a) => Some((Some(v), None))
-      case GreaterThanOrEqual(a, Literal(v, _)) if isCol(a) => Some((Some(v), None))
-      case LessThan(a, Literal(v, _)) if isCol(a) => Some((None, Some(v)))
-      case LessThanOrEqual(a, Literal(v, _)) if isCol(a) => Some((None, Some(v)))
-      case GreaterThan(Literal(v, _), a) if isCol(a) => Some((None, Some(v)))
-      case GreaterThanOrEqual(Literal(v, _), a) if isCol(a) => Some((None, Some(v)))
-      case LessThan(Literal(v, _), a) if isCol(a) => Some((Some(v), None))
-      case LessThanOrEqual(Literal(v, _), a) if isCol(a) => Some((Some(v), None))
-      case _ => None
-    }
-  }
-
-  /** Align a literal with the manifest's stat type (parquet footers surface
-    * int32 as Integer, int64 as Long, strings as String via SortedLayout's
-    * unwrap); mismatched/unsupported pairs veto pruning, never break it. */
-  private def align(v: Any, sample: Any): Option[Comparable[Any]] = {
-    val out: Any = (v, sample) match {
-      // NaN vetoes pruning: parquet footers exclude NaN from min/max while
-      // Spark's EqualTo treats NaN = NaN as true, so no footer compare can
-      // prove a file NaN-free — fall back to the full scan
-      case (x: java.lang.Number, _) if x.doubleValue().isNaN => null
-      case (x: java.lang.Number, _: java.lang.Long) => x.longValue()
-      case (x: java.lang.Number, _: java.lang.Integer) => x.intValue()
-      case (x: java.lang.Number, _: java.lang.Double) => x.doubleValue()
-      // string stats live in the UTF8String (UTF-8 byte order) domain —
-      // the order Spark range-partitioned the files by (SortedLayout)
-      case (x: org.apache.spark.unsafe.types.UTF8String,
-            _: org.apache.spark.unsafe.types.UTF8String) => x
-      case (x: String, _: org.apache.spark.unsafe.types.UTF8String) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(x)
-      case _ => null
-    }
-    Option(out).map(_.asInstanceOf[Comparable[Any]])
-  }
-
-  /** Footer-range decision: files whose [min,max] intersects the conjuncts'
-    * tightest bounds on the sort column. */
-  private def rangeKeep(entry: SegmentPruning.Entry,
-      cs: Seq[Expression]): Option[Seq[String]] = {
-    val bounds = cs.flatMap(boundsOf(_, entry.sortCol))
-    if (bounds.isEmpty) return None
-    val sample = entry.ranges.head.min: Any
-    val lo = bounds.flatMap(_._1).flatMap(align(_, sample)) // tightest lower
-      .reduceOption((a, b) => if (a.compareTo(b) >= 0) a else b)
-    val hi = bounds.flatMap(_._2).flatMap(align(_, sample))
-      .reduceOption((a, b) => if (a.compareTo(b) <= 0) a else b)
-    if (lo.isEmpty && hi.isEmpty) None
-    else Some(entry.ranges.filter(r =>
-      lo.forall(v => r.max.compareTo(v) >= 0) && hi.forall(v => r.min.compareTo(v) <= 0))
-      .map(_.path))
+  private def fromUtf8(v: Any): Any = v match {
+    case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+    case other => other
   }
 
   /** Bloom decision: files whose bitset admits an EqualTo literal on the
     * indexed column. The probe is hashed BY Spark (BloomLayout contract) so
     * it cannot diverge from the build-side hashing. */
-  private def bloomKeep(entry: SegmentPruning.Entry, cs: Seq[Expression],
-      session: org.apache.spark.sql.SparkSession): Option[Seq[String]] = {
-    def isCol(x: Expression) = x match {
-      case a: AttributeReference => a.name == entry.sortCol
-      case _ => false
-    }
+  private def bloomKeep(m: Route.Bloom, cs: Seq[Expression],
+      session: SparkSession): Option[Seq[String]] = {
     val eq = cs.collectFirst {
-      case EqualTo(a: AttributeReference, Literal(v, _)) if isCol(a) => (v, a.dataType)
-      case EqualTo(Literal(v, _), a: AttributeReference) if isCol(a) => (v, a.dataType)
+      case EqualTo(a: AttributeReference, Literal(v, _)) if isCol(a, m.col) => (v, a.dataType)
+      case EqualTo(Literal(v, _), a: AttributeReference) if isCol(a, m.col) => (v, a.dataType)
     }
     eq.map { case (v, dt) =>
-      val probe: Any = v match {
-        case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-        case other => other
-      }
       // cast to the COLUMN's type: Murmur3 hashes Int 42 and Long 42
       // differently, and a width-mismatched probe would reject every file
-      val positions = graft.sources.BloomLayout.hashPositions(session, probe, castTo = Some(dt))
-      graft.sources.BloomLayout.pruneFiles(entry.blooms, positions).map(_.path)
+      val positions = BloomLayout.hashPositions(session, fromUtf8(v), castTo = Some(dt))
+      BloomLayout.pruneFiles(m.blooms, positions).map(_.path)
     }
   }
 
@@ -295,56 +175,44 @@ object SegmentPruningRule extends Rule[LogicalPlan] {
     * all-literal IN on the partitioned column — exact (Pinot
     * segmentPartitionConfig pruning). Probes are hashed BY Spark in the
     * column's own type, the PartitionedLayout contract. */
-  private def partKeep(entry: SegmentPruning.Entry, cs: Seq[Expression],
-      session: org.apache.spark.sql.SparkSession): Option[Seq[String]] = {
-    def isCol(x: Expression) = x match {
-      case a: AttributeReference => a.name == entry.sortCol
-      case _ => false
-    }
-    def fromUtf8(v: Any): Any = v match {
-      case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-      case other => other
-    }
+  private def partKeep(m: Route.Partitions, cs: Seq[Expression],
+      session: SparkSession): Option[Seq[String]] = {
     val probe = cs.collectFirst {
-      case EqualTo(a: AttributeReference, Literal(v, _)) if isCol(a) && v != null =>
+      case EqualTo(a: AttributeReference, Literal(v, _)) if isCol(a, m.col) && v != null =>
         (Seq(fromUtf8(v)), a.dataType)
-      case EqualTo(Literal(v, _), a: AttributeReference) if isCol(a) && v != null =>
+      case EqualTo(Literal(v, _), a: AttributeReference) if isCol(a, m.col) && v != null =>
         (Seq(fromUtf8(v)), a.dataType)
-      case In(a: AttributeReference, list) if isCol(a) && list.nonEmpty &&
+      case In(a: AttributeReference, list) if isCol(a, m.col) && list.nonEmpty &&
           list.forall { case Literal(v, _) => v != null; case _ => false } =>
         (list.collect { case Literal(v, _) => fromUtf8(v) }, a.dataType)
       // long IN-lists arrive as InSet after OptimizeIn — same decision
-      case InSet(a: AttributeReference, hset) if isCol(a) && hset.nonEmpty &&
+      case InSet(a: AttributeReference, hset) if isCol(a, m.col) && hset.nonEmpty &&
           !hset.contains(null) =>
         (hset.toSeq.map(fromUtf8), a.dataType)
     }
     probe.map { case (values, dt) =>
-      val pids = graft.sources.PartitionedLayout.pidsOf(
-        session, values, entry.nParts, castTo = Some(dt))
-      graft.sources.PartitionedLayout.pruneFiles(entry.parts, pids).map(_.path)
+      val pids = PartitionedLayout.pidsOf(session, values, m.nParts, castTo = Some(dt))
+      PartitionedLayout.pruneFiles(m.parts, pids).map(_.path)
     }
   }
 
   private def prune(cond: Expression, l: LogicalRelation,
-      facts: Set[String]): Option[LogicalRelation] = {
+      routes: Routes): Option[LogicalRelation] = {
     for {
-      (fs, path) <- scanPath(l)
-      if facts.contains(path)
-      entries = SegmentPruning.entriesFor(path)
-      if entries.nonEmpty
-      session = l.relation.asInstanceOf[HadoopFsRelation].sparkSession
-      cs = conjuncts(cond).filter(_.deterministic)
-      total = entries.map(e =>
-        math.max(e.ranges.size, math.max(e.blooms.size, e.parts.size))).max
+      (fs, path) <- Routes.scanPath(l)
+      if fs.partitionSchema.isEmpty
+      manifests = routes.live[Route.Manifest](path)
+      if manifests.nonEmpty
+      session = fs.sparkSession
+      cs = splitConjunctivePredicates(cond).filter(_.deterministic)
       // every registered manifest that can decide contributes a keep set;
       // a file survives only if EVERY decision admits it (each decision is
       // individually sound — a superset of matches — so the intersection
       // is too)
-      keeps = entries.flatMap { entry =>
-        if (entry.ranges.nonEmpty) rangeKeep(entry, cs)
-        else if (entry.blooms.nonEmpty) bloomKeep(entry, cs, session)
-        else if (entry.parts.nonEmpty) partKeep(entry, cs, session)
-        else None
+      keeps = manifests.flatMap {
+        case m: Route.Footer => footerKeep(m, cs)
+        case m: Route.Bloom => bloomKeep(m, cs, session)
+        case m: Route.Partitions => partKeep(m, cs, session)
       }
       if keeps.nonEmpty
       // manifests spell file paths differently (footer listings say
@@ -356,7 +224,7 @@ object SegmentPruningRule extends Rule[LogicalPlan] {
         .map(_.map(p => new Path(p).toUri.getPath).toSet)
         .reduce(_ & _)
       keep = common.toSeq.sorted.map(spelling)
-      if keep.size < total // only rewrite when pruning wins
+      if keep.size < manifests.map(_.files).max // only rewrite when pruning wins
     } yield {
       val newLoc = new InMemoryFileIndex(
         session, keep.map(new Path(_)), Map.empty, Some(fs.dataSchema))

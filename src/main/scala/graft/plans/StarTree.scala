@@ -1,15 +1,12 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.sources.Fingerprint
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types._
 
 /** Star-tree index analog — Pinot's signature pre-aggregation structure
@@ -42,39 +39,14 @@ import org.apache.spark.sql.types._
   * the plan untouched — fall back to the fact scan, never approximate.
   *
   * Safety: the rule fires only for rollups registered in THIS session
-  * (conf `spark.graft.startree.rollups`, set by `register`). The registry
-  * is JVM-wide but keyed by rollup, so sessions that register different
-  * rollups of one fact each keep routing to their own. Like
-  * PinotFunctions, callers use a dedicated child session so declared
-  * queries outside the star-tree surface can never be silently re-planned
-  * (a rollup re-associates double sums, which could flip a rounding
-  * boundary in an unrelated query's hashed output).
+  * ([[Routes]]), so sessions that register different rollups of one fact
+  * each keep routing to their own. Like PinotFunctions, callers use a
+  * dedicated child session so declared queries outside the star-tree
+  * surface can never be silently re-planned (a rollup re-associates double
+  * sums, which could flip a rounding boundary in an unrelated query's
+  * hashed output).
   */
 object StarTree {
-
-  /** One registered star-tree: a canonical fact path, the fact's data
-    * version the rollup was built from, and the rollup scan.
-    * `sketchCols` are Pinot functionColumnPair analogs
-    * (DISTINCTCOUNTHLL__col / DISTINCTCOUNTTHETASKETCH__col): the rollup
-    * stores one DataSketches HLL and one theta sketch per cell per column,
-    * and matching sketch aggregates over the fact rewrite to union-merges
-    * of the stored state. */
-  final case class Spec(
-      factPath: String,
-      factVersion: String,
-      dims: Seq[String],
-      metrics: Seq[String],
-      sketchCols: Seq[String],
-      sketchLgK: Int,
-      rollupPath: String,
-      relation: LogicalRelation)
-
-  /** Rollup path → spec. A rollup path is a [[Fingerprint.buildOnce]]
-    * artifact, so it names the fact, its data version and the whole build
-    * configuration: one entry can never stand for another. */
-  private val registry = new ConcurrentHashMap[String, Spec]()
-
-  private[graft] val ConfRollups = "spark.graft.startree.rollups"
 
   // rollup column naming (prefixed so they can never collide with fact cols)
   private[graft] def cntCol: String = "__st_cnt"
@@ -95,7 +67,7 @@ object StarTree {
   }
 
   /** Build (or reuse) the materialized rollup for `factParquetPath` and
-    * enable transparent routing to it in this session. Returns the spec.
+    * enable transparent routing to it in this session. Returns the route.
     *
     * The rollup is a [[Fingerprint.buildOnce]] artifact keyed on the fact
     * path, the configuration and the fact data version, so a regenerated
@@ -108,7 +80,7 @@ object StarTree {
       dims: Seq[String],
       metrics: Seq[String],
       sketchCols: Seq[String] = Nil,
-      sketchLgK: Int = 12): Spec = {
+      sketchLgK: Int = 12): Route.Rollup = {
     import org.apache.spark.sql.functions._
     // read before the build: a fact rewritten meanwhile never matches it
     val factVersion = Fingerprint.of(factParquetPath)
@@ -145,42 +117,22 @@ object StarTree {
     val relation = graft.sources.Tables.read(spark, out).queryExecution.analyzed
       .collectFirst { case l: LogicalRelation => l }
       .getOrElse(sys.error(s"rollup scan did not analyze to a LogicalRelation: $out"))
-    val spec = Spec(Fingerprint.canon(factParquetPath), factVersion,
-      dims, metrics, sketchCols, sketchLgK, out, relation)
-    registry.put(out, spec)
-
-    // per-session opt-in: the rule only routes to rollups listed in THIS
-    // session's conf, so a global registry entry is inert elsewhere
-    val enabled = spark.conf.get(ConfRollups, "")
-    if (!enabled.split(';').contains(out))
-      spark.conf.set(ConfRollups, if (enabled.isEmpty) out else s"$enabled;$out")
-    if (!spark.experimental.extraOptimizations.contains(StarTreeRoutingRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ StarTreeRoutingRule
-    spec
+    Routes.add(spark, Route.Rollup(Fingerprint.canon(factParquetPath), factVersion,
+      dims, metrics, sketchCols, sketchLgK, out, relation))
   }
-
-  private[plans] def specFor(rollupPath: String): Option[Spec] = Option(registry.get(rollupPath))
-
-  private[graft] def clear(): Unit = registry.clear()
 }
 
-/** The routing rule: rewrite `Aggregate [dims⊆D] [decomposable aggs] over
-  * (Project/Filter over fact scan)` to the same aggregate over the rollup
-  * scan. Runs in `experimental.extraOptimizations` (after the main optimizer
-  * batches, so the child shapes are the post-pruning Project/Filter/scan
-  * forms). Output attribute ids and data types are preserved exactly —
-  * parents of the Aggregate never see the difference. */
-object StarTreeRoutingRule extends Rule[LogicalPlan] {
+/** The routing rewrite the session's [[Routes]] rule runs: rewrite
+  * `Aggregate [dims⊆D] [decomposable aggs] over (Project/Filter over fact
+  * scan)` to the same aggregate over the rollup scan. It runs in
+  * `experimental.extraOptimizations` (after the main optimizer batches, so
+  * the child shapes are the post-pruning Project/Filter/scan forms).
+  * Output attribute ids and data types are preserved exactly — parents of
+  * the Aggregate never see the difference. */
+object StarTreeRoutingRule {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled = conf.getConfString(StarTree.ConfRollups, "")
-    if (enabled.isEmpty) return plan
-    val specs = enabled.split(';').toSeq.flatMap(StarTree.specFor)
-    plan.transformUp {
-      case agg @ Aggregate(_, _, _, _) =>
-        rewrite(agg, specs).getOrElse(agg)
-    }
+  def apply(plan: LogicalPlan, routes: Routes): LogicalPlan = plan.transformUp {
+    case agg @ Aggregate(_, _, _, _) => rewrite(agg, routes).getOrElse(agg)
   }
 
   /** Peel the optimizer's Project(attrs-only)/Filter shapes off a fact scan. */
@@ -196,22 +148,14 @@ object StarTreeRoutingRule extends Rule[LogicalPlan] {
     }
   }
 
-  private def scanPath(l: LogicalRelation): Option[String] = l.relation match {
-    case fs: HadoopFsRelation if fs.location.rootPaths.length == 1 =>
-      Some(Fingerprint.canon(fs.location.rootPaths.head.toString))
-    case _ => None
-  }
-
   /** The aggregate over the first of this session's rollups of the scanned
     * fact's current data version that serves it. */
-  private def rewrite(agg: Aggregate, specs: Seq[StarTree.Spec]): Option[LogicalPlan] = {
+  private def rewrite(agg: Aggregate, routes: Routes): Option[LogicalPlan] = {
     val rewrites = for {
       (cond, scan) <- decompose(agg.child).iterator
-      path <- scanPath(scan).iterator
-      version = Fingerprint.of(path)
-      spec <- specs.iterator
+      (_, path) <- Routes.scanPath(scan).iterator
       // a rollup of an older version of the fact is never served
-      if spec.factPath == path && spec.factVersion == version
+      spec <- routes.live[Route.Rollup](path).iterator
       dims = spec.dims.toSet
       metrics = spec.metrics.toSet
       // grouping: attribute-only, all dimensions
@@ -254,7 +198,7 @@ object StarTreeRoutingRule extends Rule[LogicalPlan] {
       ne: NamedExpression,
       dims: Set[String],
       metrics: Set[String],
-      spec: StarTree.Spec,
+      spec: Route.Rollup,
       byName: Map[String, AttributeReference]): Option[NamedExpression] = {
     val rewritten = ne match {
       case a: AttributeReference if dims.contains(a.name) =>
@@ -272,7 +216,7 @@ object StarTreeRoutingRule extends Rule[LogicalPlan] {
       e: Expression,
       dims: Set[String],
       metrics: Set[String],
-      spec: StarTree.Spec,
+      spec: Route.Rollup,
       byName: Map[String, AttributeReference]): Option[Expression] = {
     def attr(n: String) = byName(n)
     def sumAgg(n: String): Expression = Sum(attr(n)).toAggregateExpression()

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types._
 
 /** Pinot 1.2 `VECTOR_SIMILARITY(vecCol, ARRAY[...], topK)` — the
@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   * selects the topK rows most similar to the literal query vector through
   * the table's HNSW index; here the same spelling routes through the
   * persisted [[graft.sources.AnnIndex]] (IVF — functional parity with a
-  * partition-pruned scale path) when one is registered for the scanned
-  * table+column, and falls back to exact brute-force top-k otherwise —
+  * partition-pruned scale path) when the session registered one for the
+  * scanned table+column, and falls back to exact brute-force top-k otherwise —
   * mirroring how [[SegmentPruningRule]] transparently accelerates filters
   * without changing answers' shape.
   *
@@ -52,41 +52,22 @@ case class VectorSimilarityPredicate(vec: Expression, query: Expression, topK: E
 
 object VectorSimilarity {
 
-  /** A registered ANN route: queries scanning `path` with a
-    * VECTOR_SIMILARITY predicate on `vecCol` probe the AnnIndex at
-    * `indexDir` (which stores ids from `idCol`). `ef > 0` opts the probe
-    * into the per-cell HNSW graphs (`AnnIndex.topKHnsw`, requires a prior
-    * `buildHnsw`) with that beam width — Pinot's actual index class; `ef = 0`
-    * keeps the exhaustive scan of the probed cells. */
-  final case class Entry(path: String, vecCol: String, idCol: String,
-      indexDir: String, probes: Int, fingerprint: String, ef: Int = 0)
-
-  private val registry = new ConcurrentHashMap[(String, String), Entry]()
   // (layout signature, graph signature, vector, k, probes, ef) → probed
   // ids; planning-time jobs run once per distinct probe, EXPLAIN and
   // re-analysis are free
   private val probeMemo =
     new ConcurrentHashMap[(String, String, Seq[Float], Int, Int, Int), Array[Long]]()
 
+  /** Route this session's VECTOR_SIMILARITY over `dataDir`'s `vecCol`
+    * through the AnnIndex at `indexDir`; other sessions keep the exact
+    * brute-force answer ([[Routes]]). */
   def register(spark: SparkSession, dataDir: String, vecCol: String,
-      idCol: String, indexDir: String, probes: Int = 2, ef: Int = 0): Entry = {
+      idCol: String, indexDir: String, probes: Int = 2, ef: Int = 0): Route.Ann = {
     val path = Fingerprint.canon(dataDir)
-    val e = Entry(path, vecCol, idCol, indexDir, probes, Fingerprint.of(path), ef)
-    registry.put((e.path, vecCol), e)
-    if (!spark.experimental.extraOptimizations.contains(VectorSimilarityRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ VectorSimilarityRule
-    e
+    Routes.add(spark, Route.Ann(path, Fingerprint.of(path), vecCol, idCol, indexDir, probes, ef))
   }
 
-  /** Valid only while the data layout matches the registration — a
-    * rewritten table deregisters itself (the SegmentPruning staleness
-    * doctrine) and the query falls back to brute force. */
-  private[plans] def entryFor(path: String, vecCol: String): Option[Entry] =
-    Option(registry.get((path, vecCol)))
-      .filter(e => Fingerprint.of(e.path) == e.fingerprint)
-
-  private[plans] def probedIds(spark: SparkSession, e: Entry,
+  private[plans] def probedIds(spark: SparkSession, e: Route.Ann,
       qv: Array[Float], k: Int): Array[Long] = {
     // memo keys on the RECURSIVE layout signature, not the index-dir file
     // list: an append writes only inside cell subdirectories, which a
@@ -116,27 +97,23 @@ object VectorSimilarity {
       hits.orderBy("rn").select("nid").collect().map(_.getLong(0))
     })
   }
-
-  private[graft] def clear(): Unit = { registry.clear(); probeMemo.clear() }
 }
 
-object VectorSimilarityRule extends Rule[LogicalPlan] {
+/** Installed in every Pinot-vocabulary session (`PinotFunctions.register`);
+  * reads the ANN routes of the session being optimized. */
+object VectorSimilarityRule extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val hasVs = plan.exists(_.expressions.exists(
       _.exists(_.isInstanceOf[VectorSimilarityPredicate])))
     if (!hasVs) return plan
     val spark = SparkSession.active
+    val routes = Routes.of(spark)
     plan.transformUp {
-      case f @ Filter(cond, child)
-          if conjuncts(cond).exists(_.isInstanceOf[VectorSimilarityPredicate]) =>
-        rewrite(spark, cond, child)
+      case Filter(cond, child)
+          if splitConjunctivePredicates(cond).exists(_.isInstanceOf[VectorSimilarityPredicate]) =>
+        rewrite(spark, routes, cond, child)
     }
-  }
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => conjuncts(a) ++ conjuncts(b)
-    case other => Seq(other)
   }
 
   /** The literal query vector, whether constant folding already collapsed
@@ -167,20 +144,16 @@ object VectorSimilarityRule extends Rule[LogicalPlan] {
   }
 
   private def relationPath(p: LogicalPlan): Option[String] = p match {
-    case l: LogicalRelation => l.relation match {
-      case fs: HadoopFsRelation if fs.location.rootPaths.length == 1 =>
-        Some(Fingerprint.canon(fs.location.rootPaths.head.toString))
-      case _ => None
-    }
+    case l: LogicalRelation => Routes.scanPath(l).map(_._2)
     case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>
       relationPath(c)
     case Filter(_, c) => relationPath(c)
     case _ => None
   }
 
-  private def rewrite(spark: SparkSession, cond: Expression,
+  private def rewrite(spark: SparkSession, routes: Option[Routes], cond: Expression,
       child: LogicalPlan): LogicalPlan = {
-    val cs = conjuncts(cond)
+    val cs = splitConjunctivePredicates(cond)
     val (vsList, rest) = cs.partition(_.isInstanceOf[VectorSimilarityPredicate])
     require(vsList.length == 1,
       "exactly one VECTOR_SIMILARITY predicate per WHERE clause")
@@ -192,8 +165,11 @@ object VectorSimilarityRule extends Rule[LogicalPlan] {
     }
     val qv = queryFloats(vs.query)
     val k = literalK(vs.topK)
-    val route = relationPath(child)
-      .flatMap(p => VectorSimilarity.entryFor(p, vecAttr.name))
+    val route = for {
+      rs <- routes
+      path <- relationPath(child)
+      ann <- rs.live[Route.Ann](path).find(_.vecCol == vecAttr.name)
+    } yield ann
     route match {
       case Some(e) =>
         val ids = VectorSimilarity.probedIds(spark, e, qv, k)

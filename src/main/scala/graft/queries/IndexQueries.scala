@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** Index-served lookups (plans/SegmentPruningRule): the declared query is
   * written against an ordinary parquet scan of a sorted-layout copy of
   * events — the session-gated rule prunes the scan to the files whose
-  * footer range can match, with NO prunedRead call in the query text. The
+  * footer range can match, with no index call in the query text. The
   * DuckDB oracle runs the same SQL over the raw events table, so the gate
   * proves the routed result is value-identical to the unpruned scan
   * (SegmentPruningRuleSpec separately proves, via scan metrics, that the

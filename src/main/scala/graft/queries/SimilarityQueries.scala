@@ -437,15 +437,21 @@ object SimilarityQueries {
     * (fingerprint, vector, k)) and rewrites the WHERE to a k-literal
     * IN-list — the broker two-phase shape. Same spelling falls back to
     * exact brute-force top-k on an unregistered session (AnnIndexSpec).
+    * The route lives in a child session built once per index artifact.
     * The query vector is the vec_id-0 embedding inlined as a literal (its
     * shortest-repr doubles cast back to the identical floats). */
   val simVectorSimilarity = Q(
     "q_sim_vector_similarity",
     (spark, dir) => {
       val idxDir = annIndex(spark, dir)
-      val s = graft.PinotFunctions.viewsSession(spark, dir)
-      graft.plans.VectorSimilarity.register(
-        s, s"$dir/embeddings.parquet", "embedding", "vec_id", idxDir, probes = 2)
+      // a child of its own: the route would make every other
+      // VECTOR_SIMILARITY on a shared session approximate
+      val s = graft.Graft.child(spark, s"vector-similarity $idxDir") { s =>
+        graft.PinotFunctions.register(s)
+        graft.plans.VectorSimilarity.register(
+          s, s"$dir/embeddings.parquet", "embedding", "vec_id", idxDir, probes = 2)
+      }
+      Tables.registerViews(s, dir)
       val qv = Tables.t(spark, dir, "embeddings").filter(col("vec_id") === 0)
         .select("embedding").collect()(0).getSeq[Float](0)
       val arr = qv.map(_.toString).mkString(", ")

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * result is value-identical to the full scan.
   *
   * Like PinotFunctions, the star-tree session is a dedicated child session:
-  * routing is conf-scoped there, so no other declared query can be silently
-  * re-planned (a rollup re-associates double sums — harmless here because
+  * routes are per session (`plans.Routes`), so no other declared query can
+  * be silently re-planned (a rollup re-associates double sums — harmless here because
   * the hashed metrics are exact: l_quantity is integral-valued, min/max and
   * counts are order-independent, and avg divides two exact values).
   */

@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * column (each value lands in exactly one file — Pinot's
   * `segmentPartitionConfig` pairing that makes blooms effective), then build
   * a per-file bloom bitset over the column in ONE column-pruned scan.
-  * [[prunedRead]] tests the k bit positions of the probe value against each
-  * file's bitset (pure driver-side metadata, no I/O) and scans only the
-  * surviving files, with the exact predicate still applied (bloom false
-  * positives are filtered, never returned).
+  * [[pruneFiles]] tests the k bit positions of the probe value against each
+  * file's bitset (pure driver-side metadata, no I/O);
+  * `plans.SegmentPruning.registerBloom` makes a session's scans of the dir
+  * read only the surviving files, with the exact predicate still applied
+  * (bloom false positives are filtered, never returned).
   *
   * Hashing runs through Spark's own `hash(col, seed)` (Murmur3) on BOTH the
   * manifest build and the probe side — probe positions are computed by a
@@ -50,7 +51,8 @@ object BloomLayout {
     * aligns the probe with the indexed column's type: Murmur3 hashes an Int
     * 42 and a Long 42 differently, so an unaligned probe would silently
     * reject every file (a false NEGATIVE — the one bloom error class that
-    * loses rows). [[prunedRead]] always passes the column's own type. */
+    * loses rows). The segment-pruning rule always passes the column's own
+    * type. */
   def hashPositions(spark: SparkSession, value: Any, numBits: Int = DefaultNumBits,
       k: Int = DefaultK,
       castTo: Option[org.apache.spark.sql.types.DataType] = None): Seq[Int] = {
@@ -82,16 +84,4 @@ object BloomLayout {
     * made entirely from driver-side metadata. */
   def pruneFiles(manifest: Seq[FileBloom], positions: Seq[Int]): Seq[FileBloom] =
     manifest.filter(_.mightContain(positions))
-
-  /** Read only the files that might contain `c = value`; the exact equality
-    * predicate is still applied (and pushed to parquet) on the survivors,
-    * so bloom false positives cost I/O but never correctness. */
-  def prunedRead(spark: SparkSession, dir: String, c: String, value: Any,
-      manifest: Seq[FileBloom], numBits: Int = DefaultNumBits, k: Int = DefaultK): DataFrame = {
-    val base = spark.read.parquet(dir)
-    val colType = base.schema(c).dataType
-    val keep = pruneFiles(manifest, hashPositions(spark, value, numBits, k, Some(colType)))
-    if (keep.isEmpty) base.filter(col(c) === value).limit(0)
-    else spark.read.parquet(keep.map(_.path): _*).filter(col(c) === value)
-  }
 }

@@ -6,8 +6,8 @@ import scala.util.hashing.MurmurHash3
 
 /** The engine's one module for data versions and derived artifacts: the
   * canonical spelling of a path, the one hash, the data-version
-  * fingerprint every staleness guard compares (segment-pruning manifests,
-  * VECTOR_SIMILARITY registrations), and the build-once cache every
+  * fingerprint every staleness guard compares (the index routes of
+  * `plans.Routes`), and the build-once cache every
   * derived artifact goes through (star-tree rollups, sorted and z-ordered
   * copies, index postings, codebooks, hybrid-store splits). */
 object Fingerprint {

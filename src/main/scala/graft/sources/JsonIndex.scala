@@ -123,10 +123,12 @@ object JsonIndex {
       dir, "term", nFiles)
   }
 
-  private def cmp(s: String): Comparable[Any] = s.asInstanceOf[Comparable[Any]]
-
-  private def lookup(spark: SparkSession, dir: String, term: String): DataFrame =
-    SortedLayout.prunedRead(spark, dir, "term", cmp(term), cmp(term)).select("id").distinct()
+  /** Doc ids posting `term`: a footer-pruned postings scan (the postings
+    * are registered for segment pruning in this session). */
+  private def lookup(spark: SparkSession, dir: String, term: String): DataFrame = {
+    graft.plans.SegmentPruning.register(spark, dir, "term")
+    Tables.read(spark, dir).filter(col("term") === term).select("id").distinct()
+  }
 
   /** Spark's canonical double→string rendering, computed BY Spark so probe
     * terms and build terms cannot diverge. */

@@ -74,16 +74,4 @@ object PartitionedLayout {
   /** Files that can hold any of `probePids` — exact, no false positives. */
   def pruneFiles(manifest: Seq[FileParts], probePids: Set[Int]): Seq[FileParts] =
     manifest.filter(_.mayContain(probePids))
-
-  /** Read only the files owning `c IN (values)`; the exact predicate is
-    * still applied (and pushed to parquet) on the survivors. */
-  def prunedRead(spark: SparkSession, dir: String, c: String, values: Seq[Any],
-      manifest: Seq[FileParts], nPartitions: Int): DataFrame = {
-    val base = spark.read.parquet(dir)
-    val colType = base.schema(c).dataType
-    val keep = pruneFiles(manifest, pidsOf(spark, values, nPartitions, Some(colType)))
-    val pred = col(c).isin(values: _*)
-    if (keep.isEmpty) base.filter(pred).limit(0)
-    else spark.read.parquet(keep.map(_.path): _*).filter(pred)
-  }
 }

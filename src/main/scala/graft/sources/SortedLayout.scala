@@ -5,6 +5,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -20,7 +21,9 @@ import scala.jdk.CollectionConverters._
   *
   *  - file-level: [[fileRanges]] reads ONLY parquet footers (one (min,max)
   *    pair per file — Pinot's segment metadata, ~bytes per segment at any
-  *    scale) and [[prunedRead]] scans just the files whose range matches;
+  *    scale) and [[pruneFiles]] keeps just the files whose range can
+  *    match; `plans.SegmentPruning.register` makes a session's scans of
+  *    the dir apply it;
   *  - row-group-level: parquet min/max stats inside the chosen files, free
   *    via Spark's pushed filters on the sorted data.
   *
@@ -64,8 +67,7 @@ object SortedLayout {
           // below U+FFFF in UTF-16 but above it in UTF-8 bytes), which
           // would prune the file that actually holds a probe term
           def unwrap(v: Any): Comparable[Any] = (v match {
-            case b: org.apache.parquet.io.api.Binary =>
-              org.apache.spark.unsafe.types.UTF8String.fromBytes(b.getBytes)
+            case b: org.apache.parquet.io.api.Binary => UTF8String.fromBytes(b.getBytes)
             case o => o
           }).asInstanceOf[Comparable[Any]]
           val mins = stats.map(s => unwrap(s.genericGetMin))
@@ -80,32 +82,35 @@ object SortedLayout {
       .toSeq
   }
 
-  /** Probes arrive as java Strings from callers; string stats are stored as
-    * UTF8String (see [[fileRanges]]) — align the probe to the stat domain so
-    * both compare in UTF-8 byte order. */
-  private def toStatDomain(v: Comparable[Any]): Comparable[Any] = ((v: Any) match {
-    case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-    case o => o
-  }).asInstanceOf[Comparable[Any]]
+  /** Files whose [min,max] may hold a value in [lo, hi] (None = unbounded)
+    * — the broker-side segment-pruning decision, made entirely from footer
+    * metadata. Each bound is first aligned with the stats' type (parquet
+    * footers surface int32 as Integer, int64 as Long, strings as
+    * UTF8String — see [[fileRanges]]); a bound that cannot be aligned
+    * (NaN, or a type the stats do not share) is dropped, so the decision
+    * keeps a superset of the matching files and never loses one. */
+  def pruneFiles(ranges: Seq[FileRange], lo: Option[Any], hi: Option[Any]): Seq[FileRange] =
+    ranges.headOption.fold(ranges) { first =>
+      val l = lo.flatMap(align(_, first.min))
+      val h = hi.flatMap(align(_, first.min))
+      ranges.filter(r => l.forall(r.max.compareTo(_) >= 0) && h.forall(r.min.compareTo(_) <= 0))
+    }
 
-  /** Files whose [min,max] may contain a value in [lo,hi] — the broker-side
-    * segment-pruning decision, made entirely from footer metadata. */
-  def pruneFiles(ranges: Seq[FileRange], lo: Comparable[Any], hi: Comparable[Any]): Seq[FileRange] = {
-    val (l, h) = (toStatDomain(lo), toStatDomain(hi))
-    ranges.filter(r => r.max.compareTo(l) >= 0 && r.min.compareTo(h) <= 0)
-  }
-
-  /** Read only the files that can hold `sortCol ∈ [lo,hi]`, with the exact
-    * predicate still applied (and pushed to parquet row-group stats) on the
-    * survivors. */
-  def prunedRead(
-      spark: SparkSession, dir: String, sortCol: String,
-      lo: Comparable[Any], hi: Comparable[Any]): DataFrame = {
-    val keep = pruneFiles(fileRanges(spark, dir, sortCol), lo, hi)
-    if (keep.isEmpty)
-      spark.read.parquet(dir).limit(0)
-    else
-      spark.read.parquet(keep.map(_.path): _*)
-        .filter(col(sortCol) >= lo.asInstanceOf[Any] && col(sortCol) <= hi.asInstanceOf[Any])
+  private def align(v: Any, sample: Any): Option[Comparable[Any]] = {
+    val out: Any = (v, sample) match {
+      // NaN vetoes pruning: parquet footers exclude NaN from min/max while
+      // Spark's EqualTo treats NaN = NaN as true, so no footer compare can
+      // prove a file NaN-free
+      case (x: java.lang.Number, _) if x.doubleValue().isNaN => null
+      case (x: java.lang.Number, _: java.lang.Long) => x.longValue()
+      case (x: java.lang.Number, _: java.lang.Integer) => x.intValue()
+      case (x: java.lang.Number, _: java.lang.Double) => x.doubleValue()
+      // string stats live in the UTF8String (UTF-8 byte order) domain —
+      // the order Spark range-partitioned the files by
+      case (x: UTF8String, _: UTF8String) => x
+      case (x: String, _: UTF8String) => UTF8String.fromString(x)
+      case _ => null
+    }
+    Option(out).map(_.asInstanceOf[Comparable[Any]])
   }
 }

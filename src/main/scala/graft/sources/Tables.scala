@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
+import graft.plans.{Route, Routes}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
@@ -19,21 +21,18 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
+  /** A fixture table. A session that registered a bucketed copy of it
+    * ([[registerBucketed]]) reads the copy while the fixture is still at
+    * the data version the copy was built from, so every declared query
+    * picks up the shuffle-free co-located join plan unchanged; other
+    * sessions, other dirs and rewritten fixtures read the parquet. */
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // opt-in bucketed layout (registerBucketed): sessions that registered a
-    // bucketed copy of a fact table read it transparently, so every declared
-    // query picks up the shuffle-free co-located join plan unchanged.
-    // Routing is bound to the sfDir the copy was built from — a read for a
-    // DIFFERENT sfDir falls through to the plain parquet scan instead of
-    // silently serving stale bucketed data. Dirs compare canonically, so a
-    // trailing slash or a relative spelling still hits the copy.
-    val bucketedFacts = spark.conf.get("graft.bucketed.facts", "")
-    val bucketedDir = spark.conf.get("graft.bucketed.sfdir", "")
-    if (bucketedFacts.nonEmpty && bucketedDir == Fingerprint.canon(sfDir) &&
-        bucketedFacts.split(",").contains(name))
-      spark.table(bucketedTableName(name, spark.conf.get("graft.bucketed.fp")))
-    else if (name == "events") events(spark, sfDir)
-    else read(spark, s"$sfDir/$name.parquet")
+    val src = s"$sfDir/$name.parquet"
+    Routes.of(spark).flatMap(_.live[Route.Bucketed](Fingerprint.canon(src)).headOption) match {
+      case Some(copy) => spark.table(copy.table)
+      case None if name == "events" => events(spark, sfDir)
+      case None => read(spark, src)
+    }
   }
 
   private val relations = new ConcurrentHashMap[(SparkSession, String), (String, HadoopFsRelation)]()
@@ -61,14 +60,19 @@ object Tables {
     spark.baseRelationToDataFrame(rel)
   }
 
-  /** Table name carries a fingerprint of (sfDir, buckets) so a re-register
-    * with different inputs can never collide with (and silently reuse) a
-    * stale managed table from a prior run. */
+  /** Table name carries a fingerprint of (sfDir, buckets, facts and their
+    * data versions) so a re-register with different inputs, or after a
+    * fixture rewrite, can never collide with (and silently reuse) a stale
+    * managed table from a prior run. */
   private[graft] def bucketedTableName(name: String, fp: String): String =
     s"graft_${name}_bucketed_$fp"
 
-  private[graft] def fingerprint(sfDir: String, buckets: Int): String =
-    Fingerprint.hash64(s"${Fingerprint.canon(sfDir)}|$buckets")
+  private[graft] def fingerprint(sfDir: String, buckets: Int,
+      facts: Map[String, String] = defaultFactBuckets): String =
+    Fingerprint.hash64((Seq(Fingerprint.canon(sfDir), buckets.toString) ++
+      facts.toSeq.sorted.map { case (name, key) =>
+        s"$name:$key:${Fingerprint.of(s"$sfDir/$name.parquet")}"
+      }).mkString("|"))
 
   /** Default bucketing spec for the fact tables: both sides of the big
     * orders⋈lineitem edge bucketed on the join key (SCALE.md: the layout
@@ -85,20 +89,19 @@ object Tables {
       sfDir: String,
       buckets: Int = 8,
       facts: Map[String, String] = defaultFactBuckets): Unit = {
-    val dir = Fingerprint.canon(sfDir)
-    val fp = fingerprint(dir, buckets)
+    val fp = fingerprint(sfDir, buckets, facts)
     facts.foreach { case (name, key) =>
+      val src = s"$sfDir/$name.parquet"
+      val version = Fingerprint.of(src)
       val tbl = bucketedTableName(name, fp)
       if (!spark.catalog.tableExists(tbl)) {
-        spark.read.parquet(s"$sfDir/$name.parquet")
+        spark.read.parquet(src)
           .write.mode("overwrite")
           .bucketBy(buckets, key).sortBy(key)
           .saveAsTable(tbl)
       }
+      Routes.add(spark, Route.Bucketed(Fingerprint.canon(src), version, tbl))
     }
-    spark.conf.set("graft.bucketed.facts", facts.keys.mkString(","))
-    spark.conf.set("graft.bucketed.sfdir", dir)
-    spark.conf.set("graft.bucketed.fp", fp)
   }
 
   /** `events.ts` has shipped as TIMESTAMP(NANOS) in some fixture generations

@@ -136,14 +136,20 @@ object TextIndex {
     postings.join(matched, Seq("term"), "left_semi").select("id").distinct()
   }
 
-  private def cmp(s: String): Comparable[Any] = s.asInstanceOf[Comparable[Any]]
+  /** The postings, registered for segment pruning in this session, so a
+    * term or prefix lookup scans only the files whose footer range can
+    * hold it. */
+  private def postings(spark: SparkSession, dir: String): DataFrame = {
+    graft.plans.SegmentPruning.register(spark, dir, "term")
+    Tables.read(spark, dir)
+  }
 
   private def lookupExact(spark: SparkSession, dir: String, term: String): DataFrame =
-    SortedLayout.prunedRead(spark, dir, "term", cmp(term), cmp(term)).select("id")
+    postings(spark, dir).filter(col("term") === term).select("id")
 
   private def lookupPrefix(spark: SparkSession, dir: String, stem: String): DataFrame =
-    SortedLayout.prunedRead(spark, dir, "term", cmp(stem), cmp(stem + Character.MAX_VALUE))
-      .filter(col("term").startsWith(stem))
+    postings(spark, dir)
+      .filter(col("term").between(stem, stem + Character.MAX_VALUE) && col("term").startsWith(stem))
       .select("id").distinct()
 
   /** Candidate doc-ids for `query`, or None when only a full scan can

@@ -38,10 +38,14 @@ object ValueIndex {
     SortedLayout.write(
       df.select(col(valueCol).as("v"), col(idCol).as("id")), dir, "v", nFiles)
 
-  /** Candidate ids for `valueCol ∈ [lo, hi]` — footer-pruned postings scan. */
+  /** Candidate ids for `valueCol ∈ [lo, hi]` — footer-pruned postings scan
+    * (the postings are registered for segment pruning in this session). */
   def lookupRange(spark: SparkSession, dir: String,
-      lo: Comparable[Any], hi: Comparable[Any]): DataFrame =
-    SortedLayout.prunedRead(spark, dir, "v", lo, hi).select("id").distinct()
+      lo: Comparable[Any], hi: Comparable[Any]): DataFrame = {
+    graft.plans.SegmentPruning.register(spark, dir, "v")
+    Tables.read(spark, dir).filter(col("v") >= lo.asInstanceOf[Any] && col("v") <= hi.asInstanceOf[Any])
+      .select("id").distinct()
+  }
 
   /** Candidate ids for `valueCol = value`. */
   def lookupEq(spark: SparkSession, dir: String, value: Comparable[Any]): DataFrame =

@@ -205,6 +205,39 @@ class AnnIndexSpec extends GraftSuite {
       s"(indexed=$indexed brute=$brute)")
   }
 
+  test("a VECTOR_SIMILARITY route serves its own session only: a sibling stays exact") {
+    val e = Tables.t(spark, sfDir, "embeddings")
+    val qv = e.filter(col("vec_id") === 0)
+      .select("embedding").collect()(0).getSeq[Float](0)
+    val arr = qv.map(_.toString).mkString(", ")
+    val sql = s"""SELECT vec_id FROM embeddings
+                 |WHERE VECTOR_SIMILARITY(embedding, CAST(ARRAY($arr) AS ARRAY<FLOAT>), 5)
+                 |ORDER BY vec_id""".stripMargin
+    val dir = tempDir()
+    AnnIndex.build(e, dir, "vec_id", "embedding", nCells = 16)
+    val routed = spark.newSession()
+    PinotFunctions.register(routed); Tables.registerViews(routed, sfDir)
+    graft.plans.VectorSimilarity.register(
+      routed, s"$sfDir/embeddings.parquet", "embedding", "vec_id", dir, probes = 4)
+    val sibling = spark.newSession()
+    PinotFunctions.register(sibling); Tables.registerViews(sibling, sfDir)
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
+    def bruteForce(p: LogicalPlan) = p.exists {
+      case s: Sort => s.order.exists(_.child.exists(_.isInstanceOf[graft.expressions.CosineSimilarity]))
+      case _ => false
+    }
+    def inList(p: LogicalPlan) = p.exists(_.expressions.exists(_.exists {
+      case _: In | _: InSet => true
+      case _ => false
+    }))
+    val siblingPlan = sibling.sql(sql).queryExecution.optimizedPlan
+    assert(bruteForce(siblingPlan) && !inList(siblingPlan),
+      s"the sibling must plan the exact brute-force sort, not another session's IN-list:\n$siblingPlan")
+    val routedPlan = routed.sql(sql).queryExecution.optimizedPlan
+    assert(inList(routedPlan) && !bruteForce(routedPlan), s"the registering session must route:\n$routedPlan")
+  }
+
   test("VECTOR_SIMILARITY probe memo sees appends: newly ingested exact match wins") {
     val dir = tempDir()
     val e = Tables.t(spark, sfDir, "embeddings")

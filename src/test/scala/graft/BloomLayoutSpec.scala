@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.SegmentPruning
 import graft.sources.{BloomLayout, Tables}
 import org.apache.spark.sql.functions._
 
@@ -28,19 +29,16 @@ class BloomLayoutSpec extends GraftSuite {
     assert(hit.nonEmpty && hit.size < manifest.size,
       s"bloom pruned nothing: ${hit.size}/${manifest.size} files admitted")
 
+    // a registered session's ordinary lookup returns exactly the full-scan answer
     val expected = ev.filter(col("user_id") === probe).collect().map(_.toString).sorted
-    val pruned = BloomLayout.prunedRead(spark, dir, "user_id", probe, manifest)
+    val s = spark.newSession()
+    SegmentPruning.registerBloom(s, dir, "user_id")
+    val pruned = s.read.parquet(dir).filter(col("user_id") === probe)
     val got = pruned.collect().map(_.toString).sorted
     assert(got === expected && got.nonEmpty)
 
     // physical evidence: the executed scan opened exactly the admitted files
-    val plan = pruned.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val scan = plan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.get
+    val scan = fileScan(s.read.parquet(dir).filter(col("user_id") === probe))
     assert(scan.metrics("numFiles").value === hit.size.toLong)
     assert(scan.metadata("PushedFilters").contains("user_id"))
   }
@@ -55,7 +53,11 @@ class BloomLayoutSpec extends GraftSuite {
     val hit = BloomLayout.pruneFiles(manifest, BloomLayout.hashPositions(spark, absent))
     // false positives allowed, but at 2^16 bits / file they must be rare
     assert(hit.size <= 2, s"bloom admitted ${hit.size}/8 files for an absent key")
-    assert(BloomLayout.prunedRead(spark, dir, "user_id", absent, manifest).count() === 0L)
+    val s = spark.newSession()
+    SegmentPruning.registerBloom(s, dir, "user_id")
+    val lookup = s.read.parquet(dir).filter(col("user_id") === absent)
+    assert(lookup.count() === 0L)
+    assert(scanFiles(lookup) === hit.size.toLong)
   }
 
   test("string column: low-cardinality values map to their owning files only") {
@@ -64,17 +66,19 @@ class BloomLayoutSpec extends GraftSuite {
     BloomLayout.write(docs, dir, "source", nFiles = 8)
     val manifest = BloomLayout.buildManifest(spark, dir, "source")
 
+    val routed = spark.newSession()
+    SegmentPruning.registerBloom(routed, dir, "source")
+    def lookup(s: String) = routed.read.parquet(dir).filter(col("source") === s)
     val sources = docs.select("source").distinct().collect().map(_.getString(0))
     sources.foreach { s =>
       val hit = BloomLayout.pruneFiles(manifest, BloomLayout.hashPositions(spark, s))
       // hash layout ⇒ one owning file; bloom may admit the odd extra
       assert(hit.nonEmpty && hit.size <= 3, s"source=$s admitted ${hit.size} files")
-      val n = BloomLayout.prunedRead(spark, dir, "source", s, manifest).count()
-      assert(n === docs.filter(col("source") === s).count())
+      assert(lookup(s).count() === docs.filter(col("source") === s).count())
+      assert(scanFiles(lookup(s)) === hit.size.toLong, s"source=$s")
     }
     // every row accounted for exactly once across the per-source reads
-    val total = sources.map(s =>
-      BloomLayout.prunedRead(spark, dir, "source", s, manifest).count()).sum
+    val total = sources.map(s => lookup(s).count()).sum
     assert(total === docs.count())
   }
 }

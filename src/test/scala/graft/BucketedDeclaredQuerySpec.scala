@@ -54,6 +54,20 @@ class BucketedDeclaredQuerySpec extends GraftSuite {
     assert(!plan.contains("graft_lineitem_bucketed"))
   }
 
+  test("bucketed routing serves its own session only: a sibling reads plain parquet") {
+    val routed = spark.newSession()
+    val fp = Tables.fingerprint(sfDir, 8)
+    val tbls = Seq("lineitem", "orders").map(Tables.bucketedTableName(_, fp))
+    tbls.foreach(t => routed.sql(s"DROP TABLE IF EXISTS $t"))
+    Tables.registerBucketed(routed, sfDir)
+    val sibling = spark.newSession()
+    assert(Tables.t(routed, sfDir, "lineitem").queryExecution.logical.toString
+      .contains("graft_lineitem_bucketed"))
+    val plain = Tables.t(sibling, sfDir, "lineitem")
+    assert(!plain.queryExecution.logical.toString.contains("bucketed"), plain.queryExecution.logical)
+    tbls.foreach(t => routed.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
   test("bucketed routing is bound to its sfDir: other dirs read plain parquet") {
     val s4 = spark.newSession()
     val fp = Tables.fingerprint(sfDir, 8)

@@ -2,7 +2,9 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,13 +32,24 @@ trait GraftSuite extends AnyFunSuite with BeforeAndAfterAll {
     Files.createTempDirectory(root, prefix).toString
   }
 
+  /** Run `df` and return its first executed file scan. */
+  def fileScan(df: DataFrame): FileSourceScanExec = {
+    df.collect()
+    def find(p: SparkPlan): Option[FileSourceScanExec] = p match {
+      case f: FileSourceScanExec => Some(f)
+      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
+      case q: QueryStageExec => find(q.plan)
+      case other => other.children.view.flatMap(find(_)).headOption
+    }
+    find(df.queryExecution.executedPlan).get
+  }
+
+  /** Files the executed scan of `df` opened (its `numFiles` metric). */
+  def scanFiles(df: DataFrame): Long = fileScan(df).metrics("numFiles").value
+
   override def afterAll(): Unit =
     try super.afterAll()
     finally synchronized {
-      // VECTOR_SIMILARITY registrations are JVM-wide and may point at an
-      // index under this root: drop them with the root, so a later suite
-      // never plans against a deleted index
-      graft.plans.VectorSimilarity.clear()
       tempRoot.foreach(r => org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
       tempRoot = None
     }

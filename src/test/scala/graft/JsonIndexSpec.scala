@@ -43,7 +43,7 @@ class JsonIndexSpec extends GraftSuite {
     val ranges = SortedLayout.fileRanges(spark, dir, "term")
     assert(ranges.size >= 4)
     val probe = ("k\u000242.0")  /* the numeric term for k = 42 */.asInstanceOf[Comparable[Any]]
-    val hit = SortedLayout.pruneFiles(ranges, probe, probe)
+    val hit = SortedLayout.pruneFiles(ranges, Some(probe), Some(probe))
     assert(hit.size < ranges.size, s"no pruning: ${hit.size}/${ranges.size}")
   }
 

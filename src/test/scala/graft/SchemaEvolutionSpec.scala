@@ -45,19 +45,6 @@ class SchemaEvolutionSpec extends GraftSuite {
     // segment files) MUST disable pruning until re-registration — a stale
     // manifest would prune away the new files and silently lose rows.
     import spark.implicits._
-    def scanFiles(df: org.apache.spark.sql.DataFrame): Long = {
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      df.collect()
-      def find(p: SparkPlan): Option[FileSourceScanExec] = p match {
-        case f: FileSourceScanExec => Some(f)
-        case a: AdaptiveSparkPlanExec => find(a.executedPlan)
-        case q: QueryStageExec => find(q.plan)
-        case other => other.children.view.flatMap(find(_)).headOption
-      }
-      find(df.queryExecution.executedPlan).get.metrics("numFiles").value
-    }
-
     val dir = tempDir("graft_evo_prune")
     val gen1 = (0L until 800L).map(i => (i, i * 2.0)).toDF("k", "v")
     graft.sources.SortedLayout.write(gen1, dir, "k", nFiles = 8)

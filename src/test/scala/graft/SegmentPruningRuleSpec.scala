@@ -3,27 +3,12 @@ package graft
 import graft.plans.SegmentPruning
 import graft.sources.{SortedLayout, Tables}
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Transparent broker-style segment pruning: after register(), ordinary
   * queries over the sorted layout scan only the files whose footer range
-  * can match — no prunedRead call, no query rewrite by the user. */
+  * can match — no query rewrite by the user. */
 class SegmentPruningRuleSpec extends GraftSuite {
-
-  private def scanFiles(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    df.collect()
-    def find(p: SparkPlan): Option[FileSourceScanExec] = p match {
-      case f: FileSourceScanExec => Some(f)
-      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
-      case q: QueryStageExec => find(q.plan)
-      case other => other.children.view.flatMap(find(_)).headOption
-    }
-    find(df.queryExecution.executedPlan).get.metrics("numFiles").value
-  }
 
   private lazy val layout: (String, Long) = {
     val dir = tempDir("graft-segprune")
@@ -46,6 +31,18 @@ class SegmentPruningRuleSpec extends GraftSuite {
     assert(scanFiles(routed) <= 2L, "registered session must footer-prune the point lookup")
     assert(routed.collect().map(_.toString).sorted === base.collect().map(_.toString).sorted)
     assert(routed.count() > 0)
+  }
+
+  test("a route prunes in its session only: a sibling session scans every file") {
+    val (dir, probe) = layout
+    val routed = spark.newSession()
+    SegmentPruning.register(routed, dir, "user_id")
+    val sibling = spark.newSession()
+    def lookup(s: org.apache.spark.sql.SparkSession) =
+      s.read.parquet(dir).filter(col("user_id") === probe)
+    assert(scanFiles(lookup(routed)) <= 2L)
+    assert(scanFiles(lookup(sibling)) === 8L, "a sibling session must not inherit the route")
+    assert(lookup(sibling).count() === lookup(routed).count())
   }
 
   test("range predicate and aggregate-on-top both prune; other columns do not") {

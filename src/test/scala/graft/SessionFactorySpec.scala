@@ -9,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Graft.cores` the only reader of the core-count env var, so Bench,
   * Verify, the tools and the tests all share one config;
   * `Fingerprint` is the only code that places derived artifacts under the
-  * JVM temp dir or hashes with murmur, so every artifact has one key rule.
+  * JVM temp dir or hashes with murmur, so every artifact has one key rule;
+  * `plans.Routes` is the only code besides the two function registrations
+  * that installs optimizer rules, so index routes stay per session, and no
+  * conf key opts a session into a route.
   * Comment lines are ignored; the search strings are assembled so this file
   * does not match itself. */
 class SessionFactorySpec extends AnyFunSuite {
@@ -19,6 +22,9 @@ class SessionFactorySpec extends AnyFunSuite {
   private val tmpdirProp = "java.io" + ".tmpdir"
   private val murmurCall = "MurmurHash3" + ".stringHash"
   private val newSessionCall = "newSession" + "()"
+  private val ruleInstall = "experimental" + ".extraOptimizations="
+  private val routeConfKeys = Seq("spark.graft" + ".segprune", "spark.graft" + ".startree",
+    "graft" + ".bucketed")
 
   private def scalaFiles(dir: File): Seq[File] =
     Option(dir.listFiles).toSeq.flatten.flatMap { f =>
@@ -54,5 +60,11 @@ class SessionFactorySpec extends AnyFunSuite {
   test("only Fingerprint.scala names the temp dir or hashes with murmur") {
     assert(filesWithCode(tmpdirProp) === Set("Fingerprint.scala"))
     assert(filesWithCode(murmurCall) === Set("Fingerprint.scala"))
+  }
+
+  test("only the route registry and the function registrations install optimizer rules") {
+    assert(filesWithCode(ruleInstall) ===
+      Set("Routes.scala", "PinotFunctions.scala", "GraftExtensions.scala"))
+    routeConfKeys.foreach(k => assert(filesWithCode(k) === Set.empty[String], k))
   }
 }

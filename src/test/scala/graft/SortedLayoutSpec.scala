@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.SegmentPruning
 import graft.sources.{SortedLayout, Tables}
 import org.apache.spark.sql.functions._
 
@@ -30,27 +31,20 @@ class SortedLayoutSpec extends GraftSuite {
     // pick a key owned by a middle file; the footer manifest must prune to
     // exactly the file(s) whose range holds it (1, or 2 at a boundary)
     val probe = asLong(sorted(4).min)
-    val hit = SortedLayout.pruneFiles(ranges,
-      probe.asInstanceOf[Comparable[Any]], probe.asInstanceOf[Comparable[Any]])
+    val hit = SortedLayout.pruneFiles(ranges, Some(probe), Some(probe))
     assert(hit.nonEmpty && hit.size <= 2, s"expected ≤2 candidate files, got ${hit.size}")
 
-    // pruned read returns exactly the full-scan answer
+    // a registered session's ordinary lookup returns exactly the full-scan answer
     val expected = ev.filter(col("user_id") === probe).collect().map(_.toString).sorted
-    val pruned = SortedLayout.prunedRead(spark, dir, "user_id",
-      probe.asInstanceOf[Comparable[Any]], probe.asInstanceOf[Comparable[Any]])
+    val s = spark.newSession()
+    SegmentPruning.register(s, dir, "user_id")
+    val pruned = s.read.parquet(dir).filter(col("user_id") === probe)
     val got = pruned.select("event_id", "user_id", "value").collect().map(_.toString).sorted
     assert(got === expected)
 
     // physical evidence: the executed scan opened only the pruned files, and
     // the residual predicate reached parquet (row-group stats inside files)
-    pruned.collect()
-    val plan = pruned.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val scan = plan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.get
+    val scan = fileScan(pruned)
     assert(scan.metrics("numFiles").value === hit.size.toLong)
     assert(scan.metadata("PushedFilters").contains("user_id"),
       s"predicate not pushed: ${scan.metadata("PushedFilters")}")
@@ -64,8 +58,7 @@ class SortedLayoutSpec extends GraftSuite {
     val domainMin = asLong(ranges.map(_.min).reduce((a, b) => if (a.compareTo(b) <= 0) a else b))
     val domainMax = asLong(ranges.map(_.max).reduce((a, b) => if (a.compareTo(b) >= 0) a else b))
     val probe = (domainMin + domainMax) / 2
-    val hit = SortedLayout.pruneFiles(ranges,
-      probe.asInstanceOf[Comparable[Any]], probe.asInstanceOf[Comparable[Any]])
+    val hit = SortedLayout.pruneFiles(ranges, Some(probe), Some(probe))
     assert(hit.size === ranges.size,
       "hash-sprayed files all overlap the probe — the layout, not the reader, is what buys pruning")
   }
@@ -80,13 +73,17 @@ class SortedLayoutSpec extends GraftSuite {
     val values = (1 to 100).map(i => f"ascii_$i%03d") ++ Seq("￿_sentinel", "😀_emoji")
     SortedLayout.write(values.toDF("k"), dir, "k", nFiles = 4)
     val ranges = SortedLayout.fileRanges(spark, dir, "k")
-    val probe = "😀_emoji".asInstanceOf[Comparable[Any]]
-    val hit = SortedLayout.pruneFiles(ranges, probe, probe)
+    val probe = "😀_emoji"
+    val hit = SortedLayout.pruneFiles(ranges, Some(probe), Some(probe))
     assert(hit.nonEmpty, "UTF-16 stat order pruned the file that holds the emoji term")
-    assert(SortedLayout.prunedRead(spark, dir, "k", probe, probe).count() === 1L)
+    val s = spark.newSession()
+    SegmentPruning.register(s, dir, "k")
+    val lookup = s.read.parquet(dir).filter(col("k") === probe)
+    assert(lookup.count() === 1L)
+    assert(scanFiles(lookup) === hit.size.toLong)
     // and the ASCII fast path still prunes to ≤2 files
-    val a = "ascii_050".asInstanceOf[Comparable[Any]]
-    assert(SortedLayout.pruneFiles(ranges, a, a).size <= 2)
+    val a = "ascii_050"
+    assert(SortedLayout.pruneFiles(ranges, Some(a), Some(a)).size <= 2)
   }
 
   test("range predicate across a file boundary scans only the touched files") {
@@ -94,11 +91,13 @@ class SortedLayoutSpec extends GraftSuite {
     import spark.implicits._
     SortedLayout.write((1L to 80000L).toDF("k"), dir, "k", nFiles = 8)
     val ranges = SortedLayout.fileRanges(spark, dir, "k")
-    val lo = 25000L.asInstanceOf[Comparable[Any]]
-    val hi = 35000L.asInstanceOf[Comparable[Any]]
-    val hit = SortedLayout.pruneFiles(ranges, lo, hi)
+    val (lo, hi) = (25000L, 35000L)
+    val hit = SortedLayout.pruneFiles(ranges, Some(lo), Some(hi))
     assert(hit.size < ranges.size, "a 12.5% range must not touch every file")
-    val n = SortedLayout.prunedRead(spark, dir, "k", lo, hi).count()
-    assert(n === 10001L)
+    val s = spark.newSession()
+    SegmentPruning.register(s, dir, "k")
+    val range = s.read.parquet(dir).filter(col("k") >= lo && col("k") <= hi)
+    assert(range.count() === 10001L)
+    assert(scanFiles(range) === hit.size.toLong)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.catalog.TableSpec
 import graft.sources.{SortedLayout, Tables}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pinot tableIndexConfig → engine index wiring (TableSpec.applyIndexConfig):
@@ -11,20 +10,6 @@ import org.apache.spark.sql.functions._
   * mapped to its Spark-native analog — nothing disappears silently.
   */
 class TableIndexConfigSpec extends GraftSuite {
-
-  private def scanFiles(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    df.collect()
-    def find(p: SparkPlan): Option[FileSourceScanExec] = p match {
-      case f: FileSourceScanExec => Some(f)
-      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
-      case q: QueryStageExec => find(q.plan)
-      case other => other.children.view.flatMap(find(_)).headOption
-    }
-    find(df.queryExecution.executedPlan).get.metrics("numFiles").value
-  }
 
   private val cfg =
     """{

@@ -123,7 +123,7 @@ class TextIndexSpec extends GraftSuite {
     val ranges = SortedLayout.fileRanges(spark, indexDir, "term")
     assert(ranges.size >= 4, "postings should span several files")
     val probe = "spark".asInstanceOf[Comparable[Any]]
-    val hit = SortedLayout.pruneFiles(ranges, probe, probe)
+    val hit = SortedLayout.pruneFiles(ranges, Some(probe), Some(probe))
     assert(hit.size < ranges.size / 2 + 1,
       s"term lookup touched ${hit.size}/${ranges.size} postings files — no pruning")
   }

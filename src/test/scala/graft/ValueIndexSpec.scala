@@ -32,7 +32,7 @@ class ValueIndexSpec extends GraftSuite {
     // pruning: the equality probe's postings lookup opens ≤2 of 8 files
     val ranges = SortedLayout.fileRanges(spark, dir, "v")
     assert(ranges.size >= 4)
-    assert(SortedLayout.pruneFiles(ranges, c(probe), c(probe)).size <= 2)
+    assert(SortedLayout.pruneFiles(ranges, Some(probe), Some(probe)).size <= 2)
   }
 
   test("string column: per-source equality partitions the table exactly") {

@@ -3,7 +3,6 @@ package graft
 import graft.plans.SegmentPruning
 import graft.sources.{SortedLayout, Tables, ZOrderLayout}
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Z-order layout: both columns get footer selectivity from ONE write —
@@ -11,20 +10,6 @@ import org.apache.spark.sql.functions._
   * on either dimension, multiplicative cuts on a 2-D box, and the
   * single-sorted counterexample (second column prunes nothing). */
 class ZOrderLayoutSpec extends GraftSuite {
-
-  private def scanFiles(df: DataFrame): Long = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    df.collect()
-    def find(p: SparkPlan): Option[FileSourceScanExec] = p match {
-      case f: FileSourceScanExec => Some(f)
-      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
-      case q: QueryStageExec => find(q.plan)
-      case other => other.children.view.flatMap(find(_)).headOption
-    }
-    find(df.queryExecution.executedPlan).get.metrics("numFiles").value
-  }
 
   private val nFiles = 16
 
