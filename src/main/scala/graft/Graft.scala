@@ -34,9 +34,17 @@ import org.apache.spark.sql.SparkSession
   *    195 -> 216 MB.
   *  - Runtime optimizer rule `plans.SmallSortRule`: a global sort or an
   *    unpartitioned window over small materialized AQE stages runs in one
-  *    partition, with no range-sampling job and no range shuffle. Rules
-  *    that change partitioning live in these extensions, so every session
-  *    and every `newSession()` child plans the same way.
+  *    partition, with no range-sampling job and no range shuffle.
+  *  - Query-stage preparation rule `plans.OnePartitionRule`: a shuffle whose
+  *    input already runs in one partition (a one-file scan, or an input an
+  *    earlier replacement left in one partition) becomes `CoalesceExec(1)`,
+  *    so a small query over single-file tables runs as one Spark job. Its
+  *    threshold, `OnePartitionRule.maxBytes`, is the size AQE's coalescing
+  *    folds into one partition anyway, shared with `SmallSortRule`; it has
+  *    no conf key because AQE's own coalesce settings already tune it, and
+  *    a second knob could only disagree with them.
+  *  Rules that change partitioning live in these extensions, so every
+  *  session and every `newSession()` child plans the same way.
   *
   * This is the only place a SparkSession is built: Bench, Verify, the dev
   * tools and the test base trait all call it, so the oracle gates the same
@@ -64,7 +72,10 @@ object Graft {
       .config("spark.sql.hive.thriftServer.singleSession", "true")
       .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.ui.enabled", "false")
-      .withExtensions(_.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortRule))
+      .withExtensions { e =>
+        e.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortRule)
+        e.injectQueryStagePrepRule(_ => graft.plans.OnePartitionRule)
+      }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // one "No Partition Defined" WARN per global window per execution:

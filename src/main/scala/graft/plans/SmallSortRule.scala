@@ -5,7 +5,6 @@ import scala.annotation.tailrec
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, ShuffleQueryStageExec}
-import org.apache.spark.sql.internal.SQLConf
 
 /** AQE runtime rule: a global sort, or a window with no PARTITION BY, over
   * small materialized input runs in one partition.
@@ -26,9 +25,8 @@ import org.apache.spark.sql.internal.SQLConf
   * join's size-only estimate can be too large until the range stage itself
   * materializes; coalescing its output then saves nothing). Injected in
   * `Graft.session` with `injectRuntimeOptimizerRule`, so every session and
-  * `newSession()` child has it. The threshold is AQE's: the coalesce
-  * `minPartitionSize` when `parallelismFirst` is set (the default), else the
-  * advisory partition size.
+  * `newSession()` child has it. The threshold is AQE's, shared with
+  * [[OnePartitionRule]]: `OnePartitionRule.maxBytes`.
   */
 object SmallSortRule extends Rule[LogicalPlan] {
 
@@ -40,18 +38,13 @@ object SmallSortRule extends Rule[LogicalPlan] {
 
   private def single(p: LogicalPlan): LogicalPlan = Repartition(1, shuffle = false, p)
 
-  private def maxBytes: Long =
-    if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
-      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
-    else conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-
   private def fits(child: LogicalPlan): Boolean =
     !singlePartition(child) && !exchangeRan(child) &&
       child.collectLeaves().forall {
         case s: LogicalQueryStage => s.isMaterialized
         case _ => false
       } &&
-      child.stats.sizeInBytes <= maxBytes
+      child.stats.sizeInBytes <= OnePartitionRule.maxBytes(conf)
 
   /** Already in one partition: a Repartition(1) under operators that keep
     * their child's partitioning (an inner sort or window this rule fixed). */

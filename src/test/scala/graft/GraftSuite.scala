@@ -44,6 +44,12 @@ trait GraftSuite extends AnyFunSuite with BeforeAndAfterAll {
     find(df.queryExecution.executedPlan).get
   }
 
+  /** The plan AQE finally ran for `df`, query stages included. */
+  def finalPlan(df: DataFrame): String = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan.toString
+    case p => p.toString
+  }
+
   /** Files the executed scan of `df` opened (its `numFiles` metric). */
   def scanFiles(df: DataFrame): Long = fileScan(df).metrics("numFiles").value
 

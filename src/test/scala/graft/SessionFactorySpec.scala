@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * JVM temp dir or hashes with murmur, so every artifact has one key rule;
   * `plans.Routes` is the only code besides the two function registrations
   * that installs optimizer rules, so index routes stay per session, and no
-  * conf key opts a session into a route.
+  * conf key opts a session into a route; `Graft.scala` is the only code
+  * that injects AQE rules, so Bench, Verify, the broker and the tests plan
+  * the same shuffles.
   * Comment lines are ignored; the search strings are assembled so this file
   * does not match itself. */
 class SessionFactorySpec extends AnyFunSuite {
@@ -23,6 +25,7 @@ class SessionFactorySpec extends AnyFunSuite {
   private val murmurCall = "MurmurHash3" + ".stringHash"
   private val newSessionCall = "newSession" + "()"
   private val ruleInstall = "experimental" + ".extraOptimizations="
+  private val extensionRules = Seq("inject" + "QueryStagePrepRule", "inject" + "RuntimeOptimizerRule")
   private val routeConfKeys = Seq("spark.graft" + ".segprune", "spark.graft" + ".startree",
     "graft" + ".bucketed")
 
@@ -66,5 +69,9 @@ class SessionFactorySpec extends AnyFunSuite {
     assert(filesWithCode(ruleInstall) ===
       Set("Routes.scala", "PinotFunctions.scala", "GraftExtensions.scala"))
     routeConfKeys.foreach(k => assert(filesWithCode(k) === Set.empty[String], k))
+  }
+
+  test("only Graft.scala injects AQE rules") {
+    extensionRules.foreach(r => assert(filesWithCode(r) === Set("Graft.scala"), r))
   }
 }

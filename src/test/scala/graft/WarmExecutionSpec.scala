@@ -6,8 +6,6 @@ import java.nio.file.{Files, StandardCopyOption}
 import graft.plans.SegmentPruning
 import graft.sources.{Fingerprint, SortedLayout, Tables}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, count, lit, row_number, sum}
 import org.apache.spark.sql.internal.SQLConf
@@ -17,16 +15,11 @@ import org.apache.spark.sql.internal.SQLConf
   * child sessions and pruning manifests are reused), and every reuse still
   * follows a changed data version. A small global sort or unpartitioned
   * window runs in one partition (`plans.SmallSortRule`), without the
-  * range-sampling and range-shuffle jobs. */
+  * range-sampling and range-shuffle jobs, and a query over small
+  * one-partition input plans no shuffle at all (`plans.OnePartitionRule`). */
 class WarmExecutionSpec extends GraftSuite {
 
   private def jobsOf[T](body: => T): (T, Int) = Bench.jobsOf(spark)(body)
-
-  /** The plan AQE finally ran, query stages included. */
-  private def finalPlan(df: DataFrame): String = df.queryExecution.executedPlan match {
-    case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan.toString
-    case p => p.toString
-  }
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
@@ -99,17 +92,26 @@ class WarmExecutionSpec extends GraftSuite {
     assert(Tables.read(s, dir).filter(col("k") < 1100).count() === 100L)
   }
 
-  test("a warm q_events_by_day runs at most 3 jobs and sorts without a range exchange") {
+  test("a warm q_events_by_day runs as one job with no exchange") {
     val q = SparkEntry.queries("q_events_by_day")
     val first = q(spark, sfDir).collect().toSeq
     val df = q(spark, sfDir)
     val (rows, jobs) = jobsOf(df.collect().toSeq)
-    assert(jobs <= 3, s"jobs:\n${finalPlan(df)}")
-    assert(!finalPlan(df).contains("rangepartitioning"), finalPlan(df))
+    assert(jobs === 1, s"jobs:\n${finalPlan(df)}")
+    assert(!finalPlan(df).contains("Exchange"), finalPlan(df))
     assert(rows === first)
   }
 
-  test("a sort larger than AQE's one-partition size keeps its range exchange") {
+  for (name <- Seq("q_sql_lateral", "q_sketch_hll"))
+    test(s"a warm $name sorts its join without a range exchange") {
+      val q = SparkEntry.queries(name)
+      val first = q(spark, sfDir).collect().toSeq
+      val df = q(spark, sfDir)
+      assert(df.collect().toSeq === first)
+      assert(!finalPlan(df).contains("rangepartitioning"), finalPlan(df))
+    }
+
+  test("input above AQE's one-partition size keeps its hash and range exchanges") {
     val key = SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE.key
     val saved = spark.conf.getOption(key)
     spark.conf.set(key, "1b")
@@ -117,6 +119,7 @@ class WarmExecutionSpec extends GraftSuite {
       val df = SparkEntry.queries("q_events_by_day")(spark, sfDir)
       df.collect()
       assert(finalPlan(df).contains("rangepartitioning"), finalPlan(df))
+      assert(finalPlan(df).contains("hashpartitioning"), finalPlan(df))
     } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
