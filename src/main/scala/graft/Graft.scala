@@ -43,8 +43,16 @@ import org.apache.spark.sql.SparkSession
   *    folds into one partition anyway, shared with `SmallSortRule`; it has
   *    no conf key because AQE's own coalesce settings already tune it, and
   *    a second knob could only disagree with them.
-  *  Rules that change partitioning live in these extensions, so every
-  *  session and every `newSession()` child plans the same way.
+  *  - Optimizer rule `plans.HllRegistersRule`: `approx_count_distinct`
+  *    (and the Pinot `DISTINCTCOUNTHLL` family that maps to it) runs as
+  *    `expressions.HllRegisters`, which keeps one column's HLL++ registers
+  *    in one typed buffer. Spark's own layout has one LONG buffer field per
+  *    10 registers (410 at rsd 0.02), and every task generated and
+  *    canonicalized projections over all of them before it read a row.
+  *    Bench at sf0.1, 4 cores: q_sketch_hll 0.47 -> 0.16 s. Answers are
+  *    bit-identical, so the rule has no conf key.
+  *  Rules that change plans live in these extensions, so every session and
+  *  every `newSession()` child plans the same way.
   *
   * This is the only place a SparkSession is built: Bench, Verify, the dev
   * tools and the test base trait all call it, so the oracle gates the same
@@ -73,6 +81,7 @@ object Graft {
       .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.ui.enabled", "false")
       .withExtensions { e =>
+        e.injectOptimizerRule(_ => graft.plans.HllRegistersRule)
         e.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortRule)
         e.injectQueryStagePrepRule(_ => graft.plans.OnePartitionRule)
       }

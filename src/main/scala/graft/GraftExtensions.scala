@@ -1,32 +1,15 @@
 package graft
 
 import graft.expressions._
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** SparkSessionExtensions registering the graft extension functions on the
-  * SQL surface (so `spark.sql("SELECT cosine_sim(a,b) ...")` works — the
-  * engine's equivalent of Pinot's scalar-function plugin registry,
-  * SURVEY.md §2.10 X0a).
-  *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`.
+/** The graft extension functions on the SQL surface (so
+  * `spark.sql("SELECT cosine_sim(a,b) ...")` works — the engine's
+  * equivalent of Pinot's scalar-function plugin registry, SURVEY.md §2.10
+  * X0a), plus the conf-guarded interval-join binning rule
+  * (`plans.RangeJoinBinningRule`). Session-wide rules that every graft
+  * session plans with are injected in `Graft.session` instead.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftExtensions.functions.foreach { case (name, builder) =>
-      ext.injectFunction(
-        (FunctionIdentifier(name),
-         new ExpressionInfo("graft.expressions", name),
-         builder))
-    }
-    // interval-join binning (conf-guarded, off by default) — turns naive
-    // BETWEEN theta-joins into equi-joins; see plans.RangeJoinBinningRule
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinBinningRule)
-  }
-}
-
 object GraftExtensions {
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "cosine_sim" -> (args => CosineSimilarity(args(0), args(1))),

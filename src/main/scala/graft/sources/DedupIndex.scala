@@ -34,7 +34,9 @@ object DedupIndex {
   /** Read the stored prep frame (no persist: at scale the corpus index is
     * read from storage per batch, not pinned in memory; its two consumers —
     * band explode and confirm join — each stream the compact columnar
-    * file). */
+    * file). The published dir is immutable, so the read goes through the
+    * `Tables.read` relation memo: a warm call lists no dir and reads no
+    * footer. */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    Tables.read(spark, dir)
 }

@@ -49,9 +49,11 @@ object SemDedupIndex {
   }
 
   /** The stored codebook, cell-sorted — the k×dim driver-side structure
-    * every consumer (new-batch assignment, cell spine) shares. */
+    * every consumer (new-batch assignment, cell spine) shares. Both reads
+    * go through the `Tables.read` relation memo: the published dirs are
+    * immutable, so a warm call lists no dir and reads no footer. */
   def readCodebook(spark: SparkSession, dir: String): Seq[(Int, Array[Float])] =
-    spark.read.parquet(s"$dir/codebook")
+    Tables.read(spark, s"$dir/codebook")
       .select(col("cell").cast("int"), col("centroid"))
       .collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
@@ -60,6 +62,6 @@ object SemDedupIndex {
 
   /** The stored corpus assignments `(vec_id, embedding, cell)`. */
   def readAssignments(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/assignments")
+    Tables.read(spark, s"$dir/assignments")
       .select(col("vec_id"), col("embedding"), col("cell").cast("int").as("cell"))
 }

@@ -22,11 +22,12 @@ class HttpSqlEndpointSpec extends GraftSuite {
   private lazy val base = s"http://localhost:${httpServer.getAddress.getPort}"
   private val client = HttpClient.newHttpClient()
 
-  private def post(sql: String, queryOptions: Option[String] = None): com.fasterxml.jackson.databind.JsonNode = {
+  private def post(sql: String, queryOptions: Option[String] = None,
+      at: => String = base): com.fasterxml.jackson.databind.JsonNode = {
     val body = mapper.createObjectNode()
     body.put("sql", sql)
     queryOptions.foreach(body.put("queryOptions", _))
-    val req = HttpRequest.newBuilder(URI.create(s"$base/query/sql"))
+    val req = HttpRequest.newBuilder(URI.create(s"$at/query/sql"))
       .POST(HttpRequest.BodyPublishers.ofString(mapper.writeValueAsString(body), StandardCharsets.UTF_8))
       .header("Content-Type", "application/json")
       .build()
@@ -319,6 +320,26 @@ class HttpSqlEndpointSpec extends GraftSuite {
       s"join plan should branch, got chain parents: $parents")
   }
 
+  test("DISTINCTCOUNTHLL answers Spark's HLL++ estimate from a one-buffer aggregate") {
+    val pinot = spark.newSession()
+    PinotFunctions.register(pinot)
+    Tables.registerViews(pinot, sfDir)
+    val srv = server.HttpSqlEndpoint.start(pinot, port = 0, maxRows = 1000)
+    try {
+      val at = s"http://localhost:${srv.getAddress.getPort}"
+      val sql = "SELECT DISTINCTCOUNTHLL(l_partkey) AS p, DISTINCTCOUNTHLL(l_orderkey) AS o FROM lineitem"
+      val r = post(sql, at = at)
+      assert(r.get("exceptions").size() === 0, r.toString)
+      val row = r.get("resultTable").get("rows").get(0)
+      // Spark's HyperLogLogPlusPlus over the sf0.001 fixture (exact: 200 and 1,473)
+      assert((row.get(0).asLong(), row.get(1).asLong()) === ((195L, 1379L)))
+      val plan = post(s"EXPLAIN PLAN FOR $sql", at = at).get("resultTable").get("rows")
+      val ops = (0 until plan.size()).map(i => plan.get(i).get(0).asText())
+      assert(ops.exists(_.contains("ObjectHashAggregate")), ops.mkString("\n"))
+      assert(!ops.exists(o => o.contains("HashAggregate") && !o.contains("ObjectHashAggregate")), ops.mkString("\n"))
+    } finally srv.stop(0)
+  }
+
   test("Pinot-mode endpoint answers the round-5 sketch vocabulary over the wire") {
     import org.apache.spark.sql.functions._
     // a console user points the broker URL at us and runs Pinot 1.2 sketch
@@ -329,16 +350,7 @@ class HttpSqlEndpointSpec extends GraftSuite {
     val srv = server.HttpSqlEndpoint.start(pinot, port = 0, maxRows = 1000)
     try {
       val b = s"http://localhost:${srv.getAddress.getPort}"
-      def postTo(sql: String): com.fasterxml.jackson.databind.JsonNode = {
-        val body = mapper.createObjectNode(); body.put("sql", sql)
-        val req = HttpRequest.newBuilder(URI.create(s"$b/query/sql"))
-          .POST(HttpRequest.BodyPublishers.ofString(
-            mapper.writeValueAsString(body), StandardCharsets.UTF_8))
-          .header("Content-Type", "application/json").build()
-        val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-        assert(resp.statusCode() === 200, resp.body())
-        mapper.readTree(resp.body())
-      }
+      def postTo(sql: String): com.fasterxml.jackson.databind.JsonNode = post(sql, at = b)
       val exactUsers = Tables.t(spark, sfDir, "events")
         .agg(countDistinct(col("user_id"))).collect().head.getLong(0)
       val r = postTo(
@@ -365,16 +377,7 @@ class HttpSqlEndpointSpec extends GraftSuite {
     val srv = server.HttpSqlEndpoint.start(pinot, port = 0, maxRows = 1000)
     try {
       val b = s"http://localhost:${srv.getAddress.getPort}"
-      def postTo(sql: String): com.fasterxml.jackson.databind.JsonNode = {
-        val body = mapper.createObjectNode(); body.put("sql", sql)
-        val req = HttpRequest.newBuilder(URI.create(s"$b/query/sql"))
-          .POST(HttpRequest.BodyPublishers.ofString(
-            mapper.writeValueAsString(body), StandardCharsets.UTF_8))
-          .header("Content-Type", "application/json").build()
-        val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
-        assert(resp.statusCode() === 200, resp.body())
-        mapper.readTree(resp.body())
-      }
+      def postTo(sql: String): com.fasterxml.jackson.databind.JsonNode = post(sql, at = b)
       val f = postTo(
         """SELECT max(m) AS deepest FROM (
           |  SELECT funnelMaxStep(toEpochMillis(ts), 259200000, 3,

@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `plans.Routes` is the only code besides the two function registrations
   * that installs optimizer rules, so index routes stay per session, and no
   * conf key opts a session into a route; `Graft.scala` is the only code
-  * that injects AQE rules, so Bench, Verify, the broker and the tests plan
-  * the same shuffles.
+  * that injects optimizer and AQE rules, so Bench, Verify, the broker and
+  * the tests plan the same aggregates and shuffles.
   * Comment lines are ignored; the search strings are assembled so this file
   * does not match itself. */
 class SessionFactorySpec extends AnyFunSuite {
@@ -25,7 +25,8 @@ class SessionFactorySpec extends AnyFunSuite {
   private val murmurCall = "MurmurHash3" + ".stringHash"
   private val newSessionCall = "newSession" + "()"
   private val ruleInstall = "experimental" + ".extraOptimizations="
-  private val extensionRules = Seq("inject" + "QueryStagePrepRule", "inject" + "RuntimeOptimizerRule")
+  private val extensionRules =
+    Seq("inject" + "QueryStagePrepRule", "inject" + "RuntimeOptimizerRule", "inject" + "OptimizerRule")
   private val routeConfKeys = Seq("spark.graft" + ".segprune", "spark.graft" + ".startree",
     "graft" + ".bucketed")
 
@@ -71,7 +72,7 @@ class SessionFactorySpec extends AnyFunSuite {
     routeConfKeys.foreach(k => assert(filesWithCode(k) === Set.empty[String], k))
   }
 
-  test("only Graft.scala injects AQE rules") {
+  test("only Graft.scala injects optimizer and AQE rules") {
     extensionRules.foreach(r => assert(filesWithCode(r) === Set("Graft.scala"), r))
   }
 }
