@@ -72,7 +72,9 @@ object Bench {
     for (path <- outFiles) {
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(path), jsonLine(_.toString) + "\n")
-      catch { case _: Throwable => () }
+      catch { case e: Exception =>
+        System.err.println(s"[bench] could not write $path: ${e.getMessage}")
+      }
     }
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

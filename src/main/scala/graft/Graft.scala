@@ -3,6 +3,8 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session factory for the graft engine.
   *
@@ -51,8 +53,14 @@ import org.apache.spark.sql.SparkSession
   *    canonicalized projections over all of them before it read a row.
   *    Bench at sf0.1, 4 cores: q_sketch_hll 0.47 -> 0.16 s. Answers are
   *    bit-identical, so the rule has no conf key.
-  *  Rules that change plans live in these extensions, so every session and
-  *  every `newSession()` child plans the same way.
+  *  - The graft SQL functions `cosine_sim`, `dot_product`, `simhash64`,
+  *    `fingerprint64` and `byte_avg` (the engine's equivalent of Pinot's
+  *    scalar-function plugin registry, SURVEY.md §2.10 X0a), and the
+  *    optimizer rule `plans.RangeJoinBinningRule`, which returns at once
+  *    unless `spark.graft.rangeJoin.binWidth` is set.
+  *  Functions and rules live in these extensions, so every session and
+  *  every `newSession()` child resolves the same names and plans the same
+  *  way.
   *
   * This is the only place a SparkSession is built: Bench, Verify, the dev
   * tools and the test base trait all call it, so the oracle gates the same
@@ -64,6 +72,17 @@ object Graft {
     * processor. The one place that env var is read. */
   def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The graft SQL functions: name, expression class, builder. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = {
+    import graft.expressions._
+    Seq(
+      ("cosine_sim", classOf[CosineSimilarity], args => CosineSimilarity(args(0), args(1))),
+      ("dot_product", classOf[DotProduct], args => DotProduct(args(0), args(1))),
+      ("simhash64", classOf[SimHash64], args => SimHash64(args.head)),
+      ("fingerprint64", classOf[Fingerprint64], args => Fingerprint64(args.head)),
+      ("byte_avg", classOf[ByteAvg], args => ByteAvg(args.head)))
+  }
 
   def session(cores: Int = Graft.cores, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
@@ -81,7 +100,14 @@ object Graft {
       .config("spark.sql.codegen.cache.maxEntries", "8000")
       .config("spark.ui.enabled", "false")
       .withExtensions { e =>
+        functions.foreach { case (name, cls, builder) =>
+          e.injectFunction((FunctionIdentifier(name),
+            new ExpressionInfo(cls.getCanonicalName, null, name, null, "", "", "", "", "", "",
+              "built-in"),
+            builder))
+        }
         e.injectOptimizerRule(_ => graft.plans.HllRegistersRule)
+        e.injectOptimizerRule(_ => graft.plans.RangeJoinBinningRule)
         e.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortRule)
         e.injectQueryStagePrepRule(_ => graft.plans.OnePartitionRule)
       }

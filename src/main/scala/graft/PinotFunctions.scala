@@ -923,17 +923,18 @@ object PinotFunctions {
   val DefaultInSubqueryMaxBytes: Long = 4L << 20
 
   // Per-session IN_SUBQUERY memo (weak session keys: caches die with the
-  // session). Guarded by its own lock; entries are (inner sql -> IdSet).
+  // session). Guarded by its own lock; entries are
+  // (inner sql -> (input files and data versions, IdSet)).
   private val idSetCaches =
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, String]]()
+      java.util.concurrent.ConcurrentHashMap[String, (String, String)]]()
 
   private def idSetCacheFor(spark: org.apache.spark.sql.SparkSession)
-      : java.util.concurrent.ConcurrentHashMap[String, String] =
+      : java.util.concurrent.ConcurrentHashMap[String, (String, String)] =
     idSetCaches.synchronized {
       var m = idSetCaches.get(spark)
       if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, String]()
+        m = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
         idSetCaches.put(spark, m)
       }
       m
@@ -1381,10 +1382,11 @@ object PinotFunctions {
     //    plans.SegmentPruningRule.
     //  - MEMOIZATION: the builder runs at ANALYSIS time, so EXPLAIN, view
     //    re-resolution, or any re-analysis would re-run the inner query
-    //    eagerly. Results are memoized per (session, sql) for the life of
-    //    the session; set `graft.pinot.inSubqueryMemoize=false` for
-    //    re-read-on-every-analysis semantics (fresh data, Pinot-broker
-    //    behavior).
+    //    eagerly. Results are memoized per (session, sql) together with the
+    //    inner query's input files and their data versions, which planning
+    //    the inner query yields without running a job: a rewritten input
+    //    re-runs the inner query, so the memo never serves an IdSet of old
+    //    data.
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "in_subquery",
       (args: Seq[Expression]) => {
@@ -1393,10 +1395,14 @@ object PinotFunctions {
           case other => throw new IllegalArgumentException(
             s"IN_SUBQUERY inner query must be a string literal, got $other")
         }
-        val memoize = spark.conf.get("graft.pinot.inSubqueryMemoize", "true").toBoolean
-        val cached = if (memoize) Option(idSetCacheFor(spark).get(sql)) else None
+        val inner = spark.sql(sql)
+        val version = inner.inputFiles.sorted.map { f =>
+          s"$f@${graft.sources.Fingerprint.of(graft.sources.Fingerprint.canon(f))}"
+        }.mkString("|")
+        val memo = idSetCacheFor(spark)
+        val cached = Option(memo.get(sql)).collect { case (`version`, v) => v }
         val idSet = cached.getOrElse {
-          val rows = spark.sql(sql).collect()
+          val rows = inner.collect()
           require(rows.length == 1 && rows.head.length == 1 && !rows.head.isNullAt(0),
             s"IN_SUBQUERY inner query must return exactly one IdSet value: $sql")
           val v = rows.head.getString(0)
@@ -1410,7 +1416,7 @@ object PinotFunctions {
               "Rewrite as a semi-join — `WHERE col IN (SELECT …)` / LEFT SEMI " +
               "JOIN — which shuffles or broadcasts through the engine instead, " +
               "or raise the budget if the set is genuinely this large.")
-          if (memoize) idSetCacheFor(spark).put(sql, v)
+          memo.put(sql, (version, v))
           v
         }
         graft.expressions.InIdSet(args(0), Literal(idSet))
@@ -1434,26 +1440,5 @@ object PinotFunctions {
     val s = Graft.child(spark, s"pinot-views ${graft.sources.Fingerprint.canon(dir)}")(register)
     graft.sources.Tables.registerViews(s, dir)
     s
-  }
-
-  /** The Pinot-vocabulary child session whose PARSER applies [[rewriteBroker]]
-    * (round 10): `session.sql("... timestampAdd(ts, 'MONTH', 1) ...")` and
-    * the GAPFILL broker spelling work DIRECTLY through `session.sql`, not
-    * just via the HTTP/JDBC endpoints — Spark's parser owns the
-    * timestampadd/timestampdiff/dateadd/datediff names (AstBuilder
-    * .visitTimestampadd) and hard-rejects string-literal units before any
-    * registry entry can answer, so the only uniform hook is a text rewrite
-    * BEFORE the parse. The injected parser is installed once on the
-    * context's extensions and gated by the session conf
-    * `graft.pinot.parserRewrite`, so the parent session and plain
-    * `newSession()`s parse untouched; the endpoints' explicit
-    * [[rewriteBroker]] stays (rewrites are idempotent — a renamed call
-    * contains no trigger name). Built once per parent ([[Graft.child]]). */
-  def newPinotSession(parent: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
-    org.apache.spark.sql.graft.GraftBridge.installRewritingParser(parent, rewriteBroker)
-    Graft.child(parent, "pinot-parser") { s =>
-      s.conf.set("graft.pinot.parserRewrite", "true")
-      register(s)
-    }
   }
 }

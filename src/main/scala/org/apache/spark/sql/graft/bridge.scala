@@ -21,67 +21,4 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  private val parserInstalled =
-    java.util.Collections.synchronizedMap(
-      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-
-  /** Inject a SQL-TEXT-rewriting parser into the session context's
-    * extensions (round 10). The wrapper delegates every ParserInterface
-    * method and rewrites only the statement-level texts (parsePlan /
-    * parseQuery / parsePlanWithParameters), gated PER SESSION by the conf
-    * flag `graft.pinot.parserRewrite` — sessions without the flag parse
-    * untouched. Applies to sessions whose SessionState is built AFTER this
-    * call (`spark.newSession()`); already-built sessions keep their
-    * parser, so a parent ANSI session is never affected. Idempotent per
-    * extensions instance. */
-  def installRewritingParser(
-      spark: org.apache.spark.sql.SparkSession,
-      rewrite: String => String): Unit = {
-    val ext = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].extensions
-    if (parserInstalled.putIfAbsent(ext, java.lang.Boolean.TRUE) == null) {
-      ext.injectParser { case (session, delegate) =>
-        new RewritingParser(session, delegate, rewrite)
-      }
-    }
-  }
-}
-
-/** Delegating parser applying a text rewrite to statement parses when the
-  * owning session opts in via `graft.pinot.parserRewrite`. */
-private final class RewritingParser(
-    session: org.apache.spark.sql.SparkSession,
-    delegate: org.apache.spark.sql.catalyst.parser.ParserInterface,
-    rewrite: String => String)
-  extends org.apache.spark.sql.catalyst.parser.ParserInterface {
-
-  import org.apache.spark.sql.catalyst.parser.{ParameterContext, ParserInterface}
-  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-
-  private def rw(sqlText: String): String =
-    if (session.conf.get("graft.pinot.parserRewrite", "false") == "true")
-      rewrite(sqlText)
-    else sqlText
-
-  override def parsePlan(sqlText: String): LogicalPlan =
-    delegate.parsePlan(rw(sqlText))
-  override def parsePlanWithParameters(
-      sqlText: String, ctx: ParameterContext): LogicalPlan =
-    delegate.parsePlanWithParameters(rw(sqlText), ctx)
-  override def parseQuery(sqlText: String): LogicalPlan =
-    delegate.parseQuery(rw(sqlText))
-  override def parseExpression(sqlText: String) =
-    delegate.parseExpression(sqlText)
-  override def parseTableIdentifier(sqlText: String) =
-    delegate.parseTableIdentifier(sqlText)
-  override def parseFunctionIdentifier(sqlText: String) =
-    delegate.parseFunctionIdentifier(sqlText)
-  override def parseMultipartIdentifier(sqlText: String) =
-    delegate.parseMultipartIdentifier(sqlText)
-  override def parseRoutineParam(sqlText: String) =
-    delegate.parseRoutineParam(sqlText)
-  override def parseTableSchema(sqlText: String) =
-    delegate.parseTableSchema(sqlText)
-  override def parseDataType(sqlText: String) =
-    delegate.parseDataType(sqlText)
 }

@@ -5,7 +5,8 @@ import graft.functions._
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst expression semantics: cosine_sim / dot_product /
-  * simhash64 / fingerprint64, in both Column and SQL registration form. */
+  * simhash64 / fingerprint64, in both Column and SQL form; the SQL names
+  * come from `Graft.session`, so every session and child has them. */
 class ExpressionSpec extends GraftSuite {
   import spark.implicits._
 
@@ -55,6 +56,23 @@ class ExpressionSpec extends GraftSuite {
     assert(sh === TextOps.simhash64(
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
         Array(UTF8String.fromString("a"), UTF8String.fromString("b"), UTF8String.fromString("c")))))
+  }
+
+  test("Graft.session installs the SQL functions: children resolve them with no registration") {
+    val expected = TextOps.simhash64(
+      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array(UTF8String.fromString("a"))))
+    def resolves(s: org.apache.spark.sql.SparkSession): Unit = {
+      val r = s.sql("SELECT cosine_sim(array(cast(1.0 as float)), array(cast(2.0 as float))) AS c, " +
+        "simhash64(array('a')) AS h").head()
+      assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
+      assert(r.getLong(1) === expected)
+      val info = s.sessionState.functionRegistry.lookupFunction(
+        org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"))
+      assert(info.map(_.getSource) === Some("built-in"))
+    }
+    resolves(spark)
+    resolves(PinotFunctions.viewsSession(spark, sfDir))
+    resolves(Graft.child(spark, "expression-spec")(_ => ()))
   }
 
   test("simhash: near-identical docs within small hamming distance, distinct docs far") {

@@ -9,15 +9,12 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session: one local Graft.session per suite (lazy, small core
-  * count for test speed), with the graft extensions registered. Scratch
+  * count for test speed), with the same functions and rules as every
+  * Bench, Verify and broker session. Scratch
   * dirs come from [[tempDir]]: all live under one per-suite root that is
   * deleted after the suite's last test. */
 trait GraftSuite extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = {
-    val s = Graft.session(cores = 4, appName = getClass.getSimpleName)
-    GraftExtensions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = Graft.session(cores = 4, appName = getClass.getSimpleName)
   val sfDir = "/root/testdata/sf0.001"
 
   private var tempRoot: Option[Path] = None

@@ -132,20 +132,34 @@ class IdSetSpec extends GraftSuite {
     } finally sc.removeSparkListener(listener)
     // memoized result still answers correctly
     assert(s.sql(q).head().getLong(0) === first)
-    // opting out re-executes (observable as jobs on re-analysis)
-    s.conf.set("graft.pinot.inSubqueryMemoize", "false")
-    val jobs2 = new java.util.concurrent.atomic.AtomicInteger
-    val l2 = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs2.incrementAndGet()
+  }
+
+  test("IN_SUBQUERY memo follows its inputs: a rewritten table yields the new ids") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import spark.implicits._
+    // the shared fixtures, except nation: a one-file table this test rewrites
+    val dir = tempDir("fixtures")
+    Tables.all.filterNot(_ == "nation").foreach { n =>
+      Files.createSymbolicLink(Paths.get(dir, s"$n.parquet"), Paths.get(sfDir, s"$n.parquet"))
     }
-    sc.addSparkListener(l2)
-    try {
-      s.sql(q).queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode)
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (jobs2.get() == 0 && System.nanoTime() < deadline) Thread.sleep(100)
-      assert(jobs2.get() > 0, "memoize=false must re-run the inner query on analysis")
-    } finally sc.removeSparkListener(l2)
+    def writeNation(ids: Seq[Long]): Unit = {
+      val out = tempDir("nation")
+      ids.toDF("n_nationkey").coalesce(1).write.mode("overwrite").parquet(out)
+      val part = new java.io.File(out).listFiles.filter(_.getName.endsWith(".parquet")).head
+      Files.move(part.toPath, Paths.get(dir, "nation.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    val s = spark.newSession()
+    PinotFunctions.register(s)
+    val q =
+      """SELECT r_regionkey FROM region
+        |WHERE IN_SUBQUERY(CAST(r_regionkey AS BIGINT), 'SELECT IDSET(n_nationkey) FROM nation')
+        |ORDER BY r_regionkey""".stripMargin
+    def ids(): Seq[Int] = s.sql(q).collect().map(_.getInt(0)).toSeq
+    writeNation(Seq(0L, 1L))
+    Tables.registerViews(s, dir)
+    assert(ids() === Seq(0, 1))
+    writeNation(Seq(2L, 3L, 4L))
+    Tables.registerViews(s, dir)
+    assert(ids() === Seq(2, 3, 4), "the memo must not serve the IdSet of the old file")
   }
 }

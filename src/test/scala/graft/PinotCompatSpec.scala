@@ -722,37 +722,4 @@ class PinotCompatSpec extends GraftSuite {
     assert(r.getAs[Long]("hit") === 2L, "0-based index")
     assert(r.getAs[Long]("miss") === -1L, "-1 for missing (Pinot contract)")
   }
-
-  test("round 10: newPinotSession parses the literal Pinot STRING-UNIT " +
-      "spellings through session.sql (parser-level rewriteBroker)") {
-    val ps = PinotFunctions.newPinotSession(spark)
-    Tables.registerViews(ps, sfDir)
-    // the literal Pinot spellings Spark's parser owns and rejects —
-    // visitTimestampadd hard-errors on a string-literal unit, so these can
-    // only work through the injected rewriting parser
-    val r = ps.sql(
-      """SELECT timestampAdd('MONTH', 1, TIMESTAMP '2024-01-31 10:00:00') AS plus1m,
-        |       timestampDiff('MONTH', TIMESTAMP '2024-01-31 00:00:00',
-        |                     TIMESTAMP '2024-02-29 00:00:00') AS diffm,
-        |       dateAdd('DAY', 3, TIMESTAMP '2024-05-01 00:00:00') AS plus3d
-        |""".stripMargin).collect().head
-    // Joda add-based semantics: Jan 31 + 1 month clamps to Feb 29 (leap)
-    assert(r.getAs[java.sql.Timestamp]("plus1m").toString === "2024-02-29 10:00:00.0")
-    // Jan 31 → Feb 29 IS one full month under add-based diff (the clamped
-    // add lands exactly) — ChronoUnit.between would say 0
-    assert(r.getAs[Long]("diffm") === 1L)
-    assert(r.getAs[java.sql.Timestamp]("plus3d").toString === "2024-05-04 00:00:00.0")
-    // identifier-unit Spark forms still parse unchanged on the same session
-    assert(ps.sql("SELECT TIMESTAMPADD(HOUR, 1, TIMESTAMP '2024-05-01 00:00:00') AS t")
-      .collect().head.getAs[java.sql.Timestamp]("t").toString === "2024-05-01 01:00:00.0")
-    // the PARENT session is untouched: the literal spelling still fails
-    intercept[Exception] {
-      spark.sql("SELECT timestampAdd('MONTH', 1, TIMESTAMP '2024-01-31 10:00:00')").collect()
-    }
-    // and a plain newSession() without the flag parses untouched too
-    intercept[Exception] {
-      val plain = spark.newSession()
-      plain.sql("SELECT timestampAdd('MONTH', 1, TIMESTAMP '2024-01-31 10:00:00')").collect()
-    }
-  }
 }

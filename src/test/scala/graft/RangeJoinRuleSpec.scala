@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 /** The optimizer rule (plans.RangeJoinBinningRule) on a NAIVE BETWEEN
   * theta-join: with the conf set, users get the binned equi-join plan
   * without rewriting their query; results identical to the nested-loop
-  * plan; off by default. */
+  * plan; off by default. `Graft.session` installs the rule, so every
+  * `newSession()` child has it with no registration call. */
 class RangeJoinRuleSpec extends GraftSuite {
 
   // frames must be created ON the session under test — a DataFrame runs
@@ -25,7 +26,6 @@ class RangeJoinRuleSpec extends GraftSuite {
 
   test("with binWidth set, a naive BETWEEN join plans as an equi-join") {
     val s = spark.newSession()
-    GraftExtensions.register(s)
     s.conf.set("spark.graft.rangeJoin.binWidth", "10.0")
     val df = naiveJoin(s)
     val rewritten = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -42,7 +42,6 @@ class RangeJoinRuleSpec extends GraftSuite {
 
   test("rule fires with the conjuncts in swapped order (p <= hi AND p >= lo)") {
     val s = spark.newSession()
-    GraftExtensions.register(s)
     s.conf.set("spark.graft.rangeJoin.binWidth", "10.0")
     import s.implicits._
     val rnd = new scala.util.Random(17)
@@ -66,7 +65,6 @@ class RangeJoinRuleSpec extends GraftSuite {
 
   test("auto mode: the rule derives the bin width — no hand tuning, same results") {
     val s = spark.newSession()
-    GraftExtensions.register(s)
     s.conf.set("spark.graft.rangeJoin.binWidth", "auto")
     val df = naiveJoin(s)
     val plan = df.queryExecution.executedPlan.toString
@@ -108,7 +106,6 @@ class RangeJoinRuleSpec extends GraftSuite {
 
   test("rule is off without the conf: plan unchanged") {
     val s = spark.newSession()
-    GraftExtensions.register(s)
     val plan = naiveJoin(s).queryExecution.executedPlan.toString
     assert(!plan.contains("__graft_bin"))
   }

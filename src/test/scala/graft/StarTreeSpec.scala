@@ -110,8 +110,7 @@ class StarTreeSpec extends GraftSuite {
 
   test("sessions that did not register stay on the raw scan (conf isolation)") {
     routed() // the route lives in that session only
-    val other = spark.newSession()
-    GraftExtensions.register(other) // other rules present, no routes
+    val other = spark.newSession() // the session's rules present, no routes
     val df = other.read.parquet(factPath).groupBy("d1").agg(sum("m1"))
     assert(!df.queryExecution.executedPlan.toString.contains("graft_startree_"))
   }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * best-of-3 probe wall for the standard 20-query frame, candidate files
   * opened (post partition-pruning), and candidate rows scanned.
   *
-  * Usage: runMain graft.tools.AnnCellTrend <sfDir> [nCells,nCells,...]
+  * Usage: sbt "Test/runMain graft.tools.AnnCellTrend <sfDir> [nCells,nCells,...]"
   */
 object AnnCellTrend {
 

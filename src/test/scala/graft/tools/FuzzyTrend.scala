@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * Generates seeded random two-word dictionaries (adjective+noun over a
   * fixed syllable pool, the part-name shape) at growing sizes and times
   * selfJoin at d=2, printing size, seconds, and output pairs.
-  * Usage: runMain graft.tools.FuzzyTrend [sizes,csv]  (default 10k,40k,160k)
+  * Usage: sbt "Test/runMain graft.tools.FuzzyTrend [sizes,csv]"  (default 10k,40k,160k)
   */
 object FuzzyTrend {
   def main(args: Array[String]): Unit = {

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *  - triangles: the q_graph_triangles basket projection (parts co-occurring
   *    in an order), full census count.
   *
-  * Usage: runMain graft.tools.GraphTrend <dir1> <dir2 ...>; best-of-2 per
+  * Usage: sbt "Test/runMain graft.tools.GraphTrend <dir1> <dir2 ...>"; best-of-2 per
   * dir, per-step seconds on stderr. SPARK_GRAFT_TREND_OPS (comma list of
   * pagerank,labelprop,triangles,triangles_batched) selects a subset —
   * re-measuring one op added after a committed full run must not re-pay

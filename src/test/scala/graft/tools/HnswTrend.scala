@@ -9,7 +9,7 @@ import graft.ops.Hnsw
   * shape), pure JVM — this is a property of the graph kernel, which is
   * exactly what executes per probed cell at any corpus size.
   *
-  * Usage: runMain graft.tools.HnswTrend  (prints one table row per size)
+  * Usage: sbt "Test/runMain graft.tools.HnswTrend"  (prints one table row per size)
   */
 object HnswTrend {
 

@@ -10,7 +10,7 @@ import graft.{Graft, Registry, SparkEntry}
   * partitioning for a not-yet-materialized cache, so it would show
   * exchanges that the steady state (the bench's, and every post-build
   * consumer's) does not pay.
-  * Usage: runMain graft.tools.Plans [queryName...]
+  * Usage: sbt "Test/runMain graft.tools.Plans [queryName...]"
   */
 object Plans {
   def main(args: Array[String]): Unit = {

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * keeper decisions stay bit-deterministic at every k (the codebook only
   * BLOCKS; removal decisions are float-fold comparisons).
   *
-  * Usage: runMain graft.tools.SemDedupTrend <dir> <k1,k2,...>
+  * Usage: sbt "Test/runMain graft.tools.SemDedupTrend <dir> <k1,k2,...>"
   */
 object SemDedupTrend {
   def main(args: Array[String]): Unit = {

@@ -7,7 +7,8 @@
 # with GRAFT_XMX; repo root is derived from this script's location.
 set -e
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
-CP="$ROOT/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# test-classes holds the trend drivers (graft.tools.*Trend, Plans)
+CP="$ROOT/target/scala-2.13/classes:$ROOT/target/scala-2.13/test-classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED
 --add-opens=java.base/java.lang.invoke=ALL-UNNAMED
 --add-opens=java.base/java.lang.reflect=ALL-UNNAMED
