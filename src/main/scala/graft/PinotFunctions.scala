@@ -1342,17 +1342,21 @@ object PinotFunctions {
     "avg_value_integer_sum_tuple_sketch", "sum_values_integer_sum_tuple_sketch")
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    registry.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+    val functions = spark.sessionState.functionRegistry
+    // 23 Pinot names shadow a Spark built-in of the same name on purpose
+    // (percentile, substr, split, year, ...). Dropping the built-in first
+    // makes the replacement explicit, and Spark logs no "replaced a
+    // previously registered function" WARN for it; resolution is the same.
+    def install(name: String, builder: Seq[Expression] => Expression): Unit = {
+      functions.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+      functions.createOrReplaceTempFunction(name, builder, "built-in")
     }
+    registry.foreach { case (name, builder) => install(name, builder) }
     val byName = registry.toMap
     underscoreAliases.foreach { u =>
-      val builder = byName.getOrElse(u.replace("_", ""),
+      install(u, byName.getOrElse(u.replace("_", ""),
         throw new IllegalStateException(
-          s"underscore alias '$u' has no flattened registry key"))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        u, builder, "built-in")
+          s"underscore alias '$u' has no flattened registry key")))
     }
     // GAPFILL in the FROM position — Spark's table-function registry is
     // the natural hook for a row-expanding broker form (a scalar registry
@@ -1361,8 +1365,7 @@ object PinotFunctions {
     spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
       "gapfill", (args: Seq[Expression]) => gapfillPlan(spark, args), "built-in")
     Seq("fill", "timeserieson").foreach { kind =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        kind, (args: Seq[Expression]) => GapfillArgMarker(kind, args), "built-in")
+      install(kind, (args: Seq[Expression]) => GapfillArgMarker(kind, args))
     }
     // IN_SUBQUERY(col, 'inner sql') — Pinot's broker-side two-phase form:
     // the inner query (typically `SELECT id_set(x) FROM …`) is executed
@@ -1387,7 +1390,7 @@ object PinotFunctions {
     //    the inner query yields without running a job: a rewritten input
     //    re-runs the inner query, so the memo never serves an IdSet of old
     //    data.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+    install(
       "in_subquery",
       (args: Seq[Expression]) => {
         val sql = args(1) match {
@@ -1420,7 +1423,7 @@ object PinotFunctions {
           v
         }
         graft.expressions.InIdSet(args(0), Literal(idSet))
-      }, "built-in")
+      })
     // Pinot's implicit LIMIT 10 (O2) and default null substitution (F6) —
     // both conf-guarded, off unless the session opts in
     // (graft.pinot.implicitLimit / graft.pinot.nullDefaults)

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -53,7 +53,14 @@ object Dedup {
     * bucket are skipped (expected loss fraction ≈ 1 − 1/nSplit for that
     * bucket only) — near-dups get bands−1 further chances on other bands.
     * Deterministic (id-based salt, no RNG), so the DuckDB oracle replicates
-    * it exactly. */
+    * it exactly.
+    *
+    * Callers are the self-join forms (MinHash, SimHash, n-gram, SemDeDup),
+    * whose pairs come from a join of the returned frame with itself. The
+    * input bands are evaluated twice, once for the hot-bucket count and
+    * once for the sub assignment. The incremental path does not call it:
+    * [[incrementalCore]] applies the same rule inside its one bucket
+    * shuffle. */
   private[graft] def saltSplit(
       bandsDf: DataFrame,
       bucketCols: Seq[String],
@@ -90,11 +97,12 @@ object Dedup {
   /** The MinHash prep PLAN (unpersisted): distinct shingle hashes,
     * signature, sorted shingles + size — `(doc_id, sig, sh_sorted, n_sh)`,
     * the contract [[graft.sources.DedupIndex]] persists for the corpus side
-    * of incremental dedup. fanOut guards the CPU-heavy shingle/minhash
-    * stage against single-row-group sources. */
+    * of incremental dedup. Callers whose input is a whole corpus wrap it in
+    * `Par.fanOut` (the CPU-heavy shingle/minhash stage against
+    * single-row-group sources); an incremental batch is read as it is. */
   private[graft] def minhashPrepPlan(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, k: Int): DataFrame =
-    Par.fanOut(df).select(
+    df.select(
         col(idCol).as("doc_id"),
         array_distinct(shingleHashes(tokens(col(textCol)), shingleN)).as("shingles"))
       .withColumn("sig", minhashFromHashes(col("shingles"), k))
@@ -102,11 +110,11 @@ object Dedup {
       .withColumn("n_sh", size(col("sh_sorted")))
       .drop("shingles")
 
-  /** Shared MinHash prep, persisted: every in-process caller feeds the
-    * frame to both a band explode and a confirm join. */
+  /** Shared MinHash prep of a whole corpus, persisted: every self-join
+    * caller feeds the frame to both a band explode and a confirm join. */
   private def minhashPrep(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, k: Int): DataFrame =
-    minhashPrepPlan(df, idCol, textCol, shingleN, k).persist()
+    minhashPrepPlan(Par.fanOut(df), idCol, textCol, shingleN, k).persist()
 
   /** Exact-Jaccard confirmation of candidate `pairs` (columns aName,
     * bName) against the prep frames: two-pointer sorted-intersect kernel,
@@ -127,11 +135,11 @@ object Dedup {
     * ingest batch is checked against the standing corpus without any
     * corpus×corpus work. Both sides get the same shingle→MinHash→band
     * computation (per-doc, side-independent — in production the corpus
-    * bands are computed once at ingest and stored); the salt-split bucket
-    * cap runs over the UNION of both sides' band rows (bucket pressure is
-    * a property of the combined population), and the candidate join is
-    * strictly new × corpus. Cost per increment: O(|new| · bands) hashing +
-    * a join whose left side is the increment — never the corpus².
+    * signatures are computed once at ingest and stored, see
+    * [[incrementalNearDupPairsIndexed]]); candidates come from one shuffle
+    * of both sides' band rows by bucket key ([[incrementalCore]]). Cost per
+    * increment: O(|new| · bands) hashing + one pass over the band rows —
+    * never the corpus².
     *
     * Returns (new_id, corpus_id, jaccard) for confirmed pairs. */
   def incrementalNearDupPairs(
@@ -147,8 +155,8 @@ object Dedup {
       maxBucket: Int = 256): DataFrame = {
     require(bands * rowsPerBand == k, s"bands($bands) x rows($rowsPerBand) must equal k($k)")
     incrementalCore(
-      minhashPrep(newDf, idCol, textCol, shingleN, k),
-      minhashPrep(corpusDf, idCol, textCol, shingleN, k),
+      minhashPrepPlan(newDf, idCol, textCol, shingleN, k),
+      minhashPrepPlan(Par.fanOut(corpusDf), idCol, textCol, shingleN, k),
       bands, rowsPerBand, threshold, maxBucket)
   }
 
@@ -156,7 +164,7 @@ object Dedup {
     * ([[graft.sources.DedupIndex]]): identical semantics and output to
     * [[incrementalNearDupPairs]] (same deterministic hashes — DedupIndexSpec
     * asserts bit parity), but the corpus side's signatures are READ, not
-    * re-derived, so each batch costs O(|batch|) hashing + the band join —
+    * re-derived, so each batch costs O(|batch|) hashing + the band pass —
     * the shape that survives a daily 100 TB-corpus ingest. */
   def incrementalNearDupPairsIndexed(
       newDf: DataFrame,
@@ -171,27 +179,67 @@ object Dedup {
       maxBucket: Int = 256): DataFrame = {
     require(bands * rowsPerBand == k, s"bands($bands) x rows($rowsPerBand) must equal k($k)")
     incrementalCore(
-      minhashPrep(newDf, idCol, textCol, shingleN, k), corpusPrep,
+      minhashPrepPlan(newDf, idCol, textCol, shingleN, k), corpusPrep,
       bands, rowsPerBand, threshold, maxBucket)
   }
 
+  /** New × corpus LSH candidates of two prep frames, confirmed by exact
+    * Jaccard. The band rows of both sides go through ONE shuffle by bucket
+    * key, sorted within each partition so that a task streams one bucket
+    * at a time ([[bucketPairs]]): the bucket's row count `n` sets the
+    * salt-split cap exactly as [[saltSplit]] does over the combined
+    * population (`nsplit = ceil(n / maxBucket)` when `n > maxBucket`, else
+    * 1; a member's sub is `pmod(doc_id, nsplit)`), and each new id pairs
+    * with the corpus ids of its own sub: the pairs of saltSplit plus a
+    * new × corpus join on (bk, sub) (DedupCapSpec asserts it on a capped
+    * bucket), from one pass over the band rows. Nothing is persisted, so
+    * building the query leaves the session's cache untouched. */
   private def incrementalCore(nb: DataFrame, cb: DataFrame,
       bands: Int, rowsPerBand: Int, threshold: Double, maxBucket: Int): DataFrame = {
     def bandRows(base: DataFrame, isNew: Boolean) = base
-      .select(lit(isNew).as("is_new"), col("doc_id"),
-        explode(lshBands(col("sig"), bands, rowsPerBand)).as("bk"))
-    // cap over the COMBINED bucket population: a hot band key is hot
-    // regardless of which side its members came from
-    val salted = saltSplit(
-        bandRows(nb, isNew = true).unionByName(bandRows(cb, isNew = false)),
-        Seq("bk"), "doc_id", maxBucket)
-      .persist() // both sides of the new×corpus join
-    val pairs = salted.filter(col("is_new")).as("a")
-      .join(salted.filter(!col("is_new")).as("b"),
-        col("a.bk") === col("b.bk") && col("a.sub") === col("b.sub"))
-      .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("corpus_id"))
+      .select(explode(lshBands(col("sig"), bands, rowsPerBand)).as("bk"),
+        lit(isNew).as("is_new"), col("doc_id").cast("long").as("doc_id"))
+    val rows = bandRows(nb, isNew = true).unionByName(bandRows(cb, isNew = false))
+      .select(col("bk.band").as("band"), col("bk.key").as("key"), col("is_new"), col("doc_id"))
+    val pairs = rows
+      .repartition(col("band"), col("key"))
+      .sortWithinPartitions(col("band"), col("key"))
+      .mapPartitions(bucketPairs(maxBucket))(
+        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .toDF("new_id", "corpus_id")
       .distinct()
     confirmJaccard(pairs, nb, cb, "new_id", "corpus_id", threshold)
+  }
+
+  /** The (new, corpus) pairs of band rows `(band, key, is_new, doc_id)`
+    * that arrive grouped by (band, key): one bucket's member ids are
+    * buffered at a time (the task's memory bound), and its pairs stream
+    * out lazily. The corpus ids are indexed by sub once, so a bucket costs
+    * O(members + pairs emitted), never |news| × |olds| on a capped bucket.
+    * A NULL key is a bucket like any other (saltSplit counts it too); a
+    * NULL doc_id counts toward `n` but never pairs (its sub is NULL). */
+  private def bucketPairs(maxBucket: Int)(rows: Iterator[Row]): Iterator[(Long, Long)] = {
+    val in = rows.buffered
+    def sameBucket(a: Row, b: Row) = a.getInt(0) == b.getInt(0) &&
+      (if (a.isNullAt(1)) b.isNullAt(1) else !b.isNullAt(1) && a.getLong(1) == b.getLong(1))
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val first = in.head
+      val news, olds = Array.newBuilder[Long]
+      var n = 0L
+      while (in.hasNext && sameBucket(first, in.head)) {
+        val r = in.next()
+        n += 1
+        if (!r.isNullAt(3)) (if (r.getBoolean(2)) news else olds) += r.getLong(3)
+      }
+      val (a, b) = (news.result(), olds.result())
+      if (a.isEmpty || b.isEmpty) Iterator.empty
+      else {
+        val nsplit = if (n > maxBucket) (n + maxBucket - 1) / maxBucket else 1L
+        val bySub = b.groupBy(java.lang.Math.floorMod(_, nsplit))
+        a.iterator.flatMap(x =>
+          bySub.getOrElse(java.lang.Math.floorMod(x, nsplit), Array.emptyLongArray).iterator.map(x -> _))
+      }
+    }
   }
 
   /** MinHash+LSH near-duplicate pairs with exact-Jaccard confirmation.
@@ -282,7 +330,7 @@ object Dedup {
       .select(col(idCol).as("doc_id"),
         posexplode(shingleHashes(split(col(textCol), " "), n)).as(Seq("p", "g")))
       .repartition(nPart, col("g"))
-      .persist() // feeds both the global-dup agg and the join back
+      .transform(Shared.persist) // feeds both the global-dup agg and the join back
     val dupG = pos.groupBy(col("g")).agg(count(lit(1)).as("c"))
       .filter(col("c") > 1).select(col("g"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("p"))
@@ -348,7 +396,7 @@ object Dedup {
       .select(col(idCol).as("doc_id"),
         posexplode(shingleHashes(split(col(textCol), " "), n)).as(Seq("p", "g")))
       .repartition(nPart, col("g"))
-      .persist() // feeds the keeper agg and the join back
+      .transform(Shared.persist) // feeds the keeper agg and the join back
     val keepers = pos.groupBy(col("g"))
       .agg(count(lit(1)).as("c"), min(struct(col("doc_id"), col("p"))).as("kp"))
       .filter(col("c") > 1)

@@ -65,7 +65,7 @@ object Funnel {
             .groupBy(col(userCol))
             .agg(min(col("__tus")).as("t"), min(col("t0")).as("t0"))
         }
-      frames += frame.persist()
+      frames += Shared.persist(frame)
     }
     frames.toSeq
   }

@@ -45,7 +45,7 @@ object Similarity {
       probes: Int = 1): DataFrame = {
     val bucketed = candidates
       .withColumn("bucket", graft.queries.SimilarityQueries.srpBucket(col(embCol), nPlanes))
-      .persist()
+      .transform(Shared.persist)
     val q =
       if (probes <= 1)
         bucketed.filter(queryFilter)
@@ -89,7 +89,7 @@ object Similarity {
       .withColumn("bucket", graft.queries.SimilarityQueries.srpBucket(col(embCol), nPlanes))
       .withColumn("__scale", VectorPrep.int8Scale(col(embCol)))
       .withColumn("__v", VectorPrep.dequantized(col(embCol), col("__scale")))
-      .persist()  // the quantized bucketed index feeds both join sides
+      .transform(Shared.persist)  // the quantized bucketed index feeds both join sides
     val q =
       if (probes <= 1)
         bucketed.filter(queryFilter)

@@ -96,7 +96,7 @@ object Triangles {
             col("da").as("ddeg"))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"),
         col("e.ddeg").as("ddeg"))
-      .persist()
+      .transform(Shared.persist)
     // eager materialization (round 11): the two wedge legs and the closing
     // join read this cache from CONCURRENT stages — with a lazy persist each
     // stage races to build the same partitions, duplicating the build and

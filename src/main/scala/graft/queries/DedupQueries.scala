@@ -132,7 +132,7 @@ object DedupQueries {
           expr("transform(sequence(1, greatest(length(text) - 2, 0)), i -> substring(text, i, 3))"),
           g => stable_hash64(g)))).as("grams"))
         .withColumn("n_grams", size(col("grams")))
-        .persist()  // consumed by the band explode and both confirm joins (persist, not
+        .transform(graft.ops.Shared.persist)  // consumed by the band explode and both confirm joins (persist, not
         // localCheckpoint: measured faster for this WIDE array frame, unlike
         // the narrow iterative CC frames where checkpoint wins)
       val bands = grams.select(col("lang"), col("doc_id"),
@@ -141,7 +141,7 @@ object DedupQueries {
       // self-join (without it the minhash/band/salt computation runs twice
       // per call — grams alone being cached doesn't cover it)
       val salted = graft.ops.Dedup.saltSplit(bands, Seq("lang", "bk"), "doc_id", cap)
-        .persist()
+        .transform(graft.ops.Shared.persist)
       val pairs = salted.as("a")
         .join(salted.as("b"),
           col("a.lang") === col("b.lang") && col("a.bk") === col("b.bk") &&
@@ -165,7 +165,7 @@ object DedupQueries {
           (col("na") + col("nb") - col("n_inter")).cast("double"), 4))
         .filter(col("jaccard") >= 0.4)
         .select(col("lang"), col("id_a"), col("id_b"), col("jaccard"))
-        .persist()
+        .transform(graft.ops.Shared.persist)
   }
 
   private val dedupNgramJaccard = Q(
@@ -368,7 +368,9 @@ object DedupQueries {
       newDocs.agg(count(lit(1)).as("n_new_docs"))
         .crossJoin(pairs.agg(
           count(lit(1)).as("n_candidate_pairs"),
-          countDistinct(when(col("jaccard") >= 0.5, col("new_id"))).as("n_dup_new_docs"),
+          // one aggregation, one exchange: a distinct count would plan a
+          // second aggregation level and one more Spark job
+          size(collect_set(when(col("jaccard") >= 0.5, col("new_id")))).cast("long").as("n_dup_new_docs"),
           round(coalesce(max(col("jaccard")), lit(0.0)), 4).as("max_jaccard")))
     },
     Some(DedupOracles.incrementalSql))
@@ -646,7 +648,7 @@ object DedupQueries {
       val salted = graft.ops.Dedup.saltSplit(
           EmbeddingQueries.kmeansAssigned(spark, dir),
           Seq("cell"), "vec_id", 256)
-        .persist() // both sides of the in-cell self-join + member census
+        .transform(graft.ops.Shared.persist) // both sides of the in-cell self-join + member census
       val pairs = graft.ops.SemDeDup.cellPairs(
           salted, "vec_id", "embedding", "dist", "cell", SemTau)
         .persist() // pair census + removal derivation
@@ -815,7 +817,7 @@ object DedupQueries {
       val salted = graft.ops.Dedup.saltSplit(
           EmbeddingQueries.kmeansAssigned(spark, dir),
           Seq("cell"), "vec_id", 256)
-        .persist() // pair self-join + negative candidate join
+        .transform(graft.ops.Shared.persist) // pair self-join + negative candidate join
       val pairs = graft.ops.SemDeDup.cellPairs(
         salted, "vec_id", "embedding", "dist", "cell", SemTau)
       // both directions: every pair member is an anchor

@@ -45,7 +45,7 @@ object GraphQueries {
         struct(col("a").as("src"), col("b").as("dst")),
         struct(col("b").as("src"), col("a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
+      .transform(graft.ops.Shared.persist)
   }
 
   /** Full-degree frame `(src, d)` of [[partEdges]] — one aggregation
@@ -57,7 +57,7 @@ object GraphQueries {
     partEdges(spark, dir)
       .groupBy(col("src"))
       .agg(count(lit(1)).as("d"))
-      .persist()
+      .transform(graft.ops.Shared.persist)
 
   /** The symmetric customer↔supplier co-purchase adjacency (suppliers
     * offset by 1e6 into a disjoint id range) — shared the same way by
@@ -81,7 +81,7 @@ object GraphQueries {
         struct(col("c").as("src"), col("s").as("dst")),
         struct(col("s").as("src"), col("c").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
+      .transform(graft.ops.Shared.persist)
   }
 
   private val Iters = 8

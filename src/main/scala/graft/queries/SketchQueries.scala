@@ -29,7 +29,7 @@ object SketchQueries {
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("exact_parts"))
     val exOrders = li.select(col("l_returnflag"), col("l_orderkey")).distinct()
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("exact_orders"))
-    exParts.join(exOrders, Seq("l_returnflag")).persist()
+    exParts.join(exOrders, Seq("l_returnflag")).transform(graft.ops.Shared.persist)
   }
 
   /** Shared exact anchor of q_sketch_percentile and q_sketch_kll: exact
@@ -42,7 +42,7 @@ object SketchQueries {
     Tables.t(spark, dir, "lineitem")
       .groupBy(col("l_returnflag"))
       .agg(percentile(col("l_extendedprice"), array(lit(0.5), lit(0.99))).as("ex"))
-      .persist()
+      .transform(graft.ops.Shared.persist)
 
   /** A5: DISTINCTCOUNTHLL — HLL++ approximate distinct parts/orders.
     *

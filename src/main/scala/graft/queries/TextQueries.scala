@@ -704,7 +704,7 @@ object TextQueries {
       .filter(col("term").isin(qTerms: _*))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
-      .persist() // shared by the df_t aggregate and the scoring join
+      .transform(graft.ops.Shared.persist) // shared by the df_t aggregate and the scoring join
     val dfT = tf.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
     val idf = dfT.crossJoin(broadcast(totals))
       .select(col("term"),

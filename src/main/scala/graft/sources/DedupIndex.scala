@@ -28,7 +28,7 @@ object DedupIndex {
     * bit-identical — DedupIndexSpec asserts this parity. */
   def build(corpusDf: DataFrame, dir: String, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 64): Unit =
-    graft.ops.Dedup.minhashPrepPlan(corpusDf, idCol, textCol, shingleN, k)
+    graft.ops.Dedup.minhashPrepPlan(graft.ops.Par.fanOut(corpusDf), idCol, textCol, shingleN, k)
       .write.mode("overwrite").parquet(dir)
 
   /** Read the stored prep frame (no persist: at scale the corpus index is

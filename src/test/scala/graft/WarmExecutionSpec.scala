@@ -16,7 +16,9 @@ import org.apache.spark.sql.internal.SQLConf
   * follows a changed data version. A small global sort or unpartitioned
   * window runs in one partition (`plans.SmallSortRule`), without the
   * range-sampling and range-shuffle jobs, and a query over small
-  * one-partition input plans no shuffle at all (`plans.OnePartitionRule`). */
+  * one-partition input plans no shuffle at all (`plans.OnePartitionRule`).
+  * Incremental near-dup detection finds its candidates in one shuffle of
+  * band rows and persists nothing. */
 class WarmExecutionSpec extends GraftSuite {
 
   private def jobsOf[T](body: => T): (T, Int) = Bench.jobsOf(spark)(body)
@@ -34,6 +36,19 @@ class WarmExecutionSpec extends GraftSuite {
       assert(buildJobs === 0, "Spark jobs while the query was built")
       assert(second === first)
     }
+  }
+
+  test("a warm q_dedup_incremental runs at most 8 jobs and builds without a cache entry") {
+    // sf0.01: 50 batch docs against 450 corpus docs
+    val dir = sfDir.stripSuffix("sf0.001") + "sf0.01"
+    val q = SparkEntry.queries("q_dedup_incremental")
+    val first = q(spark, dir).collect().toSeq
+    spark.catalog.clearCache()
+    val df = q(spark, dir)
+    assert(spark.sharedState.cacheManager.isEmpty, "building the query persisted a frame")
+    val (rows, jobs) = jobsOf(df.collect().toSeq)
+    assert(jobs <= 8, s"$jobs jobs:\n${finalPlan(df)}")
+    assert(rows === first)
   }
 
   test("two Tables.t reads of one table still self-join") {
