@@ -206,8 +206,10 @@ object DedupQueries {
     "q_dedup_embedding",
     (spark, dir) => {
       val e = Tables.t(spark, dir, "embeddings")
+      // both sides of the bucket self-join; the same bucketed frame as
+      // Similarity.annTopK's at 8 planes
       val withBucket = e.withColumn("bucket", SimilarityQueries.srpBucket(col("embedding"), 8))
-        .persist()  // both sides of the bucket self-join
+        .transform(graft.ops.Shared.persist)
       val pairs = withBucket.as("a")
         .join(withBucket.as("b"),
           col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))

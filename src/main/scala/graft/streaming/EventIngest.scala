@@ -47,14 +47,27 @@ object EventIngest {
       .withColumn("dt", date_trunc("day", col("ts")).cast("date"))
 
   /** S1+S2: file-based JSON-lines replay source (local stand-in for the
-    * Kinesis connector — same decode path; `maxFilesPerTrigger` plays the
-    * per-shard fetch batching role). */
-  def readJsonLines(spark: SparkSession, sourceDir: String, maxFilesPerTrigger: Int = 10): DataFrame =
-    decode(
-      spark.readStream
-        .schema(rawSchema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .json(sourceDir))
+    * Kinesis connector — same decode path). Each micro-batch admits files up
+    * to [[admissionBytes]], one wave of read splits: a steady stream admits
+    * the few files that arrived since the last trigger, and a backlog drains
+    * in batches of one wave each rather than a fixed file count per trigger.
+    * `maxFilesPerTrigger` replaces the byte budget with a file cap (Spark
+    * refuses both at once); tests use it to force many small batches. */
+  def readJsonLines(spark: SparkSession, sourceDir: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val (key, limit) = maxFilesPerTrigger match {
+      case Some(n) => ("maxFilesPerTrigger", n.toLong)
+      case None => ("maxBytesPerTrigger", admissionBytes(spark))
+    }
+    decode(spark.readStream.schema(rawSchema).option(key, limit).json(sourceDir))
+  }
+
+  /** The file source's per-trigger byte budget: `spark.sql.files.maxPartitionBytes`
+    * × `defaultParallelism` (512 MB at local[4] with the 128 MB default), so
+    * one trigger reads at most one wave of splits. Read from the session when
+    * the stream is defined. */
+  def admissionBytes(spark: SparkSession): Long =
+    spark.sessionState.conf.filesMaxPartitionBytes * spark.sparkContext.defaultParallelism
 
   /** The record shape Spark's Kafka connector emits (`format("kafka")`):
     * opaque key/value plus topic/partition/offset/timestamp metadata. */

@@ -37,7 +37,7 @@ class StreamingCrashRecoverySpec extends GraftSuite {
         Seq(kdgEvent(i, i * 10, f"2024-05-01 ${10 + i / 60}%02d:${i % 60}%02d:00")))
     }
     val q = EventIngest.sealedSink(
-      EventIngest.readJsonLines(spark, src, maxFilesPerTrigger = 1),
+      EventIngest.readJsonLines(spark, src, maxFilesPerTrigger = Some(1)),
       sink, ckpt, Trigger.ProcessingTime("0 seconds")).start()
     // let a few batches commit, then pull the plug with work still queued
     val deadline = System.currentTimeMillis() + 60000
@@ -54,7 +54,7 @@ class StreamingCrashRecoverySpec extends GraftSuite {
 
     // restart from the SAME checkpoint: drains the remainder exactly once
     val q2 = EventIngest.sealedSink(
-      EventIngest.readJsonLines(spark, src, maxFilesPerTrigger = 1),
+      EventIngest.readJsonLines(spark, src, maxFilesPerTrigger = Some(1)),
       sink, ckpt, Trigger.AvailableNow()).start()
     q2.awaitTermination(120000)
     val after = spark.read.parquet(sink)
@@ -65,6 +65,50 @@ class StreamingCrashRecoverySpec extends GraftSuite {
     assert(perUser.count() === nEvents)
   }
 
+  test("abrupt stop inside a byte-admitted backlog: exactly-once after restart") {
+    val src = tempDir("crash-bytes-src")
+    val sink = tempDir("crash-bytes-sink")
+    val ckpt = tempDir("crash-bytes-ckpt")
+    // 24 files of 20 events; the lowered budget admits about three files a
+    // trigger, so the backlog needs about eight batches
+    val (nFiles, perFile) = (24, 20)
+    (0 until nFiles).foreach { f =>
+      writeFile(src, f"f$f%03d.json", (0 until perFile).map { e =>
+        val i = f * perFile + e
+        kdgEvent(i, i % 500, f"2024-05-0${1 + f % 2} ${e % 24}%02d:${f % 60}%02d:00")
+      })
+    }
+    val nEvents = nFiles * perFile
+    val fileBytes = Files.size(java.nio.file.Paths.get(src, "f000.json"))
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, 3 * fileBytes / spark.sparkContext.defaultParallelism)
+    try {
+      val budget = EventIngest.admissionBytes(spark)
+      assert(nFiles * fileBytes > 3 * budget, "the backlog must need at least three batches")
+      val q = EventIngest.sealedSink(EventIngest.readJsonLines(spark, src),
+        sink, ckpt, Trigger.ProcessingTime("0 seconds")).start()
+      // stop right after the first commit, with the rest of the backlog queued
+      val deadline = System.currentTimeMillis() + 60000
+      while (q.lastProgress == null && System.currentTimeMillis() < deadline) Thread.sleep(2)
+      q.stop()
+      val atCrash = spark.read.parquet(sink)
+      val committedAtCrash = atCrash.count()
+      assert(committedAtCrash > 0 && committedAtCrash < nEvents,
+        s"stop did not land inside the backlog ($committedAtCrash of $nEvents rows)")
+      assert(atCrash.groupBy("userID").count().filter(col("count") > 1).count() === 0,
+        "partial state must never show duplicates")
+
+      val q2 = EventIngest.sealedSink(EventIngest.readJsonLines(spark, src),
+        sink, ckpt, Trigger.AvailableNow()).start()
+      assert(q2.awaitTermination(120000), "restart did not finish")
+      val perUser = spark.read.parquet(sink).groupBy("userID").count()
+      assert(perUser.count() === nEvents, "an event was lost")
+      assert(perUser.filter(col("count") =!= 1).count() === 0,
+        "every event must appear exactly once")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("upsert state survives the restart: an older event cannot regress the stored row") {
     import spark.implicits._
     val src = tempDir("crash-upsert-src")
@@ -73,7 +117,7 @@ class StreamingCrashRecoverySpec extends GraftSuite {
     // it is also the production delivery shape (upsert log → store)
     def run(): Array[(String, Long, String, Boolean)] = {
       val buf = scala.collection.mutable.ArrayBuffer[(String, Long, String, Boolean)]()
-      val events = EventIngest.readJsonLines(spark, src, maxFilesPerTrigger = 10)
+      val events = EventIngest.readJsonLines(spark, src, maxFilesPerTrigger = Some(10))
       val q = EventIngest.upsertLatestWithTtl(events, "userID", "2 hours")
         .writeStream
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>

@@ -1,14 +1,23 @@
 #!/bin/bash
 # Run a graft main class outside sbt (so sbt stays free for tests).
 # Usage: tools/run_main.sh <MainClass> [args...]   (env vars pass through)
+# src/main runs from a fresh build keyed by its source hash
+# (perfbench/build.py's `ensure`, into .bench_build/<hash>/; the first run
+# after a source change compiles for ~30 s), never from sbt's long-lived
+# target/scala-2.13/classes, which once timed Bench at sf0.1 ~17% slower
+# than the same sources compiled fresh.
 # Needs the full Spark --add-opens set: sbt adds these silently; without
 # them Kryo dies on HeapByteBuffer when localCheckpoint blocks serialize.
 # Heap defaults to the sbt-forked driver shape (build.sbt: 48g) — override
 # with GRAFT_XMX; repo root is derived from this script's location.
 set -e
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
-# test-classes holds the trend drivers (graft.tools.*Trend, Plans)
-CP="$ROOT/target/scala-2.13/classes:$ROOT/target/scala-2.13/test-classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+CP="$(cd "$ROOT" && python3 -B -c 'import sys; from pathlib import Path
+sys.path.insert(0, "perfbench"); import build; print(build.ensure(Path.cwd()))')"
+MAIN="$1"; shift
+# test-classes (`sbt Test/compile`) holds the dev drivers graft.tools.*Trend
+# and Plans; nothing else runs from it
+case "$MAIN" in graft.tools.*) CP="$CP:$ROOT/target/scala-2.13/test-classes" ;; esac
 OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED
 --add-opens=java.base/java.lang.invoke=ALL-UNNAMED
 --add-opens=java.base/java.lang.reflect=ALL-UNNAMED
@@ -23,5 +32,4 @@ OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED
 --add-opens=java.base/sun.nio.cs=ALL-UNNAMED
 --add-opens=java.base/sun.security.action=ALL-UNNAMED
 --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
-MAIN="$1"; shift
 exec java -Xmx${GRAFT_XMX:-48g} $OPENS -Dderby.system.home=/tmp/derby -cp "$CP" "$MAIN" "$@"
