@@ -48,24 +48,23 @@ object EventIngest {
 
   /** S1+S2: file-based JSON-lines replay source (local stand-in for the
     * Kinesis connector — same decode path). Each micro-batch admits files up
-    * to [[admissionBytes]], one wave of read splits: a steady stream admits
-    * the few files that arrived since the last trigger, and a backlog drains
-    * in batches of one wave each rather than a fixed file count per trigger.
-    * `maxFilesPerTrigger` replaces the byte budget with a file cap (Spark
-    * refuses both at once); tests use it to force many small batches. */
-  def readJsonLines(spark: SparkSession, sourceDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val (key, limit) = maxFilesPerTrigger match {
-      case Some(n) => ("maxFilesPerTrigger", n.toLong)
-      case None => ("maxBytesPerTrigger", admissionBytes(spark))
-    }
-    decode(spark.readStream.schema(rawSchema).option(key, limit).json(sourceDir))
-  }
+    * to [[admissionBytes]] of file data: a steady stream admits the few files
+    * that arrived since the last trigger, and a backlog drains in batches of
+    * about that many bytes rather than a fixed file count per trigger. */
+  def readJsonLines(spark: SparkSession, sourceDir: String): DataFrame =
+    decode(
+      spark.readStream
+        .schema(rawSchema)
+        .option("maxBytesPerTrigger", admissionBytes(spark))
+        .json(sourceDir))
 
   /** The file source's per-trigger byte budget: `spark.sql.files.maxPartitionBytes`
-    * × `defaultParallelism` (512 MB at local[4] with the 128 MB default), so
-    * one trigger reads at most one wave of splits. Read from the session when
-    * the stream is defined. */
+    * × `defaultParallelism` (512 MB at local[4] with the 128 MB default), read
+    * from the session when the stream is defined. It counts raw file bytes: a
+    * trigger admits files while their sum stays within it, and always admits
+    * at least one file. The scan charges each file
+    * `spark.sql.files.openCostInBytes` when it packs splits, so a batch of
+    * small files reads in more splits than budget / maxPartitionBytes. */
   def admissionBytes(spark: SparkSession): Long =
     spark.sessionState.conf.filesMaxPartitionBytes * spark.sparkContext.defaultParallelism
 

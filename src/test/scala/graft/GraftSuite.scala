@@ -50,6 +50,16 @@ trait GraftSuite extends AnyFunSuite with BeforeAndAfterAll {
   /** Files the executed scan of `df` opened (its `numFiles` metric). */
   def scanFiles(df: DataFrame): Long = fileScan(df).metrics("numFiles").value
 
+  /** Run `body` with `spark.sql.files.maxPartitionBytes` set to `bytes` on
+    * this suite's session, restoring the prior value afterwards. */
+  def withMaxPartitionBytes[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   override def afterAll(): Unit =
     try super.afterAll()
     finally synchronized {

@@ -29,34 +29,39 @@ class StreamingCrashRecoverySpec extends GraftSuite {
     val src = tempDir("crash-src")
     val sink = tempDir("crash-sink")
     val ckpt = tempDir("crash-ckpt")
-    // 30 single-row files, one file per micro-batch: plenty of commit
-    // boundaries for the stop to land between — or inside — one
+    // 30 single-row files; a byte budget below one file admits one file per
+    // micro-batch: plenty of commit boundaries for the stop to land between
+    // — or inside — one
     val nEvents = 30
     (1 to nEvents).foreach { i =>
       writeFile(src, f"f$i%03d.json",
         Seq(kdgEvent(i, i * 10, f"2024-05-01 ${10 + i / 60}%02d:${i % 60}%02d:00")))
     }
-    val q = EventIngest.sealedSink(
-      EventIngest.readJsonLines(spark, src, maxFilesPerTrigger = Some(1)),
-      sink, ckpt, Trigger.ProcessingTime("0 seconds")).start()
-    // let a few batches commit, then pull the plug with work still queued
-    val deadline = System.currentTimeMillis() + 60000
-    while (Option(q.lastProgress).forall(_.batchId < 3) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(5)
-    q.stop() // interrupts the stream thread; an in-flight batch is abandoned
-    val committedAtCrash = spark.read.parquet(sink).count()
-    assert(committedAtCrash < nEvents,
-      s"stop landed after all work finished ($committedAtCrash rows) — no crash window")
-    // even mid-crash the visible store has no duplicates (sink-log atomicity)
-    val dupAtCrash = spark.read.parquet(sink)
-      .groupBy("userID").count().filter(col("count") > 1).count()
-    assert(dupAtCrash === 0, "partial state must never show duplicates")
+    val smallest = (1 to nEvents).map(i =>
+      Files.size(java.nio.file.Paths.get(src, f"f$i%03d.json"))).min
+    withMaxPartitionBytes((smallest - 1) / spark.sparkContext.defaultParallelism) {
+      assert(EventIngest.admissionBytes(spark) < smallest)
+      val q = EventIngest.sealedSink(EventIngest.readJsonLines(spark, src),
+        sink, ckpt, Trigger.ProcessingTime("0 seconds")).start()
+      // let a few batches commit, then pull the plug with work still queued
+      val deadline = System.currentTimeMillis() + 60000
+      while (Option(q.lastProgress).forall(_.batchId < 3) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(5)
+      q.stop() // interrupts the stream thread; an in-flight batch is abandoned
+      assert(q.recentProgress.forall(_.numInputRows <= 1), "a batch admitted more than one file")
+      val committedAtCrash = spark.read.parquet(sink).count()
+      assert(committedAtCrash < nEvents,
+        s"stop landed after all work finished ($committedAtCrash rows) — no crash window")
+      // even mid-crash the visible store has no duplicates (sink-log atomicity)
+      val dupAtCrash = spark.read.parquet(sink)
+        .groupBy("userID").count().filter(col("count") > 1).count()
+      assert(dupAtCrash === 0, "partial state must never show duplicates")
 
-    // restart from the SAME checkpoint: drains the remainder exactly once
-    val q2 = EventIngest.sealedSink(
-      EventIngest.readJsonLines(spark, src, maxFilesPerTrigger = Some(1)),
-      sink, ckpt, Trigger.AvailableNow()).start()
-    q2.awaitTermination(120000)
+      // restart from the SAME checkpoint: drains the remainder exactly once
+      val q2 = EventIngest.sealedSink(EventIngest.readJsonLines(spark, src),
+        sink, ckpt, Trigger.AvailableNow()).start()
+      q2.awaitTermination(120000)
+    }
     val after = spark.read.parquet(sink)
     assert(after.count() === nEvents, s"loss or dup after restart: ${after.count()}")
     val perUser = after.groupBy("userID").count()
@@ -80,10 +85,7 @@ class StreamingCrashRecoverySpec extends GraftSuite {
     }
     val nEvents = nFiles * perFile
     val fileBytes = Files.size(java.nio.file.Paths.get(src, "f000.json"))
-    val key = "spark.sql.files.maxPartitionBytes"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, 3 * fileBytes / spark.sparkContext.defaultParallelism)
-    try {
+    withMaxPartitionBytes(3 * fileBytes / spark.sparkContext.defaultParallelism) {
       val budget = EventIngest.admissionBytes(spark)
       assert(nFiles * fileBytes > 3 * budget, "the backlog must need at least three batches")
       val q = EventIngest.sealedSink(EventIngest.readJsonLines(spark, src),
@@ -106,7 +108,7 @@ class StreamingCrashRecoverySpec extends GraftSuite {
       assert(perUser.count() === nEvents, "an event was lost")
       assert(perUser.filter(col("count") =!= 1).count() === 0,
         "every event must appear exactly once")
-    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("upsert state survives the restart: an older event cannot regress the stored row") {
@@ -117,7 +119,7 @@ class StreamingCrashRecoverySpec extends GraftSuite {
     // it is also the production delivery shape (upsert log → store)
     def run(): Array[(String, Long, String, Boolean)] = {
       val buf = scala.collection.mutable.ArrayBuffer[(String, Long, String, Boolean)]()
-      val events = EventIngest.readJsonLines(spark, src, maxFilesPerTrigger = Some(10))
+      val events = EventIngest.readJsonLines(spark, src)
       val q = EventIngest.upsertLatestWithTtl(events, "userID", "2 hours")
         .writeStream
         .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
